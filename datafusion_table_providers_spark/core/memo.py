@@ -6,6 +6,20 @@ Lloyd's assignment, PQ codes). Each is memoized per
 ``(applicationId, normalized sf_dir)`` with the localCheckpoint inside the
 shared builder.
 
+The counts that data-dependent plan choices need are memoized the same
+way, and none of them runs a Spark job of its own (``llm/dedup.py``):
+
+- the corpus size (``_doc_count``) is summed from the parquet footers on
+  the driver (only a path the driver cannot list is counted by Spark).
+  The documents DataFrame is memoized with it and read with the schema
+  of the same footers, so one build reads the table once and runs no
+  schema-inference job for it;
+- the number of text groups (``_rep_count``) is a ``pyspark.sql.Observation``
+  on the group map, filled by the map's own eager localCheckpoint;
+- d02b's candidate-pair count is an Observation on its candidate
+  checkpoint. Its exact candidate-doc count runs as a job only when the
+  ``2 × pairs`` bound cannot settle the semi-join gates.
+
 Operational contract (know before reusing the pattern):
 - localCheckpoint blocks are NON-RECOVERABLE: after an executor loss the
   cached DataFrame is permanently broken for the rest of the session. A

@@ -739,9 +739,10 @@ def c15_runtime_filter_scan(spark, sf_dir):
     # A clause must exist, but the LADDER chooses the strategy: at bench
     # SFs the dim is a few hundred keys (in_list); past IN_LIST_MAX (~SF100
     # for this filter) the fallback is the min/max range — both honor the
-    # superset contract, so the row stays scale-portable. The small-SF
-    # in_list expectation lives in tests/test_dynamic_filter.py.
-    assert strategy in ("in_list", "range"), strategy
+    # superset contract, so the row stays scale-portable. A dim that
+    # matches no customer pushes FALSE ("empty"): the exact, empty answer.
+    # The small-SF in_list expectation lives in tests/test_dynamic_filter.py.
+    assert strategy in ("in_list", "range", "empty"), strategy
     joined = scan.join(F.broadcast(dim), scan.o_custkey == dim.c_custkey)
     return joined.groupBy(F.year("o_orderdate").alias("order_year")).agg(
         F.count("*").alias("n_orders"),

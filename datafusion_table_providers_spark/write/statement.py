@@ -85,7 +85,6 @@ def render_update(
     table: str,
     assignments,
     condition: Optional[str] = None,
-    returning: bool = False,
 ) -> str:
     """UPDATE from column→SQL-expression assignments (dml.rs:126-199).
     Column names quote per dialect; expressions pass verbatim."""
@@ -93,5 +92,4 @@ def render_update(
     q = d.quote_ident
     sets = ", ".join(f"{q(c)} = {expr}" for c, expr in assignments.items())
     where = f" WHERE {condition}" if condition else ""
-    ret = " RETURNING 1" if returning else ""
-    return f"UPDATE {q(table)} SET {sets}{where}{ret}"
+    return f"UPDATE {q(table)} SET {sets}{where}"

@@ -320,13 +320,10 @@ def update(
     condition: Optional[str] = None,
 ) -> int:
     """Remote UPDATE from column→SQL-expression assignments (UpdateExec
-    analog, dml.rs:126-199)."""
+    analog, dml.rs:126-199); returns the affected count. A plain UPDATE
+    reports it on every backend (DuckDB as its single result row), and
+    DuckDB rejects ``UPDATE … RETURNING`` on a table with a primary key."""
     name = getattr(backend.dialect, "name", "ansi")
-    if isinstance(backend, DuckDBBackend):
-        tbl = backend.query_arrow(
-            render_update(name, table, assignments, condition, returning=True)
-        )
-        return tbl.num_rows
     return backend.execute(render_update(name, table, assignments, condition))
 
 

@@ -29,3 +29,31 @@ def tmp_sqlite(tmp_path):
     from datafusion_table_providers_spark.sources.backends import SQLiteBackend
 
     return SQLiteBackend(str(tmp_path / "t.db"))
+
+
+@pytest.fixture()
+def dup_heavy_dir(spark, tmp_path):
+    """sf0.001 replicated 3x with id offsets (the sf1 synth construction)
+    PLUS duplicated degenerate texts: empty, single-token and two-token
+    texts have no 3-gram shingles, so their duplicate groups must emit NO
+    intra pairs; a one-shingle text must pair at jaccard exactly 1.0."""
+    from pyspark.sql import functions as F
+
+    src = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    reps = src.crossJoin(spark.range(3).withColumnRenamed("id", "k"))
+    extra = spark.createDataFrame(
+        [
+            (9_000_000 + i, t, "en", "s9", len(t))
+            for i, t in enumerate(
+                ["", "", "solo", "solo", "two words", "two words",
+                 "exactly three words", "exactly three words"]
+            )
+        ],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    out = str(tmp_path / "documents.parquet")
+    reps.select(
+        (F.col("doc_id") + F.col("k") * 10_000_000).alias("doc_id"),
+        *[c for c in src.columns if c != "doc_id"],
+    ).unionByName(extra.select(*src.columns)).write.parquet(out)
+    return str(tmp_path)

@@ -358,3 +358,43 @@ def test_reduced_view_preserves_partitioned_scan(spark, tmp_path):
     assert reduced.count() == 20
     # the reduced scan keeps the registration's 4-way partitioned read
     assert reduced.rdd.getNumPartitions() == 4
+
+
+def test_c15_empty_filter_matches_oracle(spark, tmp_path):
+    # No BUILDING customer of nation 5: the runtime filter is FALSE
+    # ("empty"), and c15 must return the oracle's (empty) answer.
+    import shutil
+
+    import duckdb as _duckdb
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from datafusion_table_providers_spark.sources.suite import (
+        C15_SQL,
+        c15_runtime_filter_scan,
+    )
+
+    for name in ("nation", "region", "orders", "supplier", "part"):
+        shutil.copy(f"{SF_DIR}/{name}.parquet", tmp_path / f"{name}.parquet")
+    cust = pq.read_table(f"{SF_DIR}/customer.parquet")
+    seg = cust.column_names.index("c_mktsegment")
+    cust = cust.set_column(
+        seg,
+        "c_mktsegment",
+        pc.if_else(
+            pc.equal(cust["c_mktsegment"], "BUILDING"),
+            "MACHINERY",
+            cust["c_mktsegment"],
+        ),
+    )
+    pq.write_table(cust, tmp_path / "customer.parquet")
+
+    got = c15_runtime_filter_scan(spark, str(tmp_path)).collect()
+    con = _duckdb.connect()
+    for name in ("orders", "customer"):
+        con.execute(
+            f"CREATE VIEW {name} AS SELECT * FROM "
+            f"read_parquet('{tmp_path / f'{name}.parquet'}')"
+        )
+    want = con.execute(C15_SQL).fetchall()
+    assert got == [] and want == []

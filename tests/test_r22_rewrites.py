@@ -173,25 +173,39 @@ def test_d35_members_emit_unique_pairs(spark):
         assert df.select("da", "db").distinct().count() == n
 
 
-@pytest.mark.parametrize("cap", [0, 10**9])
+@pytest.mark.parametrize("cap", [0, 10**9, pytest.param(None, id="exact_count")])
 def test_d02b_broadcast_cap_branches_agree(spark, cap, monkeypatch):
     """cap=0 forces the shuffle semi-join branch, cap=1e9 the broadcast
     branch; both must produce identical pair sets (the reduction is
-    result-transparent by construction)."""
-    monkeypatch.setattr(dedup, "SEMIJOIN_MAX_BROADCAST_ROWS", cap)
+    result-transparent by construction). exact_count shrinks
+    SEMIJOIN_MAX_FRACTION until the 2·|cand| bound can no longer settle
+    the gate, so the build counts its candidate reps exactly."""
     from datafusion_table_providers_spark.core.memo import clear_memo_caches
 
-    clear_memo_caches()
-    rows = sorted(
-        (r.da, r.db, r.jaccard)
-        for r in dedup.d02b_minhash_lsh_pairs(spark, SF).collect()
-    )
-    clear_memo_caches()
-    monkeypatch.setattr(dedup, "SEMIJOIN_MAX_BROADCAST_ROWS", 10**9 - cap)
-    rows2 = sorted(
-        (r.da, r.db, r.jaccard)
-        for r in dedup.d02b_minhash_lsh_pairs(spark, SF).collect()
-    )
+    def run():
+        clear_memo_caches()
+        return sorted(
+            (r.da, r.db, r.jaccard)
+            for r in dedup.d02b_minhash_lsh_pairs(spark, SF).collect()
+        )
+
+    if cap is None:
+        rows = run()
+        counts = []
+        df_cls = type(spark.range(1))
+        count = df_cls.count
+        monkeypatch.setattr(
+            df_cls, "count", lambda df: counts.append(1) or count(df)
+        )
+        # sf0.001 has 500 reps and 28 candidate pairs: 2·28 >= 0.1·500
+        monkeypatch.setattr(dedup, "SEMIJOIN_MAX_FRACTION", 0.1)
+        rows2 = run()
+        assert counts, "the exact candidate count did not run"
+    else:
+        monkeypatch.setattr(dedup, "SEMIJOIN_MAX_BROADCAST_ROWS", cap)
+        rows = run()
+        monkeypatch.setattr(dedup, "SEMIJOIN_MAX_BROADCAST_ROWS", 10**9 - cap)
+        rows2 = run()
     assert rows == rows2 and len(rows) > 0
 
 
@@ -283,32 +297,6 @@ def _naive_d04(spark, sf_dir):
             ).alias("jaccard"),
         )
     )
-
-
-@pytest.fixture()
-def dup_heavy_dir(spark, tmp_path):
-    """sf0.001 replicated 3x with id offsets (the sf1 synth construction)
-    PLUS duplicated degenerate texts: empty, single-token and two-token
-    texts have no 3-gram shingles, so their duplicate groups must emit NO
-    intra pairs; a one-shingle text must pair at jaccard exactly 1.0."""
-    src = spark.read.parquet(f"{SF}/documents.parquet")
-    reps = src.crossJoin(spark.range(3).withColumnRenamed("id", "k"))
-    extra = spark.createDataFrame(
-        [
-            (9_000_000 + i, t, "en", "s9", len(t))
-            for i, t in enumerate(
-                ["", "", "solo", "solo", "two words", "two words",
-                 "exactly three words", "exactly three words"]
-            )
-        ],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    out = str(tmp_path / "documents.parquet")
-    reps.select(
-        (F.col("doc_id") + F.col("k") * 10_000_000).alias("doc_id"),
-        *[c for c in src.columns if c != "doc_id"],
-    ).unionByName(extra.select(*src.columns)).write.parquet(out)
-    return str(tmp_path)
 
 
 def test_d02b_group_expand_matches_naive(spark):
@@ -473,3 +461,21 @@ def test_d26_group_expand_matches_naive_dup_heavy(spark, dup_heavy_dir):
     )
     assert got == want and len(got) > 0
     assert any(j == 1.0 for (_, _, j) in got)
+
+
+def test_d26_bucket_broadcast_cap_agrees(spark, monkeypatch):
+    """cap=0 turns every gated broadcast of d26 into a shuffle, the
+    representative bucket table of the band join included; the pairs must
+    not change."""
+    from datafusion_table_providers_spark.core.memo import clear_memo_caches
+
+    def run():
+        clear_memo_caches()
+        return sorted(
+            (r.train_id, r.eval_id, r.jaccard)
+            for r in dedup.d26_fuzzy_decontaminate(spark, SF).collect()
+        )
+
+    want = run()
+    monkeypatch.setattr(dedup, "SEMIJOIN_MAX_BROADCAST_ROWS", 0)
+    assert run() == want and len(want) > 0

@@ -170,3 +170,23 @@ def test_kmeans_partitions_all_vectors(spark):
     assert sorted((r.cid, r.n_members, r.min_vec) for r in rows) == sorted(
         (r.cid, r.n_members, r.min_vec) for r in again
     ), "clustering must be run-to-run deterministic"
+
+
+def test_pandas_knn_matches_sql_knn(spark):
+    """The vectorized numpy KNN must agree with the SQL-expression KNN on
+    neighbor sets (cosine ties aside)."""
+    from datafusion_table_providers_spark.llm.similarity import (
+        d05_knn_bruteforce,
+        pandas_knn_topk,
+    )
+
+    sql_top = {
+        (r["qid"], r["cid"])
+        for r in d05_knn_bruteforce(spark, SF).collect()
+    }
+    np_top = {
+        (r["qid"], r["cid"])
+        for r in pandas_knn_topk(spark, SF, n_queries=5, k=5).collect()
+    }
+    overlap = len(sql_top & np_top) / len(sql_top)
+    assert overlap >= 0.9  # allow boundary ties to differ

@@ -73,14 +73,18 @@ def test_overwrite_replaces_everything(spark, tmp_duckdb):
 
 def test_delete_update_counts(spark, tmp_duckdb):
     df = spark.createDataFrame([(i, f"v{i}") for i in range(10)], SCHEMA)
-    writer.insert_into(tmp_duckdb, "t", df)
-    assert writer.delete_from(tmp_duckdb, "t", '"id" >= 7') == 3
-    assert writer.update(tmp_duckdb, "t", {"v": "upper(v)"}, '"id" < 2') == 2
-    got = {
-        r["id"]: r["v"]
-        for r in tmp_duckdb.query_arrow('SELECT * FROM "t"').to_pylist()
-    }
-    assert got[0] == "V0" and got[1] == "V1" and 7 not in got and len(got) == 7
+    # a plain table and one with a primary key (DuckDB rejects
+    # UPDATE … RETURNING on the latter)
+    for table, pks in (("t", ()), ("t_pk", ["id"])):
+        writer.insert_into(tmp_duckdb, table, df, primary_keys=pks)
+        assert writer.delete_from(tmp_duckdb, table, '"id" >= 7') == 3
+        assert writer.update(tmp_duckdb, table, {"v": "upper(v)"}, '"id" < 2') == 2
+        assert writer.update(tmp_duckdb, table, {"v": "v"}, '"id" > 100') == 0
+        got = {
+            r["id"]: r["v"]
+            for r in tmp_duckdb.query_arrow(f'SELECT * FROM "{table}"').to_pylist()
+        }
+        assert got[0] == "V0" and got[1] == "V1" and 7 not in got and len(got) == 7
 
 
 def test_on_conflict_sql_shapes():
