@@ -3,22 +3,25 @@
 Reference analog: the server-backed SQL providers (crates/postgres/src/
 lib.rs:202-321, crates/mysql/src/lib.rs, crates/odbc/src/conn.rs:21-23) —
 a connection per scan task, generated ``SELECT <proj> FROM rel WHERE
-<filters>`` pushed to the server, Arrow batches back. The round-1 ODBC/ADBC
-path synthesized ``jdbc:odbc:`` / ``jdbc:adbc:`` URLs, which no modern JVM
-can load a driver for (the JDBC-ODBC bridge died with Java 8); this module
-replaces that with a real transport: any importable DB-API module — pyodbc,
-adbc_driver_manager.dbapi, psycopg, mysqlclient, or stdlib sqlite3 — opened
-*inside the executor task*, no JVM jar involved.
+<filters>`` pushed to the server, Arrow batches back. Any importable DB-API
+module — pyodbc, adbc_driver_manager.dbapi, psycopg, mysqlclient, or stdlib
+sqlite3 (``sqlite_reader_df`` scans through here) — is opened *inside the
+executor task*, no JVM jar involved.
 
-Batches are produced Arrow-native when the driver cursor supports it
-(ADBC ``fetch_arrow_table``, turbodbc ``fetchallarrow``), else by chunked
-``fetchmany`` → columnar conversion against the declared schema — the
+``DBAPIReader`` is a ``SqlScanReader`` (sources/sql_scan.py): the shared
+base owns the shared options, filter pushdown, range slices and the pushed
+SQL; this module supplies the ``dialect`` option, the connection and the
+batches. Batches are produced
+Arrow-native when the driver cursor supports it (ADBC
+``fetch_arrow_table``, turbodbc ``fetchallarrow``), else by chunked
+``fetchmany`` → ``rows_to_arrow`` against the declared schema — the
 ``rows_to_arrow`` analog (crates/postgres/src/arrow_sql_gen/mod.rs:248).
 
-Schema comes from (in order): an explicit ``schema_ddl`` option (the
-declared-DDL factory mode, crates/duckdb/src/lib.rs:419-560), an Arrow
-cursor schema, or ``cursor.description`` + a sampled row (introspection
-mode, dbconnection.rs:216-239).
+Schema comes from (in order): a declared schema set on the driver
+(``schema_ddl``, or SQLite's ``PRAGMA table_info``; the declared-DDL
+factory mode, crates/duckdb/src/lib.rs:419-560), an Arrow cursor schema, or
+``cursor.description`` + a sampled row (introspection mode,
+dbconnection.rs:216-239).
 """
 
 from __future__ import annotations
@@ -27,18 +30,24 @@ import datetime as dt
 import decimal
 import importlib
 import json
+from contextlib import closing
 from typing import Iterator, List, Optional
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.datasource import DataSource, DataSourceReader
 
-from datafusion_table_providers_spark.core.expr import (
-    DIALECTS,
-    build_select,
-    translate_filters,
+from datafusion_table_providers_spark.core.expr import DIALECTS, build_select
+from datafusion_table_providers_spark.sources.sql_scan import (
+    SqlScanReader,
+    broadcast_hint,
+    load_scan,
+    range_slices,
 )
+
+#: rows per ``fetchmany`` chunk, and so per Arrow batch, on the row path
+FETCH_ROWS = 16384
 
 
 def _connect(options):
@@ -90,84 +99,43 @@ def _infer_spark_type(sample) -> T.DataType:
     return T.StringType()
 
 
-class _Slice(InputPartition):
-    """A range-partition slice: one disjoint WHERE fragment per task."""
+def rows_to_arrow(rows: list, target: pa.Schema) -> pa.RecordBatch:
+    """One ``fetchmany`` chunk of row tuples → a RecordBatch of ``target``.
+    Each column is built from the driver's Python values untyped and then
+    cast: a driver's value type need not be the declared one (SQLite hands
+    back 0/1 for a BOOLEAN column), and a typed ``pa.array`` rejects it."""
+    return pa.record_batch(
+        [pa.array(col).cast(f.type) for col, f in zip(zip(*rows), target)],
+        schema=target,
+    )
 
-    def __init__(self, idx: int, clause: Optional[str]):
-        super().__init__(idx)
-        self.clause = clause
 
-
-class DBAPIReader(DataSourceReader):
+class DBAPIReader(SqlScanReader):
     def __init__(self, schema, options):
-        self.spark_schema = schema
-        self.options = options
-        self.relation = options["relation"]
+        super().__init__(schema, options)
+        # conservative ANSI by default: only filters whose rendering is
+        # portable across servers are pushed
         self.dialect = DIALECTS[options.get("dialect", "odbc")]
-        self.where: List[str] = []
-        # runtime semi-join reduction fragments (sources/dynamic_filter.py)
-        self.where.extend(json.loads(options.get("extra_where", "[]")))
-        self.columns = json.loads(options.get("columns", "null"))
-        self.batch_size = int(options.get("batch_size", "16384"))
-        self._partition_clauses = json.loads(
-            options.get("partition_clauses", "[]")
-        )
 
-    def pushFilters(self, filters):
-        # conservative ANSI dialect by default: only filters whose rendering
-        # is portable are pushed Exact; the rest stay Spark-side
-        clauses, unsupported = translate_filters(filters, self.dialect)
-        self.where.extend(clauses)
-        return iter(unsupported)
+    def connect(self):
+        return closing(_connect(self.options))
 
-    def partitions(self):
-        if self._partition_clauses:
-            return [
-                _Slice(i, c) for i, c in enumerate(self._partition_clauses)
+    def fetch_batches(self, con, sql: str) -> Iterator[pa.RecordBatch]:
+        cur = con.cursor()
+        cur.execute(sql)
+        target = pa.schema(
+            [
+                pa.field(f.name, _spark_to_arrow(f.dataType), f.nullable)
+                for f in self.spark_schema.fields
             ]
-        return [_Slice(0, None)]
-
-    def scan_sql(self, partition=None) -> str:
-        where = list(self.where)
-        if partition is not None and getattr(partition, "clause", None):
-            where.append(partition.clause)
-        return build_select(
-            self.dialect, self.relation, columns=self.columns, where=where
         )
-
-    def read(self, partition) -> Iterator[pa.RecordBatch]:
-        con = _connect(self.options)
-        try:
-            cur = con.cursor()
-            cur.execute(self.scan_sql(partition))
-            target = pa.schema(
-                [
-                    pa.field(f.name, _spark_to_arrow(f.dataType), f.nullable)
-                    for f in self.spark_schema.fields
-                ]
-            )
-            if hasattr(cur, "fetch_arrow_table"):  # ADBC
-                for batch in cur.fetch_arrow_table().cast(target).to_batches():
-                    yield batch
+        # Arrow-native cursors: ADBC fetch_arrow_table, turbodbc fetchallarrow
+        for arrow_fetch in ("fetch_arrow_table", "fetchallarrow"):
+            if hasattr(cur, arrow_fetch):
+                yield from getattr(cur, arrow_fetch)().cast(target).to_batches()
                 return
-            if hasattr(cur, "fetchallarrow"):  # turbodbc
-                for batch in cur.fetchallarrow().cast(target).to_batches():
-                    yield batch
-                return
-            while True:
-                rows = cur.fetchmany(self.batch_size)
-                if not rows:
-                    break
-                cols = list(zip(*rows))
-                yield pa.record_batch(
-                    [
-                        pa.array(list(col), type=f.type)
-                        for col, f in zip(cols, target)
-                    ],
-                    schema=target,
-                )
-        finally:
-            con.close()
+        while rows := cur.fetchmany(FETCH_ROWS):
+            yield rows_to_arrow(rows, target)
 
 
 class DBAPIDataSource(DataSource):
@@ -180,8 +148,10 @@ class DBAPIDataSource(DataSource):
     - ``dialect``: SQL dialect for generated statements (default "odbc" =
       conservative ANSI)
     - ``columns``: JSON list → pruned projection (A3)
-    - ``schema_json``: optional StructType JSON (declared schema) —
-      skips introspection; ``dbapi_reader_df`` accepts DDL and encodes it
+
+    A declared schema goes through ``DataFrameReader.schema`` on the driver
+    (``dbapi_reader_df(schema_ddl=…)``, ``sqlite_reader_df``); only an
+    undeclared scan reaches ``schema()`` and introspects.
     """
 
     @classmethod
@@ -189,21 +159,10 @@ class DBAPIDataSource(DataSource):
         return "dbapi_engine"
 
     def schema(self):
-        # declared schema travels as StructType JSON: this method runs in a
-        # session-less planning worker where DDL parsing (a JVM call) would
-        # fail — dbapi_reader_df parses DDL driver-side and re-encodes
-        schema_json = self.options.get("schema_json")
         cols = json.loads(self.options.get("columns", "null"))
-        if schema_json:
-            struct = T.StructType.fromJson(json.loads(schema_json))
-            if cols:
-                by_name = {f.name: f for f in struct.fields}
-                return T.StructType([by_name[c] for c in cols])
-            return struct
         dialect = DIALECTS[self.options.get("dialect", "odbc")]
         proj = ", ".join(dialect.quote_ident(c) for c in cols) if cols else "*"
-        con = _connect(self.options)
-        try:
+        with closing(_connect(self.options)) as con:
             cur = con.cursor()
             cur.execute(
                 f"SELECT * FROM (SELECT {proj} FROM {self.options['relation']}) s "
@@ -232,20 +191,9 @@ class DBAPIDataSource(DataSource):
                 )
                 fields.append(T.StructField(name, _infer_spark_type(sample), True))
             return T.StructType(fields)
-        finally:
-            con.close()
 
     def reader(self, schema) -> DataSourceReader:
         return DBAPIReader(schema, self.options)
-
-
-_REGISTERED = set()
-
-
-def register(spark: SparkSession) -> None:
-    if id(spark) not in _REGISTERED:
-        spark.dataSource.register(DBAPIDataSource)
-        _REGISTERED.add(id(spark))
 
 
 def postgres_declared_schema(
@@ -312,81 +260,52 @@ def dbapi_reader_df(
     auto_broadcast: bool = False,
     extra_where: Optional[List[str]] = None,
 ) -> DataFrame:
-    """When ``partition_column`` (numeric) is set with ``num_partitions>1``,
-    MIN/MAX bounds are introspected once driver-side over the same DB-API
-    connection and the scan splits into disjoint range slices, each executed
-    by its own executor task with its own server connection — the JDBC-style
-    parallel read, same discipline as ``duckdb_reader_df``.
+    """When ``partition_column`` is set with ``num_partitions>1``, MIN/MAX
+    bounds are introspected once driver-side over a DB-API connection and
+    the scan splits into disjoint range slices, each executed by its own
+    executor task with its own server connection — the JDBC-style parallel
+    read, same discipline as ``duckdb_reader_df``.
 
-    ``auto_broadcast=True``: run one driver-side COUNT(*) over the same
-    DB-API connection and attach a broadcast join hint when the relation
-    is small (A15 stats → join planning; Python-DS scans otherwise always
+    ``schema_ddl`` declares the schema (parsed here on the driver) and
+    skips introspection; ``columns`` then picks from it, and a name it
+    lacks raises ``ValueError``.
+
+    ``auto_broadcast=True``: run one driver-side COUNT(*) over a DB-API
+    connection and attach a broadcast join hint when the relation is small
+    (A15 stats → join planning; Python-DS scans otherwise always
     shuffle-join — same contract as ``duckdb_reader_df``)."""
-    register(spark)
-    r = (
-        spark.read.format("dbapi_engine")
-        .option("module", module)
-        .option("relation", relation)
-        .option("dialect", dialect)
-        .option("connect_args", json.dumps(connect_args or []))
-        .option("connect_kwargs", json.dumps(connect_kwargs or {}))
-    )
+    opts = {
+        "module": module,
+        "relation": relation,
+        "dialect": dialect,
+        "connect_args": json.dumps(connect_args or []),
+        "connect_kwargs": json.dumps(connect_kwargs or {}),
+    }
     if columns:
-        r = r.option("columns", json.dumps(list(columns)))
+        opts["columns"] = json.dumps(list(columns))
     if extra_where:
-        r = r.option("extra_where", json.dumps(list(extra_where)))
-    if schema_ddl:
-        struct = T._parse_datatype_string(schema_ddl)  # driver-side: session up
-        r = r.option("schema_json", json.dumps(struct.jsonValue()))
-    if partition_column and num_partitions > 1:
-        d = DIALECTS[dialect]
-        q = d.quote_ident(partition_column)
-        con = _connect(
-            {
-                "module": module,
-                "connect_args": json.dumps(connect_args or []),
-                "connect_kwargs": json.dumps(connect_kwargs or {}),
-            }
-        )
-        try:
-            cur = con.cursor()
-            cur.execute(f"SELECT MIN({q}), MAX({q}) FROM {relation}")
-            lo, hi = cur.fetchone()
-        finally:
-            con.close()
-        clauses = []
-        if lo is not None and hi is not None and hi > lo:
-            step = (hi - lo) / num_partitions
-            edges = [lo + step * i for i in range(1, num_partitions)]
-            prev = None
-            for e in edges + [None]:
-                c = []
-                if prev is not None:
-                    c.append(f"{q} >= {prev}")
-                if e is not None:
-                    c.append(f"{q} < {e}")
-                clauses.append(" AND ".join(c) if c else "TRUE")
-                prev = e
-        if clauses:
-            r = r.option("partition_clauses", json.dumps(clauses))
-    hint_broadcast = False
-    if auto_broadcast:
-        from datafusion_table_providers_spark.sources.duckdb_source import (
-            AUTO_BROADCAST_ROWS,
-        )
+        opts["extra_where"] = json.dumps(list(extra_where))
+    schema = None
+    if schema_ddl:  # parsed here: the planning worker has no session
+        schema = T._parse_datatype_string(schema_ddl)
+        if columns:
+            by_name = {f.name: f for f in schema.fields}
+            missing = [c for c in columns if c not in by_name]
+            if missing:
+                raise ValueError(f"unknown columns {missing} in {relation}")
+            schema = T.StructType([by_name[c] for c in columns])
 
-        con = _connect(
-            {
-                "module": module,
-                "connect_args": json.dumps(connect_args or []),
-                "connect_kwargs": json.dumps(connect_kwargs or {}),
-            }
-        )
-        try:
+    def fetch_one(sql):
+        with closing(_connect(opts)) as con:
             cur = con.cursor()
-            cur.execute(f"SELECT COUNT(*) FROM {relation}")
-            hint_broadcast = int(cur.fetchone()[0]) <= AUTO_BROADCAST_ROWS
-        finally:
-            con.close()
-    df = r.load()
-    return df.hint("broadcast") if hint_broadcast else df
+            cur.execute(sql)
+            return cur.fetchone()
+
+    if partition_column and num_partitions > 1:
+        clauses = range_slices(
+            fetch_one, DIALECTS[dialect], relation, partition_column, num_partitions
+        )
+        if clauses:
+            opts["partition_clauses"] = json.dumps(clauses)
+    broadcast = auto_broadcast and broadcast_hint(fetch_one, relation)
+    return load_scan(spark, DBAPIDataSource, opts, schema, broadcast)

@@ -15,36 +15,40 @@ mod.rs:70-228). Parity pieces:
 - every batch is cast to the declared Arrow schema before it is handed to
   Spark — `enforce_schema` parity (crates/flightsql/src/exec.rs:226-265).
 
+``DuckDBReader`` is a ``SqlScanReader`` (sources/sql_scan.py), which owns
+the shared options, filter pushdown, partitions and the pushed SQL for
+every SQL connector; this module supplies the DuckDB dialect, the
+``order_by``/``limit`` pushdown options, the cached per-worker connection
+and the cast Arrow batches.
+
 Beyond-reference (Spark-first): optional range partitioning
 (``partition_column``/``num_partitions``/bounds) turns the single-partition
 reference scan into N parallel executor-side scans, each a disjoint
-``WHERE pc >= lo AND pc < hi`` slice — the strategy that survives a 100×
-scale-up, since each executor opens its own read-only connection and streams
-Arrow batches without driver involvement.
+``WHERE pc >= lo AND pc < hi`` slice (``sql_scan.range_slices``) — the
+strategy that survives a 100× scale-up, since each executor opens its own
+read-only connection and streams Arrow batches without driver involvement.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from contextlib import closing, nullcontext
 from typing import Iterator, List, Optional
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.datasource import DataSource, DataSourceReader
 
-from datafusion_table_providers_spark.core.expr import (
-    DIALECTS,
-    build_select,
-    translate_filters,
-)
+from datafusion_table_providers_spark.core.expr import DIALECTS
 from datafusion_table_providers_spark.core.types import arrow_to_spark_schema
-
-
-class RangePartition(InputPartition):
-    def __init__(self, index: int, clause: Optional[str]):
-        self.index = index
-        self.clause = clause
+from datafusion_table_providers_spark.sources.sql_scan import (
+    SqlScanReader,
+    broadcast_hint,
+    load_scan,
+    range_slices,
+    row_count,
+)
 
 
 #: Per-executor-process connection cache for :memory: parquet-view configs.
@@ -126,79 +130,38 @@ def _worker_connect(opts):
     return con, False
 
 
-class DuckDBReader(DataSourceReader):
+def _connection(opts):
+    """``_worker_connect`` as a context manager that closes the connection
+    on exit unless the worker cache holds it."""
+    con, cached = _worker_connect(opts)
+    return nullcontext(con) if cached else closing(con)
+
+
+class DuckDBReader(SqlScanReader):
+    dialect = DIALECTS["duckdb"]
+
     def __init__(self, schema, options):
-        self.spark_schema = schema
-        self.options = options
-        self.relation = options.get("relation")
-        self.dialect = DIALECTS["duckdb"]
-        self.where: List[str] = []
-        # caller-supplied SQL fragments ANDed into every partition's WHERE —
-        # the runtime semi-join reduction path (sources/dynamic_filter.py)
-        # injects its IN-list / range clause here
-        self.where.extend(json.loads(options.get("extra_where", "[]")))
-        json.loads(options.get("parquet_tables", "{}"))  # validate early
-        self._partition_clauses = json.loads(options.get("partition_clauses", "[]"))
-        # Projection pushdown (reference mod.rs:258-276): the Python DS API
-        # has no pruning hook, so required columns are threaded through the
-        # ``columns`` option (duckdb_reader_df / Engine.register_backend_table)
-        # and the generated SELECT names exactly those — never ``*``.
-        self.columns = json.loads(options.get("columns", "null"))
+        super().__init__(schema, options)
         # Sort/limit pushdown (reference mod.rs:505-607): caller-directed,
         # same explicit-option contract as columns. Inexact semantics — the
         # limit bounds each PARTITION's fetch, and Spark's own TopK/limit
         # above the scan remains the global truth (the reference keeps the
         # local SortExec for the same reason, mod.rs:516-585).
-        self.order_by = json.loads(options.get("order_by", "null"))
-        self.limit = options.get("limit")
+        self.order_by = json.loads(options.get("order_by", "null")) or ()
+        limit = options.get("limit")
+        self.limit = int(limit) if limit is not None else None
 
-    def pushFilters(self, filters):
-        """Exact/unsupported split (reference mod.rs:231-247): clauses we
-        translate are evaluated remotely and dropped from Spark's plan."""
-        clauses, unsupported = translate_filters(filters, self.dialect)
-        self.where.extend(clauses)
-        return iter(unsupported)
+    def connect(self):
+        return _connection(self.options)
 
-    def partitions(self):
-        if self._partition_clauses:
-            return [
-                RangePartition(i, c) for i, c in enumerate(self._partition_clauses)
-            ]
-        return [RangePartition(0, None)]
-
-    def scan_sql(self, partition=None) -> str:
-        """The exact SQL one partition sends to the engine (test surface)."""
-        where = list(self.where)
-        if partition is not None and getattr(partition, "clause", None):
-            where.append(partition.clause)
-        return build_select(
-            self.dialect,
-            self.relation,
-            columns=self.columns,
-            where=where,
-            order_by=self.order_by or (),
-            limit=int(self.limit) if self.limit is not None else None,
-        )
-
-    def read(self, partition) -> Iterator[pa.RecordBatch]:
-        con, cached = _worker_connect(self.options)
-        try:
-            sql = self.scan_sql(partition)
-            reader = con.execute(sql).fetch_record_batch(65536)
-            target = None
-            while True:
-                try:
-                    batch = reader.read_next_batch()
-                except StopIteration:
-                    break
-                if target is None:
-                    target = _target_schema(batch.schema)
-                if batch.schema != target:
-                    batch = batch.cast(target)  # enforce_schema parity
-                yield batch
-        finally:
-            if not cached:
-                con.close()
+    def fetch_batches(self, con, sql: str) -> Iterator[pa.RecordBatch]:
+        target = None
+        for batch in con.execute(sql).fetch_record_batch(65536):
+            if target is None:
+                target = _target_schema(batch.schema)
+            if batch.schema != target:
+                batch = batch.cast(target)  # enforce_schema parity
+            yield batch
 
 
 def _target_schema(schema: pa.Schema) -> pa.Schema:
@@ -254,28 +217,15 @@ class DuckDBDataSource(DataSource):
         return "duckdb_engine"
 
     def schema(self):
-        con, cached = _worker_connect(self.options)
-        try:
+        with _connection(self.options) as con:
             return _probe_spark_schema(
                 lambda sql: con.execute(sql).fetch_arrow_table().schema,
                 self.options.get("relation"),
                 json.loads(self.options.get("columns", "null")),
             )
-        finally:
-            if not cached:
-                con.close()
 
     def reader(self, schema) -> DataSourceReader:
         return DuckDBReader(schema, self.options)
-
-
-_REGISTERED = set()
-
-
-def register(spark: SparkSession) -> None:
-    if id(spark) not in _REGISTERED:
-        spark.dataSource.register(DuckDBDataSource)
-        _REGISTERED.add(id(spark))
 
 
 def table_row_count(backend, relation: str) -> int:
@@ -283,22 +233,17 @@ def table_row_count(backend, relation: str) -> int:
     crates/flightsql/src/lib.rs:343-349 reports these to the optimizer).
     The Python DS API has no stats hook, so the count feeds OUR planning —
     auto-sizing partitioned scans (``num_partitions=None`` below)."""
-    tbl = backend.query_arrow(f"SELECT COUNT(*) AS n FROM {relation}")
-    return int(tbl[0][0].as_py())
+    return row_count(lambda sql: _first_row(backend, sql), relation)
+
+
+def _first_row(backend, sql: str) -> list:
+    return list(backend.query_arrow(sql).to_pylist()[0].values())
 
 
 #: target rows per partition slice when auto-sizing a partitioned scan —
 #: small enough that a slice's Arrow transfer fits comfortably in one task,
 #: large enough that per-task connection setup amortizes
 AUTO_PARTITION_ROWS = 1_000_000
-
-#: below this row-count statistic an ``auto_broadcast`` scan attaches a
-#: broadcast join hint. Python DataSource scans report only the session's
-#: default sizeInBytes to Catalyst (no stats hook — A15), so without the
-#: hint Spark NEVER auto-broadcasts a connector table and every
-#: connector-dim join pays a full shuffle. 500k rows of a typical dim is
-#: well under the ~8 GB broadcast-table ceiling.
-AUTO_BROADCAST_ROWS = 500_000
 
 
 def duckdb_reader_df(
@@ -338,7 +283,6 @@ def duckdb_reader_df(
     partition the limit bounds each slice, so keep Spark's own
     ``.orderBy().limit()`` above the scan as the global truth — exactly the
     reference's kept-local-TopK discipline."""
-    register(spark)
     opts = {
         "path": backend.path,
         "relation": relation,
@@ -354,11 +298,16 @@ def duckdb_reader_df(
         opts["limit"] = str(int(limit))
     if extra_where:
         opts["extra_where"] = json.dumps(list(extra_where))
-    if partition_column and num_partitions is None:
-        rows = table_row_count(backend, relation)
-        num_partitions = max(1, min(64, rows // AUTO_PARTITION_ROWS + 1))
+
+    def fetch_one(sql):
+        row = _first_row(backend, sql)
         if backend.path != ":memory:":
-            backend.close()  # release the RW lock the count introspection took
+            backend.close()  # release the RW lock before executors open read-only
+        return row
+
+    if partition_column and num_partitions is None:
+        rows = row_count(fetch_one, relation)
+        num_partitions = max(1, min(64, rows // AUTO_PARTITION_ROWS + 1))
     if (
         backend.path == ":memory:"
         and not backend.parquet_tables
@@ -374,33 +323,13 @@ def duckdb_reader_df(
             "Engine.sql federation (driver-side Arrow stream)"
         )
     if partition_column and num_partitions > 1:
-        q = backend.dialect.quote_ident(partition_column)
-        bounds = backend.query_arrow(
-            f"SELECT MIN({q}) AS lo, MAX({q}) AS hi FROM {relation}"
-        ).to_pylist()[0]
-        if backend.path != ":memory:":
-            backend.close()  # release RW lock before executors open read-only
-        lo, hi = bounds["lo"], bounds["hi"]
-        clauses = []
-        if lo is not None and hi is not None and hi > lo:
-            step = (hi - lo) / num_partitions
-            edges = [lo + step * i for i in range(1, num_partitions)]
-            prev = None
-            for e in edges + [None]:
-                c = []
-                if prev is not None:
-                    c.append(f"{q} >= {prev}")
-                if e is not None:
-                    c.append(f"{q} < {e}")
-                clauses.append(" AND ".join(c) if c else "TRUE")
-                prev = e
-        opts["partition_clauses"] = json.dumps(clauses)
-    hint_broadcast = False
-    if auto_broadcast:
-        hint_broadcast = table_row_count(backend, relation) <= AUTO_BROADCAST_ROWS
-        if backend.path != ":memory:":
-            backend.close()  # release the RW lock the count took
-    reader = spark.read.format("duckdb_engine").options(**opts)
+        clauses = range_slices(
+            fetch_one, backend.dialect, relation, partition_column, num_partitions
+        )
+        if clauses:
+            opts["partition_clauses"] = json.dumps(clauses)
+    broadcast = auto_broadcast and broadcast_hint(fetch_one, relation)
+    schema = None
     if backend.path == ":memory:":
         # Resolve the schema with ONE in-process LIMIT-0 probe instead of
         # letting Spark spawn a Python plan worker to call
@@ -408,10 +337,7 @@ def duckdb_reader_df(
         # build (measured sf0.1). Only for :memory: parquet-view configs:
         # probing a FILE database here would take the RW lock driver-side;
         # those keep the plan-worker path, which connects read-only.
-        reader = reader.schema(
-            _probe_spark_schema(
-                lambda sql: backend.query_arrow(sql).schema, relation, columns
-            )
+        schema = _probe_spark_schema(
+            lambda sql: backend.query_arrow(sql).schema, relation, columns
         )
-    df = reader.load()
-    return df.hint("broadcast") if hint_broadcast else df
+    return load_scan(spark, DuckDBDataSource, opts, schema, broadcast)

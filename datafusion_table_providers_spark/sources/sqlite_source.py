@@ -1,160 +1,65 @@
-"""SQLite connector on the PySpark Python Data Source API.
+"""SQLite connector: the stdlib ``sqlite3`` DB-API driver behind the DB-API
+reader.
 
 Reference analog: crates/sqlite — a sync driver bridged to the async engine
-(db_connection_pool/runtime.rs); in Python the stdlib ``sqlite3`` driver runs
-directly inside the executor task. Row results are converted to Arrow
-columnar batches per-chunk — the ``rows_to_arrow`` analog
-(crates/sqlite/src/arrow_sql_gen.rs).
+(db_connection_pool/runtime.rs). ``sqlite3`` is a DB-API 2.0 driver, so a
+SQLite scan is a ``dbapi_engine`` scan with module ``sqlite3`` and dialect
+``sqlite``: the driver runs inside the executor task and row chunks become
+Arrow batches through the DB-API reader's one rows→Arrow converter (the
+analog of crates/sqlite/src/arrow_sql_gen.rs).
 
-Schema comes from ``PRAGMA table_info`` type affinities (declared-DDL mode,
-reference crates/sqlite/src/lib.rs:260-417); filters are pushed as SQL via
-the shared unparser with the same Exact/unsupported split.
+This module is driver-side only. It turns the ``PRAGMA table_info`` type
+affinities into the scan's declared schema DDL (declared-DDL mode,
+reference crates/sqlite/src/lib.rs:260-417) and calls ``dbapi_reader_df``;
+filters are pushed as SQL via the shared unparser with the same
+Exact/unsupported split.
 """
 
 from __future__ import annotations
 
 import sqlite3
-from typing import Iterator, List
+from contextlib import closing
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from datafusion_table_providers_spark.core.expr import (
-    DIALECTS,
-    build_select,
-    translate_filters,
-)
+from datafusion_table_providers_spark.sources.dbapi_source import dbapi_reader_df
 
 _AFFINITY = {
-    "INT": T.LongType(),
-    "INTEGER": T.LongType(),
-    "BIGINT": T.LongType(),
-    "REAL": T.DoubleType(),
-    "FLOAT": T.DoubleType(),
-    "DOUBLE": T.DoubleType(),
-    "TEXT": T.StringType(),
-    "VARCHAR": T.StringType(),
-    "BLOB": T.BinaryType(),
-    "BOOLEAN": T.BooleanType(),
+    "INT": "BIGINT",
+    "INTEGER": "BIGINT",
+    "BIGINT": "BIGINT",
+    "REAL": "DOUBLE",
+    "FLOAT": "DOUBLE",
+    "DOUBLE": "DOUBLE",
+    "TEXT": "STRING",
+    "VARCHAR": "STRING",
+    "BLOB": "BINARY",
+    "BOOLEAN": "BOOLEAN",
 }
 
 
-def _decl_to_spark(decl: str) -> T.DataType:
+def _decl_to_spark(decl: str) -> str:
     decl = (decl or "").upper()
     for key, t in _AFFINITY.items():
         if key in decl:
             return t
-    return T.StringType()  # SQLite's dynamic typing fallback
+    return "STRING"  # SQLite's dynamic typing fallback
 
 
-def _spark_to_arrow(dt: T.DataType) -> pa.DataType:
-    if isinstance(dt, T.LongType):
-        return pa.int64()
-    if isinstance(dt, T.DoubleType):
-        return pa.float64()
-    if isinstance(dt, T.BinaryType):
-        return pa.binary()
-    if isinstance(dt, T.BooleanType):
-        return pa.bool_()
-    return pa.string()
-
-
-class SQLiteReader(DataSourceReader):
-    def __init__(self, schema, options):
-        self.spark_schema = schema
-        self.options = options
-        self.relation = options.get("relation")
-        self.dialect = DIALECTS["sqlite"]
-        self.where: List[str] = []
-        import json as _json
-
-        # runtime semi-join reduction fragments (sources/dynamic_filter.py)
-        self.where.extend(_json.loads(options.get("extra_where", "[]")))
-        # projection pushdown via explicit option (same contract as the
-        # DuckDB reader — the Python DS API has no pruning hook)
-        self.columns = _json.loads(options.get("columns", "null"))
-
-    def pushFilters(self, filters):
-        clauses, unsupported = translate_filters(filters, self.dialect)
-        self.where.extend(clauses)
-        return iter(unsupported)
-
-    def partitions(self):
-        return [InputPartition(0)]
-
-    def read(self, partition) -> Iterator[pa.RecordBatch]:
-        con = sqlite3.connect(self.options["path"])
-        try:
-            sql = build_select(
-                self.dialect, self.relation, self.columns, self.where
-            )
-            cur = con.execute(sql)
-            arrow_schema = pa.schema(
-                [
-                    pa.field(f.name, _spark_to_arrow(f.dataType), True)
-                    for f in self.spark_schema.fields
-                ]
-            )
-            while True:
-                rows = cur.fetchmany(16384)
-                if not rows:
-                    break
-                cols = list(zip(*rows))
-                yield pa.record_batch(
-                    [
-                        pa.array(list(col), type=field.type)
-                        for col, field in zip(cols, arrow_schema)
-                    ],
-                    schema=arrow_schema,
-                )
-        finally:
-            con.close()
-
-
-class SQLiteDataSource(DataSource):
-    """``spark.read.format("sqlite_engine")`` — options: path, relation."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "sqlite_engine"
-
-    def schema(self):
-        con = sqlite3.connect(self.options["path"])
-        try:
-            info = con.execute(
-                f"PRAGMA table_info({self.options['relation']})"
-            ).fetchall()
-            if not info:
-                raise ValueError(f"no such sqlite table: {self.options['relation']}")
-            import json as _json
-
-            cols = _json.loads(self.options.get("columns", "null"))
-            fields = {
-                name: T.StructField(name, _decl_to_spark(decl), notnull == 0)
-                for (_, name, decl, notnull, _, _) in info
-            }
-            if cols:
-                missing = [c for c in cols if c not in fields]
-                if missing:
-                    raise ValueError(f"unknown columns {missing} in {self.options['relation']}")
-                return T.StructType([fields[c] for c in cols])
-            return T.StructType(list(fields.values()))
-        finally:
-            con.close()
-
-    def reader(self, schema) -> DataSourceReader:
-        return SQLiteReader(schema, self.options)
-
-
-_REGISTERED = set()
-
-
-def register(spark: SparkSession) -> None:
-    if id(spark) not in _REGISTERED:
-        spark.dataSource.register(SQLiteDataSource)
-        _REGISTERED.add(id(spark))
+def _declared_ddl(path: str, relation: str) -> str:
+    """The table's Spark schema DDL from ``PRAGMA table_info``."""
+    with closing(sqlite3.connect(path)) as con:
+        info = con.execute(f"PRAGMA table_info({relation})").fetchall()
+    if not info:
+        raise ValueError(f"no such sqlite table: {relation}")
+    return ", ".join(
+        "`{}` {}{}".format(
+            name.replace("`", "``"),
+            _decl_to_spark(decl),
+            " NOT NULL" if notnull else "",
+        )
+        for (_, name, decl, notnull, _, _) in info
+    )
 
 
 def sqlite_reader_df(
@@ -166,30 +71,19 @@ def sqlite_reader_df(
     a broadcast join hint when small (A15 — Python-DS scans report no
     stats, so Catalyst would otherwise shuffle-join every connector dim;
     same contract as ``duckdb_reader_df``)."""
-    register(spark)
     if backend.path == ":memory:":
         raise ValueError(
             "in-memory SQLite is process-local; use a file-mode backend "
             "or Engine.sql federation"
         )
-    import json as _json
-
-    reader = (
-        spark.read.format("sqlite_engine")
-        .option("path", backend.path)
-        .option("relation", relation)
+    return dbapi_reader_df(
+        spark,
+        "sqlite3",
+        relation,
+        connect_args=[backend.path],
+        dialect="sqlite",
+        columns=columns,
+        schema_ddl=_declared_ddl(backend.path, relation),
+        auto_broadcast=auto_broadcast,
+        extra_where=extra_where,
     )
-    if columns:
-        reader = reader.option("columns", _json.dumps(list(columns)))
-    if extra_where:
-        reader = reader.option("extra_where", _json.dumps(list(extra_where)))
-    hint_broadcast = False
-    if auto_broadcast:
-        from datafusion_table_providers_spark.sources.duckdb_source import (
-            AUTO_BROADCAST_ROWS,
-            table_row_count,
-        )
-
-        hint_broadcast = table_row_count(backend, relation) <= AUTO_BROADCAST_ROWS
-    df = reader.load()
-    return df.hint("broadcast") if hint_broadcast else df

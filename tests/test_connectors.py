@@ -531,3 +531,164 @@ def test_worker_connection_cache_evicts_oldest(tmp_path):
     with _pt.raises(Exception):
         cons[0].execute("SELECT 1")
     ds._WORKER_CON_CACHE.clear()
+
+
+def _keyed_duckdb_file(tmp_path):
+    """100 rows; every key column is NULL in 10 of them."""
+    import duckdb
+
+    path = str(tmp_path / "keys.duckdb")
+    con = duckdb.connect(path)
+    con.execute(
+        "CREATE TABLE t AS SELECT "
+        "CASE WHEN i % 10 = 0 THEN NULL ELSE i END AS id, "
+        "CASE WHEN i % 10 = 1 THEN NULL "
+        "ELSE DATE '2020-01-01' + CAST(i AS INTEGER) END AS dt, "
+        "CASE WHEN i % 10 = 2 THEN NULL "
+        "ELSE TIMESTAMP '2020-01-01 00:00:00' + i * INTERVAL 7 HOUR END AS ts "
+        "FROM range(100) r(i)"
+    )
+    con.close()
+    return path
+
+
+def _sliced_duckdb(spark, path, column):
+    from datafusion_table_providers_spark.sources.duckdb_source import (
+        duckdb_reader_df,
+    )
+
+    return duckdb_reader_df(
+        spark, DuckDBBackend(path), "t", partition_column=column,
+        num_partitions=4,
+    )
+
+
+def _sliced_dbapi(spark, path, column):
+    from datafusion_table_providers_spark.sources.dbapi_source import (
+        dbapi_reader_df,
+    )
+
+    return dbapi_reader_df(
+        spark, "duckdb", "t", connect_args=[path],
+        connect_kwargs={"read_only": True}, dialect="duckdb",
+        partition_column=column, num_partitions=4,
+    )
+
+
+@pytest.mark.parametrize("column", ["id", "dt", "ts"])
+@pytest.mark.parametrize("scan", [_sliced_duckdb, _sliced_dbapi])
+def test_range_slices_keep_null_keys_and_temporal_edges(
+    spark, tmp_path, scan, column
+):
+    """A range-sliced scan returns every row: the first slice also takes
+    the NULL keys, and DATE/TIMESTAMP edges are rendered as literals of
+    their type, not bare values."""
+    df = scan(spark, _keyed_duckdb_file(tmp_path), column)
+    assert df.rdd.getNumPartitions() == 4
+    assert df.count() == 100
+    assert df.filter(F.col(column).isNull()).count() == 10
+
+
+def test_range_slices_sql():
+    from datafusion_table_providers_spark.core.expr import DIALECTS
+    from datafusion_table_providers_spark.sources.sql_scan import range_slices
+
+    assert range_slices(
+        lambda sql: (1, 100), DIALECTS["duckdb"], "t", "id", 4
+    ) == [
+        '"id" < 25.75 OR "id" IS NULL',
+        '"id" >= 25.75 AND "id" < 50.5',
+        '"id" >= 50.5 AND "id" < 75.25',
+        '"id" >= 75.25',
+    ]
+    assert range_slices(lambda sql: (7, 7), DIALECTS["duckdb"], "t", "id", 4) == []
+    # SQLite returns DATE and TEXT keys as strings: no slices, one scan
+    assert range_slices(
+        lambda sql: ("2020-01-01", "2020-12-31"), DIALECTS["sqlite"], "t", "d", 4
+    ) == []
+
+
+def test_sqlite_text_partition_column_reads_one_scan(spark, tmp_path):
+    """A text partition key cannot be range-sliced; the DB-API scan falls
+    back to one partition and keeps every row."""
+    import sqlite3
+
+    from datafusion_table_providers_spark.sources.dbapi_source import (
+        dbapi_reader_df,
+    )
+
+    path = str(tmp_path / "d.db")
+    con = sqlite3.connect(path)
+    con.execute("CREATE TABLE t (id INTEGER, d DATE)")
+    con.executemany(
+        "INSERT INTO t VALUES (?, ?)",
+        [(i, f"2020-01-{i % 28 + 1:02d}") for i in range(50)],
+    )
+    con.commit()
+    con.close()
+    df = dbapi_reader_df(
+        spark, "sqlite3", "t", connect_args=[path], dialect="sqlite",
+        schema_ddl="id BIGINT, d STRING", partition_column="d", num_partitions=4,
+    )
+    assert df.rdd.getNumPartitions() == 1
+    assert df.count() == 50
+
+
+def _sqlite_bools(spark, path, relation):
+    from datafusion_table_providers_spark.sources.backends import SQLiteBackend
+    from datafusion_table_providers_spark.sources.sqlite_source import (
+        sqlite_reader_df,
+    )
+
+    return sqlite_reader_df(spark, SQLiteBackend(path), relation)
+
+
+def _dbapi_bools(spark, path, relation):
+    from datafusion_table_providers_spark.sources.dbapi_source import (
+        dbapi_reader_df,
+    )
+
+    return dbapi_reader_df(
+        spark, "sqlite3", relation, connect_args=[path], dialect="sqlite",
+        schema_ddl="id BIGINT, ok BOOLEAN",
+    )
+
+
+@pytest.mark.parametrize("scan", [_sqlite_bools, _dbapi_bools])
+def test_sqlite_boolean_column(spark, tmp_path, scan):
+    """SQLite stores BOOLEAN as 0/1 integers; the rows→Arrow converter
+    casts them instead of rejecting them."""
+    import sqlite3
+
+    path = str(tmp_path / "b.db")
+    con = sqlite3.connect(path)
+    con.execute("CREATE TABLE b (id INTEGER, ok BOOLEAN)")
+    con.executemany("INSERT INTO b VALUES (?, ?)", [(1, 1), (2, 0), (3, None)])
+    con.commit()
+    con.close()
+    rows = scan(spark, path, "b").orderBy("id").collect()
+    assert [r.ok for r in rows] == [True, False, None]
+
+
+def test_unknown_declared_column_raises_on_driver(spark, tmp_path):
+    import sqlite3
+
+    from datafusion_table_providers_spark.sources.backends import SQLiteBackend
+    from datafusion_table_providers_spark.sources.dbapi_source import (
+        dbapi_reader_df,
+    )
+    from datafusion_table_providers_spark.sources.sqlite_source import (
+        sqlite_reader_df,
+    )
+
+    path = str(tmp_path / "u.db")
+    con = sqlite3.connect(path)
+    con.execute("CREATE TABLE u (id INTEGER)")
+    con.close()
+    with pytest.raises(ValueError, match="unknown columns"):
+        sqlite_reader_df(spark, SQLiteBackend(path), "u", columns=["nope"])
+    with pytest.raises(ValueError, match="unknown columns"):
+        dbapi_reader_df(
+            spark, "sqlite3", "u", connect_args=[path],
+            schema_ddl="id BIGINT", columns=["nope"],
+        )
