@@ -15,10 +15,7 @@ way, and none of them runs a Spark job of its own (``llm/dedup.py``):
   of the same footers, so one build reads the table once and runs no
   schema-inference job for it;
 - the number of text groups (``_rep_count``) is a ``pyspark.sql.Observation``
-  on the group map, filled by the map's own eager localCheckpoint;
-- d02b's candidate-pair count is an Observation on its candidate
-  checkpoint. Its exact candidate-doc count runs as a job only when the
-  ``2 × pairs`` bound cannot settle the semi-join gates.
+  on the group map, filled by the map's own eager localCheckpoint.
 
 Operational contract (know before reusing the pattern):
 - localCheckpoint blocks are NON-RECOVERABLE: after an executor loss the

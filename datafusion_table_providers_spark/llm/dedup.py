@@ -7,8 +7,11 @@ Beyond-reference additions. Scale-first shapes (the 100 TB designs):
 - MinHash-LSH is the classic shingle→minhash→band→bucket-join pipeline: one
   explode + one groupBy for signatures (16 `min` aggregates computed in a
   single map-side-combining pass), then a self-join on (band, key) buckets so
-  candidate generation never goes quadratic; exact Jaccard is verified only
-  on the candidate pairs;
+  candidate generation never goes quadratic;
+- LSH candidates (d02b, d26) are verified by exact Jaccard on the candidate
+  pairs only: the signature groupBy also collects each text's distinct
+  shingle set, and each candidate pair intersects its two sets
+  (`_verify_pairs`) — no second shingle pass, no shingle self-join;
 - SimHash packs a 32-bit signature via bit-count sums and blocks on 8-bit
   bands (pigeonhole: hamming ≤ 3 pairs must agree on ≥1 of 4 bands);
 - n-gram Jaccard joins on shingles directly and is bounded by dropping
@@ -27,6 +30,7 @@ and fans verdicts back out to doc pairs at the end; see _text_groups.
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
@@ -137,7 +141,7 @@ _SIG_CACHE: dict = register_cache({})
 
 
 def _signature_df(spark, sf_dir):
-    """Per-doc signature table for doc-keyed consumers (c14, d26),
+    """Per-doc signature table for doc-keyed consumers (c14),
     memoized + checkpointed. Built GROUP-LEVEL since r22: signatures are a
     pure text function, so they are computed once per distinct text
     (:func:`_rep_signature_df`) and expanded back through the group map —
@@ -148,14 +152,14 @@ def _signature_df(spark, sf_dir):
     if cached is not None:
         return cached
     m = _text_groups(spark, sf_dir)
-    rep = _rep_signature_df(spark, sf_dir).withColumnRenamed("doc_id", "gid")
+    bands = [f"band{b}" for b in range(N_BANDS)]
+    # band keys only: the rep shingle sets never ride the broadcast
+    rep = _rep_signature_df(spark, sf_dir).select(
+        F.col("doc_id").alias("gid"), *bands
+    )
     if _doc_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS:
         rep = F.broadcast(rep)
-    out = (
-        m.join(rep, "gid")
-        .select("doc_id", *[f"band{b}" for b in range(N_BANDS)])
-        .localCheckpoint(eager=True)
-    )
+    out = m.join(rep, "gid").select("doc_id", *bands).localCheckpoint(eager=True)
     _SIG_CACHE[key] = out
     return out
 
@@ -166,14 +170,19 @@ def _signature_plan_df(spark, sf_dir):
     return _signatures_of(_documents(spark, sf_dir))
 
 
-def _signatures_of(docs):
+def _signatures_of(docs, shingle_set: bool = False):
     """MinHash signature + LSH band pipeline over an arbitrary
-    (doc_id, text) table (corpus or text-group representatives)."""
+    (doc_id, text) table (corpus or text-group representatives).
+    ``shingle_set=True`` also keeps each doc's distinct shingle strings as
+    an array column ``sh``, collected by the same groupBy that computes the
+    MinHash ``min``s (see :func:`_verify_pairs`)."""
     # duplicate shingles cannot change a min() — skip the distinct shuffle
+    # (collect_set drops them for the shingle set)
     sh = _shingles_of(docs, distinct=False)
     m = F.md5(F.col("s"))
     hh = sh.select(
         "doc_id",
+        "s",
         F.conv(F.substring(m, 1, 8), 16, 10).cast("long").alias("h1"),
         F.conv(F.substring(m, 9, 8), 16, 10).cast("long").alias("h2"),
     )
@@ -181,6 +190,8 @@ def _signatures_of(docs):
         F.min((F.col("h1") + j * F.col("h2")) % MH_PRIME).alias(f"mh{j}")
         for j in range(N_HASHES)
     ]
+    if shingle_set:
+        aggs.append(F.collect_set("s").alias("sh"))
     sig = hh.groupBy("doc_id").agg(*aggs)
     bands = [
         F.concat_ws(
@@ -191,7 +202,7 @@ def _signatures_of(docs):
     # (materialization happens in _signature_df: the table is small —
     # 1 row/doc — and every consumer would otherwise embed the full hash
     # plan in its join fan-out)
-    return sig.select("doc_id", *bands)
+    return sig.select("doc_id", *bands, *(["sh"] if shingle_set else []))
 
 
 def d02_minhash_signatures(spark, sf_dir):
@@ -199,8 +210,8 @@ def d02_minhash_signatures(spark, sf_dir):
     # signature build has no downstream fan-out to amortize a checkpoint, so
     # eagerly materializing blocks here is ~0.3s/run of pure overhead at
     # sf0.1 (and a full extra write of the table at scale). Consumers that
-    # embed the signatures several times (d02b's 4-band self-join, d12, c14)
-    # keep going through _signature_df for the lineage cut.
+    # embed the signatures several times (d02b's 4-band self-join, d26, c14)
+    # go through the memoized _rep_signature_df / _signature_df instead.
     return _signature_plan_df(spark, sf_dir)
 
 
@@ -247,23 +258,19 @@ SELECT doc_id, {bands} FROM sig
 """
 
 
-# --- d02b: LSH candidate pairs + exact-Jaccard verification ---------------
-#: skip the candidate semi-join reduction when candidate docs exceed this
-#: fraction of the corpus — filtering that drops almost nothing only adds
-#: a broadcast + probe to the big exchange (see the adaptive branch below)
-SEMIJOIN_MAX_FRACTION = 0.5
-#: absolute cap on the BROADCAST form of the reduction: F.broadcast()
-#: bypasses autoBroadcastJoinThreshold, and a candidate set just under
-#: half of a 100 TB corpus would be billions of doc_ids — far past the
-#: 8 GB / 512M-row broadcast limit. Above this row count (but still under
-#: the fraction gate) the reduction runs as a SHUFFLE semi-join instead:
-#: same surviving rows, no driver/executor-resident hash relation.
+# --- shared corpus reads and broadcast gate --------------------------------
+#: row cap on every gated F.broadcast() below: F.broadcast() bypasses
+#: autoBroadcastJoinThreshold, and a table that grows with the corpus
+#: (a doc→group map, a rep bucket table) would at 100 TB be billions of
+#: rows — far past the 8 GB / 512M-row broadcast limit. Above this row
+#: count the join shuffles instead: same rows, no driver/executor-resident
+#: hash relation.
 SEMIJOIN_MAX_BROADCAST_ROWS = int(
     os.environ.get("SPARK_GRAFT_SEMIJOIN_MAX_BROADCAST_ROWS", "20000000")
 )
 
 #: (applicationId, sf_dir) → (documents DataFrame, row count). The
-#: adaptive gates below need |corpus| on every dedup build, and a plain
+#: broadcast gates below need |corpus| on every dedup build, and a plain
 #: ``spark.read.parquet`` runs a schema-inference job per call. One pass
 #: over the parquet footers on the driver gives both the row count and the
 #: schema, so neither costs a Spark job, and the group map, the rep docs
@@ -322,11 +329,17 @@ def _doc_count(spark, sf_dir) -> int:
 
 def _observed(obs, name: str, fallback):
     """Metric ``name`` of an Observation filled by its DataFrame's eager
-    checkpoint. ``Observation.get`` blocks until some action fills it, so
-    if that job did not, run ``fallback()`` instead of waiting forever."""
-    if obs._jo.future().isCompleted():
-        return obs.get[name]
-    return fallback()
+    checkpoint. The metrics arrive through Spark's asynchronous listener
+    bus, a few ms after the action returns, so wait up to a second for
+    them. ``Observation.get`` blocks until some action fills it, so if that
+    job did not, run ``fallback()`` instead of waiting forever."""
+    fut = obs._jo.future()
+    deadline = time.monotonic() + 1.0
+    while not fut.isCompleted():
+        if time.monotonic() >= deadline:
+            return fallback()
+        time.sleep(0.002)
+    return obs.get[name]
 
 
 # --- text groups: compute once per DISTINCT text, expand at the end -------
@@ -399,12 +412,14 @@ def _rep_docs(spark, sf_dir):
 
 def _rep_signature_df(spark, sf_dir):
     """Signature table over the group representatives (1 row per distinct
-    text that has >= 1 shingle), memoized + checkpointed."""
+    text that has >= 1 shingle: doc_id, band0..3 and the distinct shingle
+    set ``sh``), memoized + checkpointed."""
     key = memo_key(spark, sf_dir)
     cached = _REPSIG_CACHE.get(key)
     if cached is not None:
         return cached
-    out = _signatures_of(_rep_docs(spark, sf_dir)).localCheckpoint(eager=True)
+    reps = _rep_docs(spark, sf_dir)
+    out = _signatures_of(reps, shingle_set=True).localCheckpoint(eager=True)
     _REPSIG_CACHE[key] = out
     return out
 
@@ -453,15 +468,12 @@ def _intra_group_pairs(spark, sf_dir, groups, payload_cols):
     )
 
 
-def d02b_minhash_lsh_pairs(spark, sf_dir, shingles=None):
-    # GROUP LEVEL (r22): candidacy and exact Jaccard are pure functions of
-    # the two TEXTS, so the whole band-join + shingle-verification pipeline
-    # runs once per distinct text (group representative) and the verdicts
-    # fan back out to doc pairs at the end (see _text_groups). The rep
-    # signature table arrives checkpointed + memoized — the lineage cut
-    # that keeps the 4-band union self-join from embedding the hash plan 8x.
-    sig = _rep_signature_df(spark, sf_dir)
-    # bucket join per band: reps sharing any full band key are candidates
+# --- d02b: LSH candidate pairs + exact-Jaccard verification ---------------
+def _lsh_candidates(sig, diagonal: bool = False, broadcast: bool = False):
+    """Distinct (ga, gb) rep pairs that share at least one full band key,
+    ga < gb (ga <= gb with ``diagonal``): one bucket self-join over the
+    union of the N_BANDS band columns, so candidacy never goes quadratic.
+    ``broadcast`` broadcasts one bucket side (N_BANDS rows per rep)."""
     buckets = None
     for b in range(N_BANDS):
         one = sig.select(
@@ -469,119 +481,54 @@ def d02b_minhash_lsh_pairs(spark, sf_dir, shingles=None):
         )
         buckets = one if buckets is None else buckets.union(one)
     a = buckets.alias("a")
-    bb = buckets.alias("b")
-    cand_obs = Observation()
-    cand = (
+    bb = F.broadcast(buckets.alias("b")) if broadcast else buckets.alias("b")
+    ga, gb = F.col("a.doc_id"), F.col("b.doc_id")
+    return (
         a.join(
             bb,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+            & ((ga <= gb) if diagonal else (ga < gb)),
         )
-        .select(
-            F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db")
-        )
-        .distinct()
-        .observe(cand_obs, F.count(F.lit(1)).alias("pairs"))
-        # output-bounded (LSH bucket collisions only) and referenced three
-        # times below (cand_docs twice via the union, the final join once) —
-        # cut the band-join lineage once instead of re-executing it per
-        # reference
-        .localCheckpoint(eager=True)
-    )
-    # exact verification on candidate reps only. When built standalone the
-    # rep shingle table is NOT checkpointed (it is ~10× rep-corpus size;
-    # re-deriving it per reference beats writing it to executor-local
-    # disk); an ensemble caller (d35) that feeds SEVERAL shingle consumers
-    # passes one shared checkpointed REP table via ``shingles`` instead —
-    # same rows either way.
-    sh = (
-        shingles
-        if shingles is not None
-        else _shingles_of(_rep_docs(spark, sf_dir))
-    )
-    # Semi-join reduction (guide §3.2): the shingle self-join only has to
-    # cover reps that appear in some candidate pair — broadcast the (output-
-    # bounded, ≤2×|cand|) candidate rep set and drop every other rep's
-    # shingles BEFORE the s=s exchange. Pair counts between surviving reps
-    # are untouched, so the cand-join result is identical; what changes is
-    # that the big exchange no longer carries shingles of never-candidate
-    # texts (at 100 TB: almost all of them).
-    cand_docs = (
-        cand.select(F.col("da").alias("doc_id"))
-        .union(cand.select(F.col("db").alias("doc_id")))
+        .select(ga.alias("ga"), gb.alias("gb"))
         .distinct()
     )
-    # ADAPTIVE: the reduction wins when duplicate-suspect texts are sparse
-    # (the realistic regime) but costs ~20% when nearly every rep is a
-    # candidate. All branches are result-identical, so this is the
-    # guide-§3.2 "pre-filters are not always on" decision made from the
-    # actual candidate fraction. None of its inputs costs a job of its own:
-    # the rep count was observed on the group map's checkpoint, and |cand|
-    # on cand's. Each pair names at most two reps, so n_cand <= 2·|cand|;
-    # when that bound already passes both gates below (the sparse regime),
-    # every comparison comes out as with the exact count and the plan is
-    # the same. Only otherwise does the exact distinct count run as a job
-    # at build time — then building this plan executes that count even if
-    # the result is never collected.
-    n_cand = 2 * _observed(cand_obs, "pairs", cand.count)
-    n_reps = _rep_count(spark, sf_dir)
-    if not (
-        n_cand < SEMIJOIN_MAX_FRACTION * n_reps
-        and n_cand <= SEMIJOIN_MAX_BROADCAST_ROWS
-    ):
-        n_cand = cand_docs.count()
-    if n_cand < SEMIJOIN_MAX_FRACTION * n_reps:
-        if n_cand <= SEMIJOIN_MAX_BROADCAST_ROWS:
-            sh_c = sh.join(F.broadcast(cand_docs), "doc_id")
-        else:
-            # too many candidate ids to hold as a broadcast hash relation —
-            # keep the reduction but let it shuffle (plain semi-join)
-            sh_c = sh.join(cand_docs, "doc_id", "left_semi")
-    else:
-        sh_c = sh
-    # per-rep shingle counts from the (possibly) restricted table: the
-    # da/db joins below only ever look up candidate reps, and sh_c keeps
-    # ALL shingles of each surviving rep, so the counts are identical
-    sizes = sh_c.groupBy("doc_id").agg(F.count("*").alias("n"))
-    pair_stream = (
-        sh_c.alias("x")
-        .join(sh_c.alias("y"), F.col("x.s") == F.col("y.s"))
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
+
+
+def _verify_pairs(cand, sig):
+    """Exact shingle Jaccard of each (ga, gb) candidate, read off the two
+    reps' distinct shingle sets in ``sig`` (:func:`_rep_signature_df`):
+    inter = |sa ∩ sb|, jaccard = inter / (|sa| + |sb| - inter). The sets
+    hold the shingle strings themselves, so this is the oracle's Jaccard
+    exactly; pairs with no shared shingle are dropped, as the oracle's
+    inner join on the shared-shingle count drops them. Cost is |cand| ×
+    shingles per text — no shingle self-join, whose cost is Σ df(s)²."""
+    sa = sig.select(F.col("doc_id").alias("ga"), F.col("sh").alias("sa"))
+    sb = sig.select(F.col("doc_id").alias("gb"), F.col("sh").alias("sb"))
+    inter = F.col("inter")
+    return (
+        cand.join(sa, "ga")
+        .join(sb, "gb")
         .select(
-            F.col("x.doc_id").alias("da"), F.col("y.doc_id").alias("db")
+            "ga",
+            "gb",
+            F.size(F.array_intersect("sa", "sb")).alias("inter"),
+            (F.size("sa") + F.size("sb")).alias("n"),
         )
+        .filter(inter > 0)
+        .select("ga", "gb", _r(inter / (F.col("n") - inter), 6).alias("jaccard"))
     )
-    # PAIR-level reduction before the groupBy exchange: only pairs present
-    # in `cand` survive the final inner join, so drop the rest of the
-    # shared-shingle pair stream map-side with a broadcast LEFT SEMI
-    # against the (checkpointed, output-bounded) candidate table — the
-    # rep-level reduction above cannot catch candidate reps that pair with
-    # the WRONG partner (two candidate reps sharing shingles but no band).
-    # (guide §3.2, §2.3: aggregate/filter before the shuffle.) Counts for
-    # surviving pairs are untouched. Past the broadcast cap the semi-join
-    # shuffles by the same (da, db) key the aggregate needs — one exchange
-    # of the stream either way.
-    cand_probe = (
-        F.broadcast(cand) if n_cand <= SEMIJOIN_MAX_BROADCAST_ROWS else cand
-    )
-    inter = (
-        pair_stream.join(cand_probe, ["da", "db"], "left_semi")
-        .groupBy("da", "db")
-        .agg(F.count("*").alias("inter"))
-    )
-    gpairs = (
-        cand.join(inter, ["da", "db"])
-        .join(sizes.withColumnRenamed("doc_id", "da").withColumnRenamed("n", "na"), "da")
-        .join(sizes.withColumnRenamed("doc_id", "db").withColumnRenamed("n", "nb"), "db")
-        .select(
-            F.col("da").alias("ga"),
-            F.col("db").alias("gb"),
-            _r(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
-            ).alias("jaccard"),
-        )
-    )
+
+
+def d02b_minhash_lsh_pairs(spark, sf_dir):
+    # GROUP LEVEL (r22): candidacy and exact Jaccard are pure functions of
+    # the two TEXTS, so band join and verification run once per distinct
+    # text (group representative) and the verdicts fan back out to doc
+    # pairs at the end (see _text_groups). The rep signature table arrives
+    # checkpointed + memoized with each rep's shingle set, which is all
+    # that verification reads.
+    sig = _rep_signature_df(spark, sf_dir)
+    gpairs = _verify_pairs(_lsh_candidates(sig), sig)
     cross = _expand_group_pairs(spark, sf_dir, gpairs, [F.col("jaccard")])
     # intra-group pairs: identical texts share every band key and every
     # shingle, so the per-doc pipeline always paired them at jaccard
@@ -857,15 +804,17 @@ FREQ_CAP = 50  # drop shingles present in more docs than this (skew guard)
 MIN_SHARED = 2
 
 
-def d04_ngram_jaccard(spark, sf_dir, shingles=None):
+def d04_ngram_jaccard(spark, sf_dir, rep_shingles=None):
     # GROUP LEVEL (r22, see d02b/_text_groups): the shared-shingle count
     # and Jaccard depend only on the two texts and the GLOBAL document
     # frequency of each shingle, so the self-join runs once per distinct
-    # text and fans back out at the end. ``shingles`` (when passed by the
-    # d35 ensemble) is the REP-level distinct shingle table.
+    # text and fans back out at the end. ``rep_shingles`` (passed by the
+    # d35 ensemble) must be the REP-level distinct shingle table
+    # (_shingles_of(_rep_docs(...))): document frequency is weighted by
+    # group size below, so a per-doc table would count duplicates twice.
     sh = (
-        shingles
-        if shingles is not None
+        rep_shingles
+        if rep_shingles is not None
         else _shingles_of(_rep_docs(spark, sf_dir))
     )
     m = _text_groups(spark, sf_dir)
@@ -1232,12 +1181,13 @@ SUITE["d04b_ngram_editdist"] = QueryCase(
 # 8-gram hits) with NEAR-duplicate decontamination: a training doc that is
 # a light paraphrase of an eval doc shares no long exact gram but has high
 # shingle Jaccard. Same signature/band machinery as d02b, restricted to
-# train x eval candidate pairs. Scale shape: a real eval side is
-# benchmark-sized (MBs against a corpus of TBs), so its band buckets and
-# shingles broadcast — the broadcast bound is |eval|, never |corpus| —
-# and the train side never self-joins: one shuffle for signatures,
-# map-side joins after. (The synthetic 20% split here is far larger than
-# any real benchmark; it exists so the certified output is non-trivial.)
+# train x eval pairs at the end. Scale shape: the band join spans all
+# representatives and broadcasts its bucket side only under
+# 4·reps <= SEMIJOIN_MAX_BROADCAST_ROWS (past that it shuffles);
+# verification reads the candidates' shingle sets, so its cost is bounded
+# by |candidates|, not by the corpus. (The synthetic 20% split here is far
+# larger than any real benchmark; it exists so the certified output is
+# non-trivial.)
 FUZZY_EVAL_MOD = 5
 FUZZY_EVAL_REM = 2
 
@@ -1245,71 +1195,17 @@ FUZZY_EVAL_REM = 2
 def d26_fuzzy_decontaminate(spark, sf_dir):
     # GROUP LEVEL (r22, see _text_groups): candidacy and Jaccard are pure
     # functions of the two TEXTS; only the train/eval SPLIT is doc-level
-    # (doc_id % MOD). So: run the band join + shingle verification once per
-    # unordered REP pair — INCLUDING the diagonal ga == gb, since a train
-    # doc and an eval doc may share one exact text (jaccard 1.0) — then
-    # expand each verdict to (train member × eval member) in both
-    # directions through the group map. The real-scale shape argument is
-    # unchanged (an eval side is benchmark-sized), and on a dup-heavy
-    # corpus the shingle join work drops by the duplication factor².
+    # (doc_id % MOD). So: band-join and verify once per unordered REP pair
+    # — INCLUDING the diagonal ga == gb, since a train doc and an eval doc
+    # may share one exact text (jaccard 1.0) — then expand each verdict to
+    # (train member × eval member) in both directions through the group
+    # map.
     sig = _rep_signature_df(spark, sf_dir)  # checkpointed + memoized
-    buckets = None
-    for b in range(N_BANDS):
-        one = sig.select(
-            "doc_id", F.col(f"band{b}").alias("key"), F.lit(b).alias("band")
-        )
-        buckets = one if buckets is None else buckets.union(one)
-    a = buckets.alias("a")
-    bb = buckets.alias("b")
-    # the bucket table holds N_BANDS rows per rep that has a signature:
-    # broadcast it only under the cap (past it the band join shuffles)
-    if N_BANDS * _rep_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS:
-        bb = F.broadcast(bb)
-    gcand = (
-        a.join(
-            bb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") <= F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("ga"), F.col("b.doc_id").alias("gb"))
-        .distinct()
-        # output-bounded band collisions, referenced twice below (semi
-        # probe + final join): cut the band-join lineage once
-        .localCheckpoint(eager=True)
-    )
-    sh = _shingles_of(_rep_docs(spark, sf_dir))
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    pair_stream = (
-        sh.alias("x")
-        .join(sh.alias("y"), F.col("x.s") == F.col("y.s"))
-        .filter(F.col("x.doc_id") <= F.col("y.doc_id"))
-        .select(F.col("x.doc_id").alias("ga"), F.col("y.doc_id").alias("gb"))
-    )
-    # pair-level reduction before the aggregate exchange, as in d02b
-    gcand_probe = (
-        F.broadcast(gcand)
-        if _rep_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS
-        else gcand
-    )
-    ginter = (
-        pair_stream.join(gcand_probe, ["ga", "gb"], "left_semi")
-        .groupBy("ga", "gb")
-        .agg(F.count("*").alias("inter"))
-    )
-    gpairs = (
-        gcand.join(ginter, ["ga", "gb"])
-        .join(sizes.withColumnRenamed("doc_id", "ga").withColumnRenamed("n", "na"), "ga")
-        .join(sizes.withColumnRenamed("doc_id", "gb").withColumnRenamed("n", "nb"), "gb")
-        .select(
-            "ga",
-            "gb",
-            _r(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")),
-                6,
-            ).alias("jaccard"),
-        )
-    )
+    # the bucket table holds N_BANDS rows per rep: broadcast it only under
+    # the cap (past it the band join shuffles)
+    fits_buckets = N_BANDS * _rep_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS
+    gcand = _lsh_candidates(sig, diagonal=True, broadcast=fits_buckets)
+    gpairs = _verify_pairs(gcand, sig)
     # expansion: train members of one group × eval members of the other,
     # both directions for distinct groups, once for the diagonal
     m = _text_groups(spark, sf_dir)
@@ -1474,21 +1370,19 @@ _D35_MASK_STR = [
 
 
 def d35_ensemble_neardup(spark, sf_dir):
-    # ONE distinct-shingle pass over the text-group REPRESENTATIVES feeds
-    # both shingle-set members (minhash's exact-Jaccard verifier and the
-    # n-gram blocker): each references the shingle lineage 3-5× inside its
-    # own plan, so the ensemble would otherwise re-run the
-    # scan+explode+distinct subtree ~8× (guide §2.4: share one pass; §5:
-    # one lineage cut for the shared table). SimHash blocks on single
-    # words, not shingles — it keeps its own pass (and its own
-    # distinct-simhash grouping, which subsumes identical texts).
-    shingles = _shingles_of(_rep_docs(spark, sf_dir)).localCheckpoint(
-        eager=True
+    # The minhash member memoizes the rep signature table with each text's
+    # distinct shingle set; exploding those sets IS the n-gram member's
+    # distinct rep-shingle table, so no second shingle pass, distinct
+    # shuffle or checkpoint runs for it. SimHash blocks on single words —
+    # it keeps its own pass (and its own distinct-simhash grouping, which
+    # subsumes identical texts).
+    rep_shingles = _rep_signature_df(spark, sf_dir).select(
+        "doc_id", F.explode("sh").alias("s")
     )
-    mh = d02b_minhash_lsh_pairs(spark, sf_dir, shingles=shingles).select(
+    mh = d02b_minhash_lsh_pairs(spark, sf_dir).select(
         "da", "db", F.lit(_D35_TAG["minhash"]).alias("tag")
     )
-    ng = d04_ngram_jaccard(spark, sf_dir, shingles=shingles).select(
+    ng = d04_ngram_jaccard(spark, sf_dir, rep_shingles=rep_shingles).select(
         "da", "db", F.lit(_D35_TAG["ngram"]).alias("tag")
     )
     # A pair can only reach >= 2 methods if minhash or ngram flags it —

@@ -53,13 +53,21 @@ def test_observed_rep_count_matches_naive(spark, dup_heavy_dir):
     assert n < dedup._doc_count(spark, dup_heavy_dir)
 
 
-def test_d02b_build_job_budget(spark):
-    # a build in a cold session can run a job or two more while Spark
-    # warms up: count a second build, after the memo is cleared
-    dedup.d02b_minhash_lsh_pairs(spark, SF_DIR)
+def _warm_build_jobs(spark, op):
+    """Jobs of a second build of ``op`` after the memo is cleared: a build
+    in a cold session can run a job or two more while Spark warms up."""
+    op(spark, SF_DIR)
     clear_memo_caches()
-    df, jobs = _with_jobs(
-        spark, lambda: dedup.d02b_minhash_lsh_pairs(spark, SF_DIR)
-    )
-    assert jobs <= 10, jobs
+    df, jobs = _with_jobs(spark, lambda: op(spark, SF_DIR))
     assert df.count() > 0
+    return jobs
+
+
+def test_d02b_build_job_budget(spark):
+    jobs = _warm_build_jobs(spark, dedup.d02b_minhash_lsh_pairs)
+    assert jobs <= 6, jobs
+
+
+def test_d26_build_job_budget(spark):
+    jobs = _warm_build_jobs(spark, dedup.d26_fuzzy_decontaminate)
+    assert jobs <= 6, jobs
