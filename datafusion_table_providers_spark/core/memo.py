@@ -2,9 +2,12 @@
 
 The registry recomputes several small derived tables identically across
 rows in one driver run (MinHash signatures, duplicate-cluster labels, the
-Lloyd's assignment, PQ codes). Each is memoized per
-``(applicationId, normalized sf_dir)`` with the localCheckpoint inside the
-shared builder.
+Lloyd's assignment, PQ codes). Each builder ``f(spark, sf_dir)`` that
+makes one is decorated with :func:`memo_artifact`, which owns the key
+``(applicationId, normalized sf_dir)``, the cache and the check-then-store
+steps: the first call per key runs the builder, later calls return the
+same object without running a Spark job. The lineage cut stays inside the
+builder (its own ``localCheckpoint(eager=True)`` line).
 
 The counts that data-dependent plan choices need are memoized the same
 way, and none of them runs a Spark job of its own (``llm/dedup.py``):
@@ -30,20 +33,28 @@ Operational contract (know before reusing the pattern):
 
 from __future__ import annotations
 
+import functools
 import os
-from typing import Dict, List
+from typing import Callable, List
 
-#: every registered memo dict, for clear_memo_caches()
-_REGISTERED: List[Dict] = []
-
-
-def register_cache(cache: Dict) -> Dict:
-    _REGISTERED.append(cache)
-    return cache
+#: every memoized builder, for clear_memo_caches() (each carries ``.cache``)
+MEMO_BUILDERS: List[Callable] = []
 
 
-def memo_key(spark, sf_dir: str):
-    return (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
+def memo_artifact(build: Callable) -> Callable:
+    """Memoize ``build(spark, sf_dir)`` per (session, normalized sf_dir)."""
+    cache: dict = {}
+
+    @functools.wraps(build)
+    def get(spark, sf_dir):
+        key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
+        if key not in cache:
+            cache[key] = build(spark, sf_dir)
+        return cache[key]
+
+    get.cache = cache
+    MEMO_BUILDERS.append(get)
+    return get
 
 
 def clear_memo_caches() -> int:
@@ -51,7 +62,7 @@ def clear_memo_caches() -> int:
     checkpointed blocks unrecoverable). Returns the number of entries
     dropped; the next caller recomputes from the source tables."""
     n = 0
-    for c in _REGISTERED:
-        n += len(c)
-        c.clear()
+    for b in MEMO_BUILDERS:
+        n += len(b.cache)
+        b.cache.clear()
     return n

@@ -36,6 +36,7 @@ from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from datafusion_table_providers_spark.core.case import QueryCase, utc
+from datafusion_table_providers_spark.core.memo import memo_artifact
 from datafusion_table_providers_spark.core.types import arrow_to_spark_schema
 from datafusion_table_providers_spark.operators.relational import _r, _rsql, _t
 
@@ -130,16 +131,8 @@ _SHINGLES_SQL = f"""
 # derive h1/h2 from the same md5 hex, so signatures stay oracle-identical.
 MH_PRIME = 4294967311  # smallest prime > 2^32
 
-#: (applicationId, sf_dir) → checkpointed signature table (1 row/doc).
-#: Recomputed identically by d02, d02b (hence d12/d34/p01/p02 via pairs)
-#: and c14 — memoized like the d12 labels; the heavy shingle explode runs
-#: once per session per sf_dir. See core/memo.py for the operational
-#: contract (non-recoverable checkpoints, clear_memo_caches()).
-from datafusion_table_providers_spark.core.memo import memo_key, register_cache
 
-_SIG_CACHE: dict = register_cache({})
-
-
+@memo_artifact
 def _signature_df(spark, sf_dir):
     """Per-doc signature table for doc-keyed consumers (c14),
     memoized + checkpointed. Built GROUP-LEVEL since r22: signatures are a
@@ -147,21 +140,14 @@ def _signature_df(spark, sf_dir):
     (:func:`_rep_signature_df`) and expanded back through the group map —
     identical rows, and on a duplicate-heavy corpus the shingle/hash work
     drops by the duplication factor."""
-    key = memo_key(spark, sf_dir)
-    cached = _SIG_CACHE.get(key)
-    if cached is not None:
-        return cached
     m = _text_groups(spark, sf_dir)
     bands = [f"band{b}" for b in range(N_BANDS)]
     # band keys only: the rep shingle sets never ride the broadcast
     rep = _rep_signature_df(spark, sf_dir).select(
         F.col("doc_id").alias("gid"), *bands
     )
-    if _doc_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS:
-        rep = F.broadcast(rep)
-    out = m.join(rep, "gid").select("doc_id", *bands).localCheckpoint(eager=True)
-    _SIG_CACHE[key] = out
-    return out
+    rep = bounded_broadcast(rep, _doc_count(spark, sf_dir))
+    return m.join(rep, "gid").select("doc_id", *bands).localCheckpoint(eager=True)
 
 
 def _signature_plan_df(spark, sf_dir):
@@ -269,13 +255,11 @@ SEMIJOIN_MAX_BROADCAST_ROWS = int(
     os.environ.get("SPARK_GRAFT_SEMIJOIN_MAX_BROADCAST_ROWS", "20000000")
 )
 
-#: (applicationId, sf_dir) → (documents DataFrame, row count). The
-#: broadcast gates below need |corpus| on every dedup build, and a plain
-#: ``spark.read.parquet`` runs a schema-inference job per call. One pass
-#: over the parquet footers on the driver gives both the row count and the
-#: schema, so neither costs a Spark job, and the group map, the rep docs
-#: and the shingle pass of one build share this one read.
-_CORPUS_CACHE: dict = register_cache({})
+
+def bounded_broadcast(df, n_rows: int):
+    """``F.broadcast(df)`` when its ``n_rows`` bound fits under
+    SEMIJOIN_MAX_BROADCAST_ROWS (read at call time), else ``df``."""
+    return F.broadcast(df) if n_rows <= SEMIJOIN_MAX_BROADCAST_ROWS else df
 
 
 def _footers(path: str):
@@ -298,20 +282,20 @@ def _footers(path: str):
     return sum(m.num_rows for m in metas), metas[0].schema.to_arrow_schema()
 
 
+@memo_artifact
 def _corpus(spark, sf_dir):
-    key = memo_key(spark, sf_dir)
-    got = _CORPUS_CACHE.get(key)
-    if got is None:
-        path = os.path.join(sf_dir, "documents.parquet")
-        foot = _footers(path)
-        if foot is None:  # remote storage: Spark infers the schema
-            got = (_t(spark, sf_dir, "documents"), None)
-        else:
-            utc(spark)
-            schema = arrow_to_spark_schema(foot[1])
-            got = (spark.read.schema(schema).parquet(path), foot[0])
-        _CORPUS_CACHE[key] = got
-    return got
+    """(documents DataFrame, footer row count or None). The broadcast
+    gates need |corpus| on every dedup build, and a plain
+    ``spark.read.parquet`` runs a schema-inference job per call. One pass
+    over the parquet footers on the driver gives both the row count and the
+    schema, so neither costs a Spark job, and the group map, the rep docs
+    and the shingle pass of one build share this one read."""
+    path = os.path.join(sf_dir, "documents.parquet")
+    foot = _footers(path)
+    if foot is None:  # remote storage: Spark infers the schema
+        return _t(spark, sf_dir, "documents"), None
+    utc(spark)
+    return spark.read.schema(arrow_to_spark_schema(foot[1])).parquet(path), foot[0]
 
 
 def _documents(spark, sf_dir):
@@ -319,12 +303,10 @@ def _documents(spark, sf_dir):
     return _corpus(spark, sf_dir)[0]
 
 
+@memo_artifact
 def _doc_count(spark, sf_dir) -> int:
     docs, n = _corpus(spark, sf_dir)
-    if n is None:  # remote storage: count with Spark, once
-        n = docs.count()
-        _CORPUS_CACHE[memo_key(spark, sf_dir)] = (docs, n)
-    return n
+    return docs.count() if n is None else n  # remote storage: count once
 
 
 def _observed(obs, name: str, fallback):
@@ -356,39 +338,27 @@ def _observed(obs, name: str, fallback):
 # emitted only when the rep actually has shingles (docs under SHINGLE_W
 # words produce no signature, so the per-doc pipeline never pairs them).
 
-#: (applicationId, sf_dir) → (checkpointed (doc_id, gid) text-group map,
-#: number of text groups)
-_GRP_CACHE: dict = register_cache({})
-#: (applicationId, sf_dir) → checkpointed rep signature table
-_REPSIG_CACHE: dict = register_cache({})
 
-
+@memo_artifact
 def _group_map(spark, sf_dir):
     """(map, n_groups): the (doc_id, gid) map with gid = min doc_id among
-    docs sharing this exact text, and the number of distinct texts —
-    memoized per (session, sf_dir). ONE job builds both: a window over
-    md5(text) (no group-then-join-back), with the representative count
-    observed on the map's own eager checkpoint."""
+    docs sharing this exact text, and the number of distinct texts. ONE
+    job builds both: a window over md5(text) (no group-then-join-back),
+    with the representative count observed on the map's own eager
+    checkpoint."""
     from pyspark.sql import Window
 
-    key = memo_key(spark, sf_dir)
-    got = _GRP_CACHE.get(key)
-    if got is None:
-        th = _documents(spark, sf_dir).select(
-            "doc_id", F.md5("text").alias("th")
+    th = _documents(spark, sf_dir).select("doc_id", F.md5("text").alias("th"))
+    is_rep = F.col("doc_id") == F.col("gid")
+    obs = Observation()
+    m = (
+        th.select(
+            "doc_id", F.min("doc_id").over(Window.partitionBy("th")).alias("gid")
         )
-        is_rep = F.col("doc_id") == F.col("gid")
-        obs = Observation()
-        m = (
-            th.select(
-                "doc_id", F.min("doc_id").over(Window.partitionBy("th")).alias("gid")
-            )
-            .observe(obs, F.count_if(is_rep).alias("reps"))
-            .localCheckpoint(eager=True)
-        )
-        n = _observed(obs, "reps", lambda: m.where(is_rep).count())
-        got = _GRP_CACHE[key] = (m, n)
-    return got
+        .observe(obs, F.count_if(is_rep).alias("reps"))
+        .localCheckpoint(eager=True)
+    )
+    return m, _observed(obs, "reps", lambda: m.where(is_rep).count())
 
 
 def _text_groups(spark, sf_dir):
@@ -405,75 +375,70 @@ def _rep_docs(spark, sf_dir):
     """The documents table restricted to text-group representatives."""
     m = _text_groups(spark, sf_dir)
     rep_ids = m.where(F.col("doc_id") == F.col("gid")).select("doc_id")
-    if _rep_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS:
-        rep_ids = F.broadcast(rep_ids)
+    rep_ids = bounded_broadcast(rep_ids, _rep_count(spark, sf_dir))
     return _documents(spark, sf_dir).join(rep_ids, "doc_id", "left_semi")
 
 
+@memo_artifact
 def _rep_signature_df(spark, sf_dir):
     """Signature table over the group representatives (1 row per distinct
     text that has >= 1 shingle: doc_id, band0..3 and the distinct shingle
     set ``sh``), memoized + checkpointed."""
-    key = memo_key(spark, sf_dir)
-    cached = _REPSIG_CACHE.get(key)
-    if cached is not None:
-        return cached
     reps = _rep_docs(spark, sf_dir)
-    out = _signatures_of(reps, shingle_set=True).localCheckpoint(eager=True)
-    _REPSIG_CACHE[key] = out
-    return out
+    return _signatures_of(reps, shingle_set=True).localCheckpoint(eager=True)
 
 
-def _expand_group_pairs(spark, sf_dir, gpairs, payload_cols):
-    """Fan group-pair verdicts (ga, gb, *payload) back out to doc pairs
-    (da < db, *payload). ``gpairs`` must hold ga < gb over distinct group
-    pairs; every unordered cross-group doc pair appears exactly once and
-    least/greatest restores the da < db order (groups partition docs)."""
-    m = _text_groups(spark, sf_dir)
+def _fan_out(m, n_docs, cross, intra=None, m_b=None):
+    """Fan group-level verdicts back out to (da < db, *payload) doc pairs.
+
+    ``m`` is a (doc_id, gid) map of ``n_docs`` rows. Each verified
+    ``cross`` row (ga, gb, *payload) joins once to each side of the map —
+    ``m`` for ga, ``m_b`` (default ``m``) for gb — both broadcast under
+    the cap, so the fanned-out stream is produced map-side (a checkpointed
+    map has no size estimate: without the hint a composed plan such as d35
+    falls back to sort-merge and re-exchanges the expanded stream). With
+    ga < gb over distinct group pairs every unordered cross-group doc pair
+    appears once, and least/greatest restores da < db (groups partition
+    docs).
+
+    ``intra`` (gid, *payload) adds the member pairs inside each listed
+    group, whose verdict is fixed by identity. A per-group ``intra`` first
+    joins the map to get one probe row per member doc; a per-doc one
+    (with a ``doc_id`` column: every doc of its group) is the probe
+    itself. Each probe row then joins the map once more."""
     ma = m.select(F.col("gid").alias("ga"), F.col("doc_id").alias("xa"))
-    mb = m.select(F.col("gid").alias("gb"), F.col("doc_id").alias("xb"))
-    # the doc→group map is 2 longs/doc: broadcast it into the expansion
-    # joins when it fits (see d03b/d22) so the fanned-out pair stream is
-    # produced map-side; past the cap the joins shuffle (AQE skew-split
-    # applies there)
-    if _doc_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS:
-        ma, mb = F.broadcast(ma), F.broadcast(mb)
-    return (
-        gpairs.join(ma, "ga")
-        .join(mb, "gb")
-        .select(
-            F.least("xa", "xb").alias("da"),
-            F.greatest("xa", "xb").alias("db"),
-            *payload_cols,
-        )
+    mb = (m if m_b is None else m_b).select(
+        F.col("gid").alias("gb"), F.col("doc_id").alias("xb")
     )
-
-
-def _intra_group_pairs(spark, sf_dir, groups, payload_cols):
-    """All (da < db) doc pairs inside each group of ``groups`` (gid,
-    *payload) — the identical-text pairs, which carry a constant payload
-    (jaccard 1.0 / shared = the group's own shingle stats)."""
-    m = _text_groups(spark, sf_dir)
-    ma = m.select(F.col("gid"), F.col("doc_id").alias("xa"))
-    mb = m.select(F.col("gid"), F.col("doc_id").alias("xb"))
-    if _doc_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS:
-        ma, mb = F.broadcast(ma), F.broadcast(mb)
-    return (
-        groups.join(ma, "gid")
-        .join(mb, "gid")
+    ma, mb = bounded_broadcast(ma, n_docs), bounded_broadcast(mb, n_docs)
+    out = cross.join(ma, "ga").join(mb, "gb").select(
+        F.least("xa", "xb").alias("da"),
+        F.greatest("xa", "xb").alias("db"),
+        *cross.columns[2:],
+    )
+    if intra is None:
+        return out
+    payload = [c for c in intra.columns if c not in ("gid", "doc_id")]
+    probe = intra.withColumnRenamed("gid", "ga")
+    if "doc_id" in intra.columns:
+        probe = probe.withColumnRenamed("doc_id", "xa")
+    else:
+        probe = probe.join(ma, "ga")
+    pairs = (
+        probe.join(mb.withColumnRenamed("gb", "ga"), "ga")
         .filter(F.col("xa") < F.col("xb"))
-        .select(
-            F.col("xa").alias("da"), F.col("xb").alias("db"), *payload_cols
-        )
+        .select(F.col("xa").alias("da"), F.col("xb").alias("db"), *payload)
     )
+    return out.unionByName(pairs)
 
 
 # --- d02b: LSH candidate pairs + exact-Jaccard verification ---------------
-def _lsh_candidates(sig, diagonal: bool = False, broadcast: bool = False):
+def _lsh_candidates(sig, diagonal: bool = False, n_reps=None):
     """Distinct (ga, gb) rep pairs that share at least one full band key,
     ga < gb (ga <= gb with ``diagonal``): one bucket self-join over the
     union of the N_BANDS band columns, so candidacy never goes quadratic.
-    ``broadcast`` broadcasts one bucket side (N_BANDS rows per rep)."""
+    Given the rep count ``n_reps``, one bucket side (N_BANDS rows per rep)
+    is broadcast under the cap."""
     buckets = None
     for b in range(N_BANDS):
         one = sig.select(
@@ -481,7 +446,9 @@ def _lsh_candidates(sig, diagonal: bool = False, broadcast: bool = False):
         )
         buckets = one if buckets is None else buckets.union(one)
     a = buckets.alias("a")
-    bb = F.broadcast(buckets.alias("b")) if broadcast else buckets.alias("b")
+    bb = buckets.alias("b")
+    if n_reps is not None:
+        bb = bounded_broadcast(bb, N_BANDS * n_reps)
     ga, gb = F.col("a.doc_id"), F.col("b.doc_id")
     return (
         a.join(
@@ -500,22 +467,24 @@ def _verify_pairs(cand, sig):
     reps' distinct shingle sets in ``sig`` (:func:`_rep_signature_df`):
     inter = |sa ∩ sb|, jaccard = inter / (|sa| + |sb| - inter). The sets
     hold the shingle strings themselves, so this is the oracle's Jaccard
-    exactly; pairs with no shared shingle are dropped, as the oracle's
-    inner join on the shared-shingle count drops them. Cost is |cand| ×
-    shingles per text — no shingle self-join, whose cost is Σ df(s)²."""
+    exactly; pairs with no shared shingle are dropped (by the cheaper
+    ``arrays_overlap``, so the intersection is built once per kept pair),
+    as the oracle's inner join on the shared-shingle count drops them.
+    Cost is |cand| × shingles per text — no shingle self-join, whose cost
+    is Σ df(s)²."""
     sa = sig.select(F.col("doc_id").alias("ga"), F.col("sh").alias("sa"))
     sb = sig.select(F.col("doc_id").alias("gb"), F.col("sh").alias("sb"))
     inter = F.col("inter")
     return (
         cand.join(sa, "ga")
         .join(sb, "gb")
+        .filter(F.arrays_overlap("sa", "sb"))
         .select(
             "ga",
             "gb",
             F.size(F.array_intersect("sa", "sb")).alias("inter"),
             (F.size("sa") + F.size("sb")).alias("n"),
         )
-        .filter(inter > 0)
         .select("ga", "gb", _r(inter / (F.col("n") - inter), 6).alias("jaccard"))
     )
 
@@ -529,17 +498,14 @@ def d02b_minhash_lsh_pairs(spark, sf_dir):
     # that verification reads.
     sig = _rep_signature_df(spark, sf_dir)
     gpairs = _verify_pairs(_lsh_candidates(sig), sig)
-    cross = _expand_group_pairs(spark, sf_dir, gpairs, [F.col("jaccard")])
     # intra-group pairs: identical texts share every band key and every
     # shingle, so the per-doc pipeline always paired them at jaccard
     # exactly 1.0 (inter = na = nb) — PROVIDED the text has >= 1 shingle
     # (docs under SHINGLE_W words produce no signature and never pair).
     # Restrict to groups whose rep carries a signature.
-    with_sig = sig.select(F.col("doc_id").alias("gid"))
-    intra = _intra_group_pairs(
-        spark, sf_dir, with_sig, [F.lit(1.0).alias("jaccard")]
-    )
-    return cross.unionByName(intra)
+    with_sig = sig.select(F.col("doc_id").alias("gid"), F.lit(1.0).alias("jaccard"))
+    m = _text_groups(spark, sf_dir)
+    return _fan_out(m, _doc_count(spark, sf_dir), gpairs, with_sig)
 
 
 def _d02b_sql() -> str:
@@ -657,9 +623,6 @@ SELECT doc_id, {_simhash_value_sql()} AS simhash FROM sums
 
 # --- d03b: SimHash near-dup pairs via byte-band blocking ------------------
 HAMMING_MAX = 3
-#: group-pair spread factor (× defaultParallelism) ahead of the expansion
-#: joins — see the comment at the repartition site
-D03B_EXPAND_PARTS = 4
 
 
 def d03b_simhash_pairs(spark, sf_dir):
@@ -730,56 +693,23 @@ def d03b_simhash_pairs(spark, sf_dir):
     # |group_a|×|group_b| pairs) and AQE coalesces the tiny gpairs exchange
     # into a handful of tasks — a few heavy group pairs then serialize the
     # whole expansion (measured: one 14.5s straggler vs 0.6s median on
-    # d35's critical path). Spread the rows round-robin over plenty of
-    # tasks first so heavy rows land apart (guide §2.5: skew —
+    # d35's critical path). Spread the rows round-robin over 4× the
+    # parallelism first so heavy rows land apart (guide §2.5: skew —
     # split/spread the hot keys); the exchange itself is distinct-value
     # pairs, orders of magnitude smaller than its fan-out.
-    if D03B_EXPAND_PARTS:
-        gpairs = gpairs.repartition(
-            D03B_EXPAND_PARTS * spark.sparkContext.defaultParallelism
-        )
+    par = spark.sparkContext.defaultParallelism
+    gpairs = gpairs.repartition(4 * par)
     # m leaves the window hash-partitioned by SIMHASH — i.e. every member
-    # of a big group sits in ONE partition, so the intra fan-out below
-    # (each probe row emits |group| rows) would be produced by a handful
-    # of straggler tasks (measured: d35's expansion stage ran at ~3-way
+    # of a big group sits in ONE partition, so the intra fan-out (each
+    # probe row emits |group| rows) would be produced by a handful of
+    # straggler tasks (measured: d35's expansion stage ran at ~3-way
     # effective parallelism). Spread the PROBE rows by doc_id first — the
     # per-row output is then Σ|group| per task, uniform (guide §2.5).
-    m_spread = m.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    ma = m_spread.select(F.col("gid").alias("ga"), F.col("doc_id").alias("xa"))
-    mb = m_spread.select(F.col("gid").alias("gb"), F.col("doc_id").alias("xb"))
-    # The doc→group map is 2 longs/doc; broadcast it into the expansion
-    # joins whenever it fits (memoized count, same cap as d02b's reduction)
-    # so the EXPANDED pair stream — orders of magnitude bigger than its
-    # inputs — is produced map-side and never re-shuffled. Without the
-    # explicit hint the map sits behind a checkpoint (unknown stats) and a
-    # composed plan (d35) falls back to sort-merge, re-exchanging the full
-    # 157M-row intermediate. Past the cap the joins shuffle — correct,
-    # just not broadcast-accelerated (AQE skew-split applies there).
-    small = _doc_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS
-    build_a = F.broadcast(ma) if small else ma
-    build_b = F.broadcast(mb) if small else mb
-    cross = (
-        gpairs.join(build_a, "ga")
-        .join(build_b, "gb")
-        .select(
-            F.least("xa", "xb").alias("da"),
-            F.greatest("xa", "xb").alias("db"),
-            "hamming",
-        )
+    # Every doc probes (intra pairs are hamming 0 by identity).
+    m_spread = m.repartition(par, "doc_id").select(
+        "gid", "doc_id", F.lit(0).alias("hamming")
     )
-    intra = (
-        ma.join(
-            build_b.withColumnRenamed("gb", "ga"),
-            "ga",
-        )
-        .filter(F.col("xa") < F.col("xb"))
-        .select(
-            F.col("xa").alias("da"),
-            F.col("xb").alias("db"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
-    )
-    return cross.unionByName(intra)
+    return _fan_out(m_spread, _doc_count(spark, sf_dir), gpairs, m_spread)
 
 
 def _d03b_sql() -> str:
@@ -823,13 +753,14 @@ def d04_ngram_jaccard(spark, sf_dir, rep_shingles=None):
     # contains s (each rep row stands for gn identical docs) — identical
     # to the per-doc count. The group-size table is 2 longs/group;
     # broadcast it under the cap.
-    gsz = gsize.withColumnRenamed("gid", "doc_id")
-    if _rep_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS:
-        gsz = F.broadcast(gsz)
-    # drop ultra-common shingles via ANTI-join against the COMMON set: the
-    # common side (df > cap) is tiny and bounded at any corpus size, while
-    # a broadcast of the rare vocabulary would grow with the corpus
-    # (guide §3.1: broadcast the side that stays small).
+    gsz = bounded_broadcast(
+        gsize.withColumnRenamed("gid", "doc_id"), _rep_count(spark, sf_dir)
+    )
+    # drop ultra-common shingles via ANTI-join against the COMMON set, an
+    # ungated broadcast: each common shingle is in more than FREQ_CAP docs,
+    # so |common| <= Σ df / FREQ_CAP. That still grows with the corpus,
+    # but at 1/FREQ_CAP the rate of the rare vocabulary, which can reach
+    # Σ df itself (guide §3.1: broadcast the smaller side).
     common = (
         sh.join(gsz, "doc_id")
         .groupBy("s")
@@ -866,9 +797,6 @@ def d04_ngram_jaccard(spark, sf_dir, rep_shingles=None):
             ).alias("jaccard"),
         )
     )
-    cross = _expand_group_pairs(
-        spark, sf_dir, gpairs, [F.col("shared"), F.col("jaccard")]
-    )
     # intra-group pairs: identical texts share exactly their own rare
     # shingles, so the per-doc join emitted them with shared = |rare(text)|
     # and jaccard = shared / (2n - shared) — but only when the text has
@@ -887,10 +815,7 @@ def d04_ngram_jaccard(spark, sf_dir, rep_shingles=None):
             F.col("shared") / (F.col("n") + F.col("n") - F.col("shared")), 6
         ).alias("jaccard"),
     )
-    intra = _intra_group_pairs(
-        spark, sf_dir, intra_g, [F.col("shared"), F.col("jaccard")]
-    )
-    return cross.unionByName(intra)
+    return _fan_out(m, _doc_count(spark, sf_dir), gpairs, intra_g)
 
 
 _D04_SQL = f"""
@@ -921,21 +846,14 @@ FROM inter JOIN sizes s1 ON da = s1.doc_id JOIN sizes s2 ON db = s2.doc_id
 D12_JACCARD_TAU = 0.5
 
 
-#: (applicationId, normalized sf_dir) → checkpointed labels DF. The
-#: component labels are recomputed identically by every caller (d12 row,
-#: d34 keep-best, p01/p02 pipelines — up to four times in one driver run);
-#: the result is a localCheckpoint'd table of duplicate-cluster members
-#: (small), valid for the life of the SparkSession, and the input parquet
-#: is immutable per sf_dir — so memoizing is safe and cuts the repeated
-#: 20-round label-propagation cost.
-_D12_CACHE: dict = register_cache({})
-
-
+# Memoized: the component labels are recomputed identically by every
+# caller (d12 row, d34 keep-best, p01/p02 pipelines — up to four times in
+# one driver run); the result is a localCheckpoint'd table of
+# duplicate-cluster members (small), valid for the life of the
+# SparkSession, and the input parquet is immutable per sf_dir — so
+# memoizing is safe and cuts the repeated 20-round label-propagation cost.
+@memo_artifact
 def d12_dedup_components(spark, sf_dir):
-    key = memo_key(spark, sf_dir)
-    cached = _D12_CACHE.get(key)
-    if cached is not None:
-        return cached
     pairs = (
         d02b_minhash_lsh_pairs(spark, sf_dir)
         .filter(F.col("jaccard") >= D12_JACCARD_TAU)
@@ -984,11 +902,9 @@ def d12_dedup_components(spark, sf_dir):
             "connected-components did not converge within 20 rounds "
             f"({changed} labels still changing) — raise the round cap"
         )
-    out = labels.select(
+    return labels.select(
         F.col("node").alias("doc_id"), F.col("lbl").alias("component_id")
     )
-    _D12_CACHE[key] = out
-    return out
 
 
 def _d12_sql() -> str:
@@ -1080,10 +996,11 @@ def d22_editdist_neardup(spark, sf_dir):
     from pyspark.sql import Window
 
     p = _d22_prefixed(spark, sf_dir)
-    # block-cap via ANTI-join against the (tiny, pathological-only) set of
-    # over-cap blocks instead of broadcasting every surviving block key —
-    # the survivor set grows with the corpus, the dropped set does not
-    # (same inversion as d04's frequency cap; identical surviving rows)
+    # block-cap via ANTI-join against the set of over-cap blocks, an
+    # ungated broadcast: each bad block holds more than D22_BLOCK_CAP docs,
+    # so |bad| <= docs / D22_BLOCK_CAP, while the surviving block keys can
+    # number one per doc (same inversion as d04's frequency cap; identical
+    # surviving rows)
     bad = (
         p.groupBy("bk")
         .agg(F.count("*").alias("bn"))
@@ -1096,12 +1013,11 @@ def d22_editdist_neardup(spark, sf_dir):
     # near-dup-heavy corpus (the regime this operator exists for) has many
     # docs per identical prefix — at the 10×-replicated sf1 synth that is
     # 100× fewer DP cells for the same output. Shape: group docs by prefix
-    # (window min = group id, one (bk, pfx) shuffle), DP over rep pairs
-    # (ga <= gb covers intra-group pairs, which are dist 0 by identity),
-    # then fan the group-pair verdicts back out to doc pairs with two
-    # gid-equi-joins. Doc-pair set and dist values are provably identical:
-    # prefixes partition docs, every same-block unordered doc pair appears
-    # in exactly one group pair, and least/greatest restores da < db.
+    # (window min = group id, one (bk, pfx) shuffle), DP over distinct rep
+    # pairs ga < gb, then fan the verdicts back out to doc pairs; pairs
+    # inside one prefix group are dist 0 by identity. Doc-pair set and
+    # dist values are provably identical: prefixes partition docs, and
+    # every same-block unordered doc pair is in exactly one group pair.
     m = p.withColumn(
         "gid", F.min("doc_id").over(Window.partitionBy("bk", "pfx"))
     )
@@ -1110,7 +1026,7 @@ def d22_editdist_neardup(spark, sf_dir):
     rb = reps.select("bk", F.col("gid").alias("gb"), F.col("pfx").alias("pb"))
     rep_pairs = (
         ra.join(rb, "bk")
-        .filter(F.col("ga") <= F.col("gb"))
+        .filter(F.col("ga") < F.col("gb"))
         .select(
             "ga",
             "gb",
@@ -1118,26 +1034,8 @@ def d22_editdist_neardup(spark, sf_dir):
         )
         .filter(F.col("dist") >= 0)
     )
-    ma = m.select(F.col("gid").alias("ga"), F.col("doc_id").alias("xa"))
-    mb = m.select(F.col("gid").alias("gb"), F.col("doc_id").alias("xb"))
-    # see d03b: broadcast the 2-long-per-doc group map into the expansion
-    # joins when it fits, so the fanned-out pair stream is produced
-    # map-side instead of being re-exchanged by a sort-merge fallback
-    if _doc_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS:
-        ma, mb = F.broadcast(ma), F.broadcast(mb)
-    return (
-        rep_pairs.join(ma, "ga")
-        .join(mb, "gb")
-        # distinct groups: every cross pair is one unordered doc pair;
-        # same group (ga == gb): order the pair explicitly to avoid the
-        # (x,y)/(y,x) double and the x=x self-pair
-        .filter((F.col("ga") < F.col("gb")) | (F.col("xa") < F.col("xb")))
-        .select(
-            F.least("xa", "xb").alias("da"),
-            F.greatest("xa", "xb").alias("db"),
-            "dist",
-        )
-    )
+    intra = m.select("gid", "doc_id", F.lit(0).alias("dist"))
+    return _fan_out(m, _doc_count(spark, sf_dir), rep_pairs, intra)
 
 
 _D22_SQL = f"""
@@ -1182,8 +1080,8 @@ SUITE["d04b_ngram_editdist"] = QueryCase(
 # a light paraphrase of an eval doc shares no long exact gram but has high
 # shingle Jaccard. Same signature/band machinery as d02b, restricted to
 # train x eval pairs at the end. Scale shape: the band join spans all
-# representatives and broadcasts its bucket side only under
-# 4·reps <= SEMIJOIN_MAX_BROADCAST_ROWS (past that it shuffles);
+# representatives and broadcasts its bucket side (N_BANDS rows per rep)
+# only under the broadcast cap (past that it shuffles);
 # verification reads the candidates' shingle sets, so its cost is bounded
 # by |candidates|, not by the corpus. (The synthetic 20% split here is far
 # larger than any real benchmark; it exists so the certified output is
@@ -1198,37 +1096,34 @@ def d26_fuzzy_decontaminate(spark, sf_dir):
     # (doc_id % MOD). So: band-join and verify once per unordered REP pair
     # — INCLUDING the diagonal ga == gb, since a train doc and an eval doc
     # may share one exact text (jaccard 1.0) — then expand each verdict to
-    # (train member × eval member) in both directions through the group
-    # map.
+    # (train member × eval member) through the group map.
     sig = _rep_signature_df(spark, sf_dir)  # checkpointed + memoized
-    # the bucket table holds N_BANDS rows per rep: broadcast it only under
-    # the cap (past it the band join shuffles)
-    fits_buckets = N_BANDS * _rep_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS
-    gcand = _lsh_candidates(sig, diagonal=True, broadcast=fits_buckets)
+    gcand = _lsh_candidates(sig, diagonal=True, n_reps=_rep_count(spark, sf_dir))
     gpairs = _verify_pairs(gcand, sig)
-    # expansion: train members of one group × eval members of the other,
-    # both directions for distinct groups, once for the diagonal
+    # one generator turns each verdict into both (train group, eval group)
+    # directions, the diagonal once; then one join to the train map and one
+    # to the eval map
+    fwd = F.struct(F.col("ga"), F.col("gb"))
+    rev = F.struct(F.col("gb").alias("ga"), F.col("ga").alias("gb"))
+    both = gpairs.select(
+        F.inline(F.array_distinct(F.array(fwd, rev))), "jaccard"
+    )
+    def is_eval(c):
+        return F.col(c) % FUZZY_EVAL_MOD == FUZZY_EVAL_REM
+
     m = _text_groups(spark, sf_dir)
-    is_eval = F.col("doc_id") % FUZZY_EVAL_MOD == FUZZY_EVAL_REM
-    mt = m.where(~is_eval).select("gid", F.col("doc_id").alias("train_id"))
-    me = m.where(is_eval).select("gid", F.col("doc_id").alias("eval_id"))
-    fits = _doc_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS
-
-    def _bc(df):
-        return F.broadcast(df) if fits else df
-
-    fwd = (
-        gpairs.join(_bc(mt.withColumnRenamed("gid", "ga")), "ga")
-        .join(_bc(me.withColumnRenamed("gid", "gb")), "gb")
-        .select("train_id", "eval_id", "jaccard")
+    pairs = _fan_out(
+        m.where(~is_eval("doc_id")),
+        _doc_count(spark, sf_dir),
+        both,
+        m_b=m.where(is_eval("doc_id")),
     )
-    rev = (
-        gpairs.filter(F.col("ga") < F.col("gb"))
-        .join(_bc(mt.withColumnRenamed("gid", "gb")), "gb")
-        .join(_bc(me.withColumnRenamed("gid", "ga")), "ga")
-        .select("train_id", "eval_id", "jaccard")
+    # each (da < db) pair holds one train and one eval doc
+    return pairs.select(
+        F.when(is_eval("da"), F.col("db")).otherwise(F.col("da")).alias("train_id"),
+        F.when(is_eval("da"), F.col("da")).otherwise(F.col("db")).alias("eval_id"),
+        "jaccard",
     )
-    return fwd.unionByName(rev)
 
 
 def _d26_sql() -> str:
@@ -1425,11 +1320,11 @@ def d35_ensemble_neardup(spark, sf_dir):
     rsim = _simhashes_of(_rep_docs(spark, sf_dir)).withColumnRenamed(
         "doc_id", "gid"
     )
-    fits = _doc_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS
-    doc_sim = m.join(F.broadcast(rsim) if fits else rsim, "gid").select(
+    n_docs = _doc_count(spark, sf_dir)
+    doc_sim = m.join(bounded_broadcast(rsim, n_docs), "gid").select(
         "doc_id", "simhash"
     )
-    sim_b = F.broadcast(doc_sim) if fits else doc_sim
+    sim_b = bounded_broadcast(doc_sim, n_docs)
     hits = (
         small.select("da", "db")
         .join(sim_b.select(F.col("doc_id").alias("da"), F.col("simhash").alias("ha")), "da")
@@ -1443,7 +1338,7 @@ def d35_ensemble_neardup(spark, sf_dir):
     # is 1 row/doc, so `hits` is per-pair unique and the left join below
     # adds the simhash bit exactly once.
     agg = small.join(
-        F.broadcast(hits) if fits else hits, ["da", "db"], "left"
+        bounded_broadcast(hits, n_docs), ["da", "db"], "left"
     ).select(
         "da",
         "db",

@@ -34,6 +34,7 @@ import hashlib
 from pyspark.sql import functions as F
 
 from datafusion_table_providers_spark.core.case import QueryCase
+from datafusion_table_providers_spark.core.memo import memo_artifact
 from datafusion_table_providers_spark.operators.relational import _r, _rsql, _t
 
 N_QUERIES = 5
@@ -691,29 +692,15 @@ def _km_assign(df, cents):
     return with_d.select("vec_id", "iv", cid.alias("cid"))
 
 
-#: (applicationId, sf_dir) → memoized heavy artifacts, one computation per
-#: session (same discipline as dedup._SIG_CACHE): the Lloyd's assignment
-#: (collected-and-iterated, used by d17 AND d20 in one window row), the PQ
-#: codebook (a driver-side list collected per call otherwise), and the
-#: checkpointed PQ codes (the giant-codegen encode stage, consumed by
-#: d18/d18b/d33 — three times in the d16b row).
-from datafusion_table_providers_spark.core.memo import memo_key as _memo_key
-from datafusion_table_providers_spark.core.memo import register_cache
-
-_KM_CACHE: dict = register_cache({})
-_PQ_CB_CACHE: dict = register_cache({})
-_PQ_ENC_CACHE: dict = register_cache({})
-#: vec_id → per-segment quantized query vectors (filled by _pq_codebook)
-_PQ_QSEG_CACHE: dict = register_cache({})
-
-
+# Memoized heavy artifacts, one computation per session (core/memo.py):
+# the Lloyd's assignment (collected-and-iterated, used by d17 AND d20 in one
+# window row), the PQ codebook (a driver-side list collected per call
+# otherwise), and the checkpointed PQ codes (the giant-codegen encode
+# stage, consumed by d18/d18b/d33 — three times in the d16b row).
+@memo_artifact
 def _km_fit_assign(spark, sf_dir):
     """Train KM_ITERS rounds of integer Lloyd's and return the final
     per-vector assignment: (vec_id, iv, cid)."""
-    key = _memo_key(spark, sf_dir)
-    cached = _KM_CACHE.get(key)
-    if cached is not None:
-        return cached
     q = _km_quantized(spark, sf_dir).localCheckpoint(eager=True)
     cents = [
         r.iv for r in q.filter(F.col("vec_id") < KM_K).orderBy("vec_id").collect()
@@ -736,9 +723,7 @@ def _km_fit_assign(spark, sf_dir):
             (r.cid, [p.c for p in r.pairs]) for r in rows
         )
         cents = [new_cents.get(i, cents[i]) for i in range(KM_K)]
-    out = _km_assign(q, cents).localCheckpoint(eager=True)
-    _KM_CACHE[key] = out
-    return out
+    return _km_assign(q, cents).localCheckpoint(eager=True)
 
 
 def d17_kmeans_clusters(spark, sf_dir):
@@ -939,17 +924,13 @@ PQ_NQ = 8
 PQ_TOPK = 10
 
 
+@memo_artifact
 def _pq_codebook(spark, sf_dir):
-    """cb[m][k] = segment m of quantized vector k (python list of longs).
-
-    The same collect also caches the ADC QUERY segments (the queries are
-    the first PQ_NQ vectors, a subset of the PQ_K codebook vectors) keyed
-    by actual vec_id — `_adc_scored` precomputes its distance lookup table
-    from them without a second job."""
-    key = _memo_key(spark, sf_dir)
-    cached = _PQ_CB_CACHE.get(key)
-    if cached is not None:
-        return cached
+    """(cb, qsegs): cb[m][k] = segment m of quantized vector k (python list
+    of longs), and qsegs the ADC QUERY segments from the same collect (the
+    queries are the first PQ_NQ vectors, a subset of the PQ_K codebook
+    vectors) keyed by actual vec_id — `_adc_scored` precomputes its
+    distance lookup table from them without a second job."""
     rows = (
         _km_quantized(spark, sf_dir)
         .filter(F.col("vec_id") < PQ_K)
@@ -960,18 +941,17 @@ def _pq_codebook(spark, sf_dir):
         [list(r.iv[m * PQ_SEG : (m + 1) * PQ_SEG]) for r in rows]
         for m in range(PQ_M)
     ]
-    _PQ_QSEG_CACHE[key] = {
+    qsegs = {
         r.vec_id: [
             list(r.iv[m * PQ_SEG : (m + 1) * PQ_SEG]) for m in range(PQ_M)
         ]
         for r in rows
         if r.vec_id < PQ_NQ
     }
-    _PQ_CB_CACHE[key] = cb
-    return cb
+    return cb, qsegs
 
 
-def _adc_scored(spark, sf_dir, cb, enc):
+def _adc_scored(spark, sf_dir):
     """(qid, cid, adist) — ADC distances via a driver-precomputed lookup
     table.
 
@@ -986,7 +966,8 @@ def _adc_scored(spark, sf_dir, cb, enc):
     expression tree the dominant driver-side plan-analysis cost of the
     d16b merged row (~3.7s/build at any SF). Same exact integer distances,
     same tie-breaks."""
-    qsegs = _PQ_QSEG_CACHE[_memo_key(spark, sf_dir)]
+    cb, qsegs = _pq_codebook(spark, sf_dir)
+    enc = _pq_encoded(spark, sf_dir)
     lut = []
     for m in range(PQ_M):
         flat = []
@@ -1039,7 +1020,8 @@ def _int_dist(a, b):
     )
 
 
-def _pq_encoded(spark, sf_dir, cb):
+@memo_artifact
+def _pq_encoded(spark, sf_dir):
     """vec_id, codes array<int>[PQ_M], recon_err (exact int distance).
 
     The per-segment argmin is computed over an ARRAY of the PQ_K codebook
@@ -1051,14 +1033,8 @@ def _pq_encoded(spark, sf_dir, cb):
     Memoized + checkpointed; plan assertions must target
     :func:`_pq_encode_plan_df` (the raw builder) — the checkpointed result
     presents as a bare ExistingRDD scan with nothing left to assert."""
-    cb_key = tuple(tuple(tuple(seg) for seg in m) for m in cb)
-    key = (*_memo_key(spark, sf_dir), cb_key)
-    cached = _PQ_ENC_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = _pq_encode_plan_df(spark, sf_dir, cb).localCheckpoint(eager=True)
-    _PQ_ENC_CACHE[key] = out
-    return out
+    cb = _pq_codebook(spark, sf_dir)[0]
+    return _pq_encode_plan_df(spark, sf_dir, cb).localCheckpoint(eager=True)
 
 
 def _pq_encode_plan_df(spark, sf_dir, cb):
@@ -1102,15 +1078,13 @@ def _pq_encode_plan_df(spark, sf_dir, cb):
 
 
 def d18_pq_encode(spark, sf_dir):
-    return _pq_encoded(spark, sf_dir, _pq_codebook(spark, sf_dir))
+    return _pq_encoded(spark, sf_dir)
 
 
 def d18b_pq_adc(spark, sf_dir):
     """Asymmetric-distance top-k: query-vs-codebook distances precomputed
     driver-side (see _adc_scored), candidates scored by code lookup."""
-    cb = _pq_codebook(spark, sf_dir)
-    enc = _pq_encoded(spark, sf_dir, cb)
-    scored = _adc_scored(spark, sf_dir, cb, enc)
+    scored = _adc_scored(spark, sf_dir)
     from pyspark.sql import Window
 
     w = Window.partitionBy("qid").orderBy(F.asc("adist"), F.asc("cid"))
@@ -1248,12 +1222,10 @@ RR_TOPK = 10
 
 
 def d33_pq_rerank(spark, sf_dir):
-    cb = _pq_codebook(spark, sf_dir)
-    enc = _pq_encoded(spark, sf_dir, cb)
     vecs = _km_quantized(spark, sf_dir)
     # stage 1: ADC shortlist from the driver-precomputed lookup table
     # (shared with d18b — see _adc_scored)
-    scored = _adc_scored(spark, sf_dir, cb, enc)
+    scored = _adc_scored(spark, sf_dir)
     from pyspark.sql import Window
 
     wa = Window.partitionBy("qid").orderBy(F.asc("adist"), F.asc("cid"))

@@ -67,7 +67,7 @@ def test_pq_encode_map_only_and_codes_valid(spark):
     df = d18_pq_encode(spark, SF)
     # the memoized result is checkpointed (plan = bare ExistingRDD scan);
     # the map-only contract must be asserted on the RAW builder's plan
-    plan = _plan(_pq_encode_plan_df(spark, SF, _pq_codebook(spark, SF)))
+    plan = _plan(_pq_encode_plan_df(spark, SF, _pq_codebook(spark, SF)[0]))
     assert "Exchange" not in plan, (
         "PQ encode is one narrow pass over the corpus (codebook is a "
         "broadcast literal); a shuffle means the plan broke"
