@@ -32,9 +32,6 @@ TPCH_TABLES = (
     "embeddings",
 )
 
-#: Small dimension tables — always broadcast-join these against facts.
-DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
-
 
 def load_tables(
     spark: SparkSession,

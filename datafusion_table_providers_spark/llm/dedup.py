@@ -39,6 +39,7 @@ from datafusion_table_providers_spark.core.case import QueryCase, utc
 from datafusion_table_providers_spark.core.memo import memo_artifact
 from datafusion_table_providers_spark.core.types import arrow_to_spark_schema
 from datafusion_table_providers_spark.operators.relational import _r, _rsql, _t
+from datafusion_table_providers_spark.session import bounded_broadcast
 
 N_HASHES = 16
 N_BANDS = 4
@@ -244,24 +245,7 @@ SELECT doc_id, {bands} FROM sig
 """
 
 
-# --- shared corpus reads and broadcast gate --------------------------------
-#: row cap on every gated F.broadcast() below: F.broadcast() bypasses
-#: autoBroadcastJoinThreshold, and a table that grows with the corpus
-#: (a doc→group map, a rep bucket table) would at 100 TB be billions of
-#: rows — far past the 8 GB / 512M-row broadcast limit. Above this row
-#: count the join shuffles instead: same rows, no driver/executor-resident
-#: hash relation.
-SEMIJOIN_MAX_BROADCAST_ROWS = int(
-    os.environ.get("SPARK_GRAFT_SEMIJOIN_MAX_BROADCAST_ROWS", "20000000")
-)
-
-
-def bounded_broadcast(df, n_rows: int):
-    """``F.broadcast(df)`` when its ``n_rows`` bound fits under
-    SEMIJOIN_MAX_BROADCAST_ROWS (read at call time), else ``df``."""
-    return F.broadcast(df) if n_rows <= SEMIJOIN_MAX_BROADCAST_ROWS else df
-
-
+# --- shared corpus reads -------------------------------------------------
 def _footers(path: str):
     """(row count, Arrow schema) of a local parquet file, or of a directory
     of part files (skipping ``_``/``.`` entries as Spark's file index does),
@@ -1383,7 +1367,7 @@ SUITE["d35_ensemble_neardup"] = QueryCase(
 # source re-hosting another — a licensing/contamination review trigger —
 # while intra-source mass is ordinary crawl redundancy. Pure composition:
 # the certified d02b pair table joined twice against the slim
-# (doc_id, source) projection (broadcast both ways at any corpus size —
+# (doc_id, source) projection (unhinted: the planner picks the sides —
 # the pair table is output-bounded, the label table is 2 columns), then
 # one tiny groupBy on the unordered source pair. Label the pair
 # (least, greatest) so (A,B) and (B,A) accumulate together.

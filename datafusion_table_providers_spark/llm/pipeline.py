@@ -113,7 +113,7 @@ def p02_full_curation(spark, sf_dir):
     deduped = kept.join(dropme, "doc_id", "left_anti")
 
     # decontamination: exclude the eval split itself, then drop any training
-    # doc sharing a DECON_N-gram with it (eval grams broadcast, as in d13).
+    # doc sharing a DECON_N-gram with it, as in d13.
     # Grams come from the shared posexplode+lead builder — the interpreted
     # transform(sequence, ...) HOF form was the §4 bottleneck (see d13).
     from datafusion_table_providers_spark.llm.dedup import _shingles_df
@@ -128,7 +128,7 @@ def p02_full_curation(spark, sf_dir):
     )
     train = deduped.where(F.col("doc_id") % DECON_MOD != 0)
     contaminated = (
-        grams_all.join(F.broadcast(eval_grams), "gram", "left_semi")
+        grams_all.join(eval_grams, "gram", "left_semi")
         .select("doc_id")
         .distinct()
     )
@@ -373,6 +373,8 @@ def p04_training_mix(spark, sf_dir):
     bucket = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
     ).cast("long")
+    # raw hint, allowlisted: mix has one row per distinct source (a data
+    # property, not a build-time count), as in d36
     rep = docs.join(F.broadcast(mix), "source").select(
         "source",
         "n_chars",

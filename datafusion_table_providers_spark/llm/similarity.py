@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from datafusion_table_providers_spark.core.case import QueryCase
 from datafusion_table_providers_spark.core.memo import memo_artifact
 from datafusion_table_providers_spark.operators.relational import _r, _rsql, _t
+from datafusion_table_providers_spark.session import bounded_broadcast
 
 N_QUERIES = 5
 TOP_K = 5
@@ -87,7 +88,9 @@ def d05_knn_bruteforce(spark, sf_dir):
         F.col("v").alias("qv"),
         F.col("nrm").alias("qn"),
     )
-    pairs = e.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("qid"))
+    pairs = e.crossJoin(bounded_broadcast(q, N_QUERIES)).filter(
+        F.col("vec_id") != F.col("qid")
+    )
     scored = pairs.select(
         "qid",
         F.col("vec_id").alias("cid"),
@@ -158,7 +161,7 @@ def d06_lsh_ann(spark, sf_dir):
         F.col("bucket").alias("qbucket"),
     )
     cand = e.join(
-        F.broadcast(q),
+        bounded_broadcast(q, N_QUERIES),
         (F.col("bucket") == F.col("qbucket"))
         & (F.col("vec_id") != F.col("qid")),
     )
@@ -535,7 +538,7 @@ def _cell_rank_df(spark, sf_dir, points):
     )
     from pyspark.sql import Window
 
-    scored = points.crossJoin(F.broadcast(cents)).select(
+    scored = points.crossJoin(bounded_broadcast(cents, N_CELLS)).select(
         "vec_id",
         "v",
         "cent_id",
@@ -564,7 +567,7 @@ def d06b_ivf_ann(spark, sf_dir):
         )
     )
     cand = cells.join(
-        F.broadcast(qprobe),
+        bounded_broadcast(qprobe, N_QUERIES * NPROBE),
         (F.col("cell") == F.col("qcell")) & (F.col("vec_id") != F.col("qid")),
     )
     scored = cand.select(
@@ -991,7 +994,9 @@ def _adc_scored(spark, sf_dir):
         .filter(F.col("vec_id") < PQ_NQ)
         .select(F.col("vec_id").alias("qid"))
     )
-    cand = enc.join(F.broadcast(queries), F.col("vec_id") != F.col("qid"))
+    cand = enc.join(
+        bounded_broadcast(queries, PQ_NQ), F.col("vec_id") != F.col("qid")
+    )
     adist = None
     for m in range(PQ_M):
         lut_lit = F.array(*[F.lit(int(v)) for v in lut[m]]).cast("array<long>")
@@ -1239,8 +1244,8 @@ def d33_pq_rerank(spark, sf_dir):
     )
     cvec = vecs.select(F.col("vec_id").alias("cid"), F.col("iv").alias("civ"))
     ex = (
-        cvec.join(F.broadcast(short), "cid")
-        .join(F.broadcast(qvec), "qid")
+        cvec.join(bounded_broadcast(short, PQ_NQ * RR_SHORTLIST), "cid")
+        .join(bounded_broadcast(qvec, PQ_NQ), "qid")
         .select("qid", "cid", _int_dist(F.col("qiv"), F.col("civ")).alias("edist"))
     )
     we = Window.partitionBy("qid").orderBy(F.asc("edist"), F.asc("cid"))

@@ -493,8 +493,8 @@ def d21_bm25(spark, sf_dir):
     )
     per = (
         tf.join(dl, "doc_id")
-        .join(F.broadcast(dft), "term")
-        .crossJoin(F.broadcast(stats))
+        .join(dft, "term")
+        .crossJoin(stats)
         .select("doc_id", "term", score.alias("s"))
     )
     agg = per.groupBy("doc_id").agg(
@@ -695,7 +695,7 @@ def d27_vocab_stats(spark, sf_dir):
         ),
     )
     total_df = toks.agg(F.count("*").alias("total"))
-    return ranked.crossJoin(F.broadcast(total_df)).select(
+    return ranked.crossJoin(total_df).select(
         "tok",
         "n",
         "rnk",
@@ -911,7 +911,7 @@ def d30_unigram_logprob(spark, sf_dir):
     # identical IEEE expression either way.
     q = F.floor(F.col("total").cast("double") / F.col("n")).cast("long")
     bits = (F.length(F.bin(q)) - F.lit(1)).cast("long")
-    freq_bits = freq.crossJoin(F.broadcast(total)).select(
+    freq_bits = freq.crossJoin(total).select(
         "tok", bits.alias("bits")
     )
     per_doc = toks.join(freq_bits, "tok").groupBy("doc_id").agg(

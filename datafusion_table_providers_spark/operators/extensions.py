@@ -322,7 +322,7 @@ def e08_sketch_bounds(spark, sf_dir):
         F.count("*").alias("n"),
     )
     ranks = (
-        e.join(F.broadcast(stats.select("event_type", "p50a")), "event_type")
+        e.join(stats.select("event_type", "p50a"), "event_type")
         .groupBy("event_type")
         .agg(
             F.sum(
@@ -572,7 +572,7 @@ def e11_heavy_hitters(spark, sf_dir):
     est = summary.groupBy("item").agg(F.sum("est").alias("est"))
     exact = items.groupBy("item").agg(F.count("*").alias("true_n"))
     total = items.agg(F.count("*").alias("n_total"))
-    heavy = exact.crossJoin(F.broadcast(total)).where(
+    heavy = exact.crossJoin(total).where(
         F.col("true_n") * (MG_K + 1) > F.col("n_total")
     )
     out = heavy.join(est, "item", "left")

@@ -5,7 +5,9 @@ are unparsed to remote SQL (crates/common/src/sql/sql_provider_datafusion/
 federation.rs:62-110). Here Spark Catalyst *is* the engine; each builder below
 is the idiomatic DataFrame expression of one capability, written scale-first:
 
-- joins against dimension tables take an explicit ``broadcast()`` hint;
+- joins carry no broadcast hint: Catalyst sizes the parquet dimension
+  tables and aggregates and broadcasts them while they fit, and shuffles
+  what outgrows its threshold;
 - aggregations are expressed so map-side partial aggregation applies;
 - sorts that feed a LIMIT stay as TopK (Spark's TakeOrderedAndProject);
 - every filter/projection is declarative so it reaches the parquet scan.
@@ -129,7 +131,7 @@ FROM lineitem
 def b05_inner_join(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
-    return o.join(F.broadcast(c), o.o_custkey == c.c_custkey, "inner").select(
+    return o.join(c, o.o_custkey == c.c_custkey, "inner").select(
         "o_orderkey", "c_name"
     )
 
@@ -224,7 +226,7 @@ def b08_multi_join_q3(spark, sf_dir):
     # hint would bypass Spark's size check — let AQE promote it to a
     # broadcast from measured stats (it does at bench SFs) and fall back to
     # a shuffle join when it outgrows the threshold at real scale.
-    oc = o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
+    oc = o.join(c, o.o_custkey == c.c_custkey)
     return (
         l.join(oc, l.l_orderkey == oc.o_orderkey)
         .groupBy("l_orderkey", "o_orderdate")
@@ -352,7 +354,7 @@ def b13_scalar_subquery(spark, sf_dir):
     p = _t(spark, sf_dir, "part")
     avg_price = p.agg(F.avg("p_retailprice").alias("avg_rp"))
     return (
-        p.crossJoin(F.broadcast(avg_price))
+        p.crossJoin(avg_price)
         .filter(F.col("p_retailprice") > F.col("avg_rp"))
         .select("p_partkey", "p_retailprice")
     )

@@ -75,6 +75,8 @@ def hot_cold_join(
         return big.join(other, on=key, how=how)
     hot_b = big.filter(F.col(key).isin(hot_keys))
     cold_b = big.filter(~F.col(key).isin(hot_keys))
+    # raw hint, allowlisted: the side holds other's rows for len(hot_keys)
+    # keys, a bound only other's key multiplicity (a data property) sets
     hot = hot_b.join(F.broadcast(other.filter(F.col(key).isin(hot_keys))), on=key, how=how)
     cold = cold_b.join(other.filter(~F.col(key).isin(hot_keys)), on=key, how=how)
     return hot.unionByName(cold)

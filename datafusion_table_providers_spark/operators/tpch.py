@@ -2,9 +2,10 @@
 
 The reference federates whole TPC-H-style plans to remote engines; these are
 the canonical shapes a reference user would run, expressed Spark-first:
-broadcast dims, semi-joins for EXISTS, conditional aggregates, multi-way
-join chains. Columns are adapted where the driver's synthetic schema lacks
-TPC-H columns (no l_receiptdate/l_shipmode/p_container — see each query).
+dimension joins (sized and broadcast by Catalyst, no hints), semi-joins
+for EXISTS, conditional aggregates, multi-way join chains. Columns are
+adapted where the synthetic schema lacks TPC-H columns (no
+l_receiptdate/l_shipmode/p_container — see each query).
 """
 
 from __future__ import annotations
@@ -60,11 +61,11 @@ def t05_local_supplier(spark, sf_dir):
     r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(s, l.l_suppkey == s.s_suppkey)
         .filter(F.col("c_nationkey") == F.col("s_nationkey"))
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .filter(
             (F.col("o_orderdate") >= "1996-01-01")
             & (F.col("o_orderdate") < "1998-01-01")
@@ -157,7 +158,7 @@ def t14_promo_effect(spark, sf_dir):
     l = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    joined = l.join(F.broadcast(p), l.l_partkey == p.p_partkey).filter(
+    joined = l.join(p, l.l_partkey == p.p_partkey).filter(
         (F.col("l_shipdate") >= "1996-01-01")
         & (F.col("l_shipdate") < "1996-07-01")
     )

@@ -13,8 +13,11 @@ Schema adaptations (driver testdata lacks partsupp, l_commitdate, c_phone,
 p_container): supply cost is synthesized as ``0.1 * p_retailprice``; country
 codes come from ``c_nationkey % 5``; Q17's container filter uses ``p_size``.
 
-Scale notes: every dimension join (nation/region/part/supplier/customer at
-sf≤1) is an explicit ``F.broadcast``; the lineitem-side aggregates are
+Scale notes: no join carries a broadcast hint. Catalyst sizes the parquet
+dims (nation/region/part/supplier/customer) and the global aggregates
+itself, so it broadcasts them while they fit its threshold and shuffles
+part, supplier and customer once they outgrow it with the scale factor;
+AQE re-plans from runtime sizes either way. The lineitem-side aggregates are
 partial-agg friendly (sum/count of arithmetic on scan columns) so map-side
 combine keeps shuffle volume at |groups|, not |rows|. The Q17/Q15 per-key
 aggregate joins shuffle on the same key as the probe side, so AQE coalesces
@@ -47,10 +50,10 @@ def t07_volume_shipping(spark, sf_dir):
     ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
+        .join(s, l.l_suppkey == s.s_suppkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
+        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
         .filter(pair)
         .filter(
             (F.col("l_shipdate") >= "1996-01-01")
@@ -103,13 +106,13 @@ def t08_market_share(spark, sf_dir):
     r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
+        l.join(p, l.l_partkey == p.p_partkey)
         .join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n1), F.col("c_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(r), F.col("n1_region") == F.col("r_regionkey"))
-        .join(F.broadcast(n2), F.col("s_nationkey") == F.col("n2_key"))
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(s, l.l_suppkey == s.s_suppkey)
+        .join(n1, F.col("c_nationkey") == F.col("n1_key"))
+        .join(r, F.col("n1_region") == F.col("r_regionkey"))
+        .join(n2, F.col("s_nationkey") == F.col("n2_key"))
         .filter(
             (F.col("o_orderdate") >= "1996-01-01")
             & (F.col("o_orderdate") < "1998-01-01")
@@ -158,10 +161,10 @@ def t09_product_profit(spark, sf_dir):
         0.1 * F.col("p_retailprice") * F.col("l_quantity")
     )
     return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
+        l.join(p, l.l_partkey == p.p_partkey)
+        .join(s, l.l_suppkey == s.s_suppkey)
         .join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
         .withColumn("o_year", F.year("o_orderdate"))
         .groupBy(F.col("n_name").alias("nation"), F.col("o_year"))
         .agg(_r(F.sum(amount), 2).alias("sum_profit"))
@@ -198,8 +201,8 @@ def t10_returned_items(spark, sf_dir):
             (F.col("o_orderdate") >= "1996-01-01")
             & (F.col("o_orderdate") < "1996-04-01")
         )
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(
             _r(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
@@ -239,13 +242,13 @@ def t11_important_stock(spark, sf_dir):
     )
     val = F.col("l_quantity") * F.col("p_retailprice")
     base = (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
+        l.join(p, l.l_partkey == p.p_partkey)
+        .join(s, l.l_suppkey == s.s_suppkey)
     )
     per_part = base.groupBy("l_partkey").agg(F.sum(val).alias("raw_value"))
     total = base.agg((F.sum(val) * 0.001).alias("threshold"))
     return (
-        per_part.join(F.broadcast(total))
+        per_part.join(total)
         .filter(F.col("raw_value") > F.col("threshold"))
         .select("l_partkey", _r(F.col("raw_value"), 2).alias("value"))
     )
@@ -313,8 +316,8 @@ def t15_top_supplier(spark, sf_dir):
     )
     best = rev.agg(F.max("total_revenue").alias("max_revenue"))
     return (
-        rev.join(F.broadcast(best), rev.total_revenue == best.max_revenue)
-        .join(F.broadcast(s), F.col("supplier_no") == s.s_suppkey)
+        rev.join(best, rev.total_revenue == best.max_revenue)
+        .join(s, F.col("supplier_no") == s.s_suppkey)
         .select("s_suppkey", "s_name", "total_revenue")
     )
 
@@ -348,7 +351,7 @@ def t17_small_quantity(spark, sf_dir):
         .agg((0.5 * F.avg("l_quantity")).alias("qty_threshold"))
     )
     return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
+        l.join(p, l.l_partkey == p.p_partkey)
         .join(avg_qty, l.l_partkey == F.col("ap_partkey"))
         .filter(F.col("l_quantity") < F.col("qty_threshold"))
         .agg(_r(F.sum("l_extendedprice") / 7.0, 2).alias("avg_yearly"))
@@ -378,8 +381,8 @@ def t18_large_volume(spark, sf_dir):
         .select("l_orderkey")
     )
     return (
-        o.join(F.broadcast(big), o.o_orderkey == big.l_orderkey, "left_semi")
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        o.join(big, o.o_orderkey == big.l_orderkey, "left_semi")
+        .join(c, o.o_custkey == c.c_custkey)
         .join(_t(spark, sf_dir, "lineitem"), o.o_orderkey == F.col("l_orderkey"))
         .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
         .agg(F.sum("l_quantity").alias("sum_qty"))
@@ -421,7 +424,7 @@ def t19_disjunctive_revenue(spark, sf_dir):
         )
     )
     return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
+        l.join(p, l.l_partkey == p.p_partkey)
         .filter(cond)
         .agg(
             _r(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
@@ -457,10 +460,10 @@ def t02_min_cost_supplier(spark, sf_dir):
     n = _t(spark, sf_dir, "nation")
     r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     cand = (
-        ps.join(F.broadcast(p), ps.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), ps.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        ps.join(p, ps.l_partkey == p.p_partkey)
+        .join(s, ps.l_suppkey == s.s_suppkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .select("p_partkey", "p_name", "s_name", "s_acctbal", "n_name")
     )
     best = cand.groupBy(F.col("p_partkey").alias("pk")).agg(
@@ -501,8 +504,8 @@ def t16_parts_supplier(spark, sf_dir):
         .select("s_suppkey")
     )
     return (
-        ps.join(F.broadcast(p), ps.l_partkey == p.p_partkey)
-        .join(F.broadcast(bad), ps.l_suppkey == bad.s_suppkey, "left_anti")
+        ps.join(p, ps.l_partkey == p.p_partkey)
+        .join(bad, ps.l_suppkey == bad.s_suppkey, "left_anti")
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
     )
@@ -524,7 +527,7 @@ def t20_part_promotion(spark, sf_dir):
     p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("red%"))
     heavy = (
         _t(spark, sf_dir, "lineitem")
-        .join(F.broadcast(p), F.col("l_partkey") == p.p_partkey)
+        .join(p, F.col("l_partkey") == p.p_partkey)
         .groupBy("l_suppkey", "l_partkey")
         .agg(F.sum("l_quantity").alias("q"))
         .filter(F.col("q") > 40)
@@ -575,7 +578,7 @@ def t21_waiting_suppliers(spark, sf_dir):
         late.join(nsupp, late.l_orderkey == F.col("ok_all"))
         .join(nlate, late.l_orderkey == F.col("ok_late"))
         .filter((F.col("nsupp") >= 2) & (F.col("nlate") == 1))
-        .join(F.broadcast(s), late.l_suppkey == s.s_suppkey)
+        .join(s, late.l_suppkey == s.s_suppkey)
         .groupBy("s_name")
         .agg(F.count("*").alias("numwait"))
         .orderBy(F.desc("numwait"), F.asc("s_name"))
@@ -620,7 +623,7 @@ def t22_global_sales(spark, sf_dir):
         F.avg("c_acctbal").alias("avg_bal")
     )
     return (
-        c.join(F.broadcast(avg_bal))
+        c.join(avg_bal)
         .filter(F.col("c_acctbal") > F.col("avg_bal"))
         .join(o, c.c_custkey == o.o_custkey, "left_anti")
         .withColumn("cntrycode", (F.col("c_nationkey") % 5).cast("int"))

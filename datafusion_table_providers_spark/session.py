@@ -10,15 +10,19 @@ scaled down so they also behave on local[32]:
   shuffle partition counts at 100 TB.
 - Arrow-batched Python boundaries (Pandas UDFs, Python Data Source) —
   the analog of the reference's Arrow-everywhere design (§1.1).
-- Broadcast threshold left to Spark but all dimension joins in the operator
-  library hint ``broadcast()`` explicitly.
+- Join sides are Spark's choice: Catalyst sizes parquet tables and
+  aggregates itself, and AQE re-plans from runtime statistics. Code that
+  holds a row bound Catalyst cannot see (a driver-known query set, a
+  connector row count) hints through ``bounded_broadcast``, the one
+  broadcast gate of the package.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 #: Conservative defaults that scale: on a real cluster these are overridden by
 #: site config; on local[32] they keep partitions sized to fit memory.
@@ -45,6 +49,25 @@ TUNING = {
         "RocksDBStateStoreProvider"
     ),
 }
+
+#: row cap of ``bounded_broadcast``. A broadcast hint bypasses
+#: autoBroadcastJoinThreshold, so the cap is the only thing between a hinted
+#: side and the driver: 500k rows of a wide connector dim (a few hundred
+#: bytes a row) is ~100 MB of hash relation, well under Spark's 8 GB /
+#: 512M-row broadcast limit on driver and executors alike. Every measured
+#: gated side is far below it (query sets of tens of rows, the synthesized
+#: sf1 corpus's 50k docs, d26's 20k band rows, connector dims of 15k rows).
+#: The dedup family's doc→group maps (two longs a row) were capped at 20M
+#: rows before; corpora of 500k-20M docs (d26: over 125k reps) now leave
+#: those joins to the planner, which is unmeasured.
+BROADCAST_MAX_ROWS = 500_000
+
+
+def bounded_broadcast(df: DataFrame, n_rows: int) -> DataFrame:
+    """``F.broadcast(df)`` when ``n_rows``, an upper bound on ``df``'s row
+    count that the caller holds, fits under BROADCAST_MAX_ROWS (read at call
+    time); else ``df``, and the planner picks the join."""
+    return F.broadcast(df) if n_rows <= BROADCAST_MAX_ROWS else df
 
 
 def get_spark(app_name: str = "datafusion_table_providers_spark") -> SparkSession:

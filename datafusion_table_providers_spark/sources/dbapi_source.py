@@ -41,9 +41,9 @@ from pyspark.sql.datasource import DataSource, DataSourceReader
 from datafusion_table_providers_spark.core.expr import DIALECTS, build_select
 from datafusion_table_providers_spark.sources.sql_scan import (
     SqlScanReader,
-    broadcast_hint,
     load_scan,
     range_slices,
+    row_count,
 )
 
 #: rows per ``fetchmany`` chunk, and so per Arrow batch, on the row path
@@ -271,9 +271,9 @@ def dbapi_reader_df(
     lacks raises ``ValueError``.
 
     ``auto_broadcast=True``: run one driver-side COUNT(*) over a DB-API
-    connection and attach a broadcast join hint when the relation is small
-    (A15 stats → join planning; Python-DS scans otherwise always
-    shuffle-join — same contract as ``duckdb_reader_df``)."""
+    connection and attach a broadcast join hint when the relation is under
+    ``bounded_broadcast``'s cap (A15 stats → join planning; Python-DS scans
+    otherwise always shuffle-join — same contract as ``duckdb_reader_df``)."""
     opts = {
         "module": module,
         "relation": relation,
@@ -307,5 +307,5 @@ def dbapi_reader_df(
         )
         if clauses:
             opts["partition_clauses"] = json.dumps(clauses)
-    broadcast = auto_broadcast and broadcast_hint(fetch_one, relation)
-    return load_scan(spark, DBAPIDataSource, opts, schema, broadcast)
+    n_rows = row_count(fetch_one, relation) if auto_broadcast else None
+    return load_scan(spark, DBAPIDataSource, opts, schema, n_rows)

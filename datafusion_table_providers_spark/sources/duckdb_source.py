@@ -44,7 +44,6 @@ from datafusion_table_providers_spark.core.expr import DIALECTS
 from datafusion_table_providers_spark.core.types import arrow_to_spark_schema
 from datafusion_table_providers_spark.sources.sql_scan import (
     SqlScanReader,
-    broadcast_hint,
     load_scan,
     range_slices,
     row_count,
@@ -275,8 +274,9 @@ def duckdb_reader_df(
 
     ``auto_broadcast=True`` consults the row-count statistic (A15,
     reference flightsql/src/lib.rs:343-349) and attaches a broadcast join
-    hint when the relation is small: the Python DS API gives Catalyst no
-    per-table stats, so connector dims otherwise always shuffle-join.
+    hint when the relation is under ``bounded_broadcast``'s cap: the Python
+    DS API gives Catalyst no per-table stats, so connector dims otherwise
+    always shuffle-join.
 
     ``order_by``/``limit`` push a remote ORDER BY/LIMIT into each
     partition's SQL (reference mod.rs:505-607). Inexact by design: with >1
@@ -305,6 +305,7 @@ def duckdb_reader_df(
             backend.close()  # release the RW lock before executors open read-only
         return row
 
+    rows = None
     if partition_column and num_partitions is None:
         rows = row_count(fetch_one, relation)
         num_partitions = max(1, min(64, rows // AUTO_PARTITION_ROWS + 1))
@@ -328,7 +329,8 @@ def duckdb_reader_df(
         )
         if clauses:
             opts["partition_clauses"] = json.dumps(clauses)
-    broadcast = auto_broadcast and broadcast_hint(fetch_one, relation)
+    if auto_broadcast and rows is None:
+        rows = row_count(fetch_one, relation)
     schema = None
     if backend.path == ":memory:":
         # Resolve the schema with ONE in-process LIMIT-0 probe instead of
@@ -340,4 +342,6 @@ def duckdb_reader_df(
         schema = _probe_spark_schema(
             lambda sql: backend.query_arrow(sql).schema, relation, columns
         )
-    return load_scan(spark, DuckDBDataSource, opts, schema, broadcast)
+    return load_scan(
+        spark, DuckDBDataSource, opts, schema, rows if auto_broadcast else None
+    )

@@ -7,9 +7,9 @@ source (JVM-side, partitioned, with pushDownPredicate/Limit/TableSample
 already implemented); what the reference adds on top — and what this module
 provides — is:
 
-- dialect-aware DDL/DML generation (CREATE TABLE from Spark schema, batch
-  INSERT, ON CONFLICT / ON DUPLICATE KEY upsert, DELETE/UPDATE) reusing
-  `core/types.py` + `write/on_conflict.py`;
+- dialect-aware DDL (CREATE TABLE from Spark schema) through
+  `core/types.py`; its INSERT / upsert / DELETE / UPDATE statements render
+  through `write/statement.py` like every other writer's;
 - federation metadata: a ``compute_context`` of (host, port, database, user)
   — crates/postgres/src/pool.rs:513-529 — so same-server tables collapse
   into one pushed query via ``Engine.sql``;
@@ -194,7 +194,7 @@ class RemoteSqlBackend:
             .load()
         )
 
-    # ---- DML/DDL generation (server executes; transport is driver-level) --
+    # ---- DDL generation (server executes; transport is driver-level) -----
     def create_table_sql(self, table: str, schema, primary_keys=()) -> str:
         from datafusion_table_providers_spark.core.types import create_table_ddl
 
@@ -202,36 +202,6 @@ class RemoteSqlBackend:
         # postgres/mysql/clickhouse render their own names, odbc/adbc emit
         # ANSI passthrough).
         return create_table_ddl(table, schema, self.kind, primary_keys=primary_keys)
-
-    def insert_sql(
-        self,
-        table: str,
-        columns: Sequence[str],
-        on_conflict: Optional[OnConflict] = None,
-    ) -> str:
-        q = self.dialect.quote_ident
-        cols = ", ".join(q(c) for c in columns)
-        ph = ", ".join(["%s"] * len(columns))
-        sql = f"INSERT INTO {q(table)} ({cols}) VALUES ({ph})"
-        if on_conflict is not None:
-            sql += " " + on_conflict.to_sql(list(columns), self.kind)
-        return sql
-
-    def delete_sql(self, table: str, condition: Optional[str] = None) -> str:
-        sql = f"DELETE FROM {self.dialect.quote_ident(table)}"
-        if condition:
-            sql += f" WHERE {condition}"
-        return sql
-
-    def update_sql(
-        self, table: str, assignments: Dict[str, str], condition: Optional[str] = None
-    ) -> str:
-        q = self.dialect.quote_ident
-        sets = ", ".join(f"{q(c)} = {expr}" for c, expr in assignments.items())
-        sql = f"UPDATE {q(table)} SET {sets}"
-        if condition:
-            sql += f" WHERE {condition}"
-        return sql
 
 
 def remote_insert_df(

@@ -19,8 +19,9 @@ only if its callers push them (DuckDB), and supplies ``connect()`` (a
 context manager that yields a connection) and ``fetch_batches(con, sql)``.
 
 Driver-side, the ``*_reader_df`` builders share ``range_slices`` (the one
-JDBC-style range splitter), ``broadcast_hint`` (the one row-count gate for
-a broadcast join hint) and ``load_scan`` (registration + load).
+JDBC-style range splitter), ``row_count`` (the COUNT(*) statistic) and
+``load_scan`` (registration + load, and the broadcast hint through
+``session.bounded_broadcast`` when the builder passes a row count).
 """
 
 from __future__ import annotations
@@ -40,6 +41,7 @@ from datafusion_table_providers_spark.core.expr import (
     build_select,
     translate_filters,
 )
+from datafusion_table_providers_spark.session import bounded_broadcast
 
 #: ``fetch_one(sql)`` runs one statement on the driver and returns its
 #: first row as a sequence
@@ -148,25 +150,10 @@ def range_slices(
     return clauses
 
 
-#: below this row-count statistic an ``auto_broadcast`` scan attaches a
-#: broadcast join hint. Python DataSource scans report only the session's
-#: default sizeInBytes to Catalyst (no stats hook — A15), so without the
-#: hint Spark NEVER auto-broadcasts a connector table and every
-#: connector-dim join pays a full shuffle. 500k rows of a typical dim is
-#: well under the ~8 GB broadcast-table ceiling.
-AUTO_BROADCAST_ROWS = 500_000
-
-
 def row_count(fetch_one: FetchOne, relation: str) -> int:
     """Row-count statistic for a relation (reference A15,
     crates/flightsql/src/lib.rs:343-349 reports these to the optimizer)."""
     return int(fetch_one(f"SELECT COUNT(*) AS n FROM {relation}")[0])
-
-
-def broadcast_hint(fetch_one: FetchOne, relation: str) -> bool:
-    """Whether an ``auto_broadcast`` scan is small enough for a broadcast
-    join hint: one COUNT(*) on the driver against AUTO_BROADCAST_ROWS."""
-    return row_count(fetch_one, relation) <= AUTO_BROADCAST_ROWS
 
 
 _REGISTERED = set()
@@ -177,11 +164,14 @@ def load_scan(
     source,
     options: dict,
     schema: Optional[T.StructType] = None,
-    broadcast: bool = False,
+    n_rows: Optional[int] = None,
 ) -> DataFrame:
     """Register ``source`` once per session and load one scan of it. A
     ``schema`` resolved on the driver skips the planning worker's
-    ``DataSource.schema()`` call."""
+    ``DataSource.schema()`` call. ``n_rows``, the relation's row count,
+    goes to ``bounded_broadcast``: Python DataSource scans report only the
+    session's default sizeInBytes to Catalyst (no stats hook — A15), so
+    without the hint Spark never broadcasts a connector table."""
     key = (id(spark), source.name())
     if key not in _REGISTERED:
         spark.dataSource.register(source)
@@ -190,4 +180,4 @@ def load_scan(
     if schema is not None:
         reader = reader.schema(schema)
     df = reader.load()
-    return df.hint("broadcast") if broadcast else df
+    return df if n_rows is None else bounded_broadcast(df, n_rows)

@@ -68,9 +68,10 @@ def sqlite_reader_df(
     extra_where=None,
 ) -> DataFrame:
     """``auto_broadcast=True``: consult the row-count statistic and attach
-    a broadcast join hint when small (A15 — Python-DS scans report no
-    stats, so Catalyst would otherwise shuffle-join every connector dim;
-    same contract as ``duckdb_reader_df``)."""
+    a broadcast join hint under ``bounded_broadcast``'s cap (A15 —
+    Python-DS scans report no stats, so Catalyst would otherwise
+    shuffle-join every connector dim; same contract as
+    ``duckdb_reader_df``)."""
     if backend.path == ":memory:":
         raise ValueError(
             "in-memory SQLite is process-local; use a file-mode backend "

@@ -17,9 +17,11 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from datafusion_table_providers_spark import session
 from datafusion_table_providers_spark.core.case import QueryCase, utc
 from datafusion_table_providers_spark.engine import Engine
 from datafusion_table_providers_spark.operators.relational import _r, _rsql
+from datafusion_table_providers_spark.session import bounded_broadcast
 from datafusion_table_providers_spark.sources.backends import (
     DuckDBBackend,
     SQLiteBackend,
@@ -716,6 +718,7 @@ SUITE["c14_signature_store_dedup"] = QueryCase(
 def c15_runtime_filter_scan(spark, sf_dir):
     utc(spark)
     from datafusion_table_providers_spark.sources.dynamic_filter import (
+        IN_LIST_MAX,
         duckdb_semijoin_scan,
     )
 
@@ -743,7 +746,15 @@ def c15_runtime_filter_scan(spark, sf_dir):
     # matches no customer pushes FALSE ("empty"): the exact, empty answer.
     # The small-SF in_list expectation lives in tests/test_dynamic_filter.py.
     assert strategy in ("in_list", "range", "empty"), strategy
-    joined = scan.join(F.broadcast(dim), scan.o_custkey == dim.c_custkey)
+    # c_custkey is customer's key, so an in_list dim has at most
+    # IN_LIST_MAX rows and an empty one none; a range dim is sized by one
+    # count bounded at the gate's cap (neither side has a size estimate:
+    # the scan is a Python data source, the dim a filtered parquet table)
+    n_dim = {"in_list": IN_LIST_MAX, "empty": 0}.get(strategy)
+    if n_dim is None:
+        n_dim = dim.limit(session.BROADCAST_MAX_ROWS + 1).count()
+    dim = bounded_broadcast(dim, n_dim)
+    joined = scan.join(dim, scan.o_custkey == dim.c_custkey)
     return joined.groupBy(F.year("o_orderdate").alias("order_year")).agg(
         F.count("*").alias("n_orders"),
         _r(F.sum("o_totalprice")).alias("total_price"),

@@ -32,6 +32,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
+from datafusion_table_providers_spark.session import bounded_broadcast
+
 #: Above this many rows a pushed fragment is spooled instead of held on the
 #: driver. ~250k rows of a typical aggregate result is tens of MB — well
 #: inside driver headroom — while anything larger signals a fragment that
@@ -81,12 +83,12 @@ def materialize_remote(
         return spark.read.parquet(path)
     if not buffered:
         return spark.createDataFrame(backend.query_arrow(f"SELECT * FROM ({sql}) t LIMIT 0"))
-    # the in-memory path KNOWS the fragment is small (≤ threshold_rows) —
-    # free row-count statistics Catalyst never gets from a Python source.
+    # the in-memory path KNOWS the fragment's row count (≤ threshold_rows)
+    # — free statistics Catalyst never gets from a Python source.
     # ``broadcast_hint`` (set by partial-federation callers whose fragments
-    # feed a downstream Spark join) turns that join into a
-    # BroadcastHashJoin instead of a full shuffle. Whole-query callers
-    # leave it off: the result reaches the user directly and a dangling
-    # hint just logs a HintErrorLogger warning.
+    # feed a downstream Spark join) hands that count to the broadcast gate,
+    # so the join is a BroadcastHashJoin instead of a full shuffle.
+    # Whole-query callers leave it off: the result reaches the user
+    # directly and a dangling hint just logs a HintErrorLogger warning.
     df = spark.createDataFrame(pa.Table.from_batches(buffered))
-    return df.hint("broadcast") if broadcast_hint else df
+    return bounded_broadcast(df, rows) if broadcast_hint else df

@@ -63,9 +63,9 @@ def decontaminate_batch(
     stream would be a (unsupported) stream-stream anti-join — so the
     streaming form applies this per microbatch via ``foreachBatch`` (see
     ``decontaminate_foreach_batch``), where each batch is a bounded
-    DataFrame and the eval side broadcasts. Decontamination is per-document
-    (no cross-batch state), so microbatch application is semantically
-    identical to the batch operator."""
+    DataFrame and the planner picks the join side from its size estimates.
+    Decontamination is per-document (no cross-batch state), so microbatch
+    application is semantically identical to the batch operator."""
     toks = F.split(F.col(text_col), " ")
     sz = F.size(toks)
     idx = F.when(sz >= n, F.sequence(F.lit(1), sz - (n - 1))).otherwise(
@@ -83,7 +83,7 @@ def decontaminate_batch(
         ).alias("gram"),
     )
     contaminated = (
-        grams.join(F.broadcast(eval_grams), "gram", "left_semi")
+        grams.join(eval_grams, "gram", "left_semi")
         .select("doc_id")
         .distinct()
     )

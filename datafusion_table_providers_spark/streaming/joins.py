@@ -60,4 +60,4 @@ def stream_static_enrich(
     """Stream-static join: the static side is re-read per micro-batch (so a
     slowly-changing dimension picks up updates) and broadcast when small.
     No streaming state at all — the scale-safe enrichment shape."""
-    return stream.join(F.broadcast(dim), key, how)
+    return stream.join(dim, key, how)

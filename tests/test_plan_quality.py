@@ -1,16 +1,23 @@
 """Plan-quality regression tests: the physical plans behind the TPC-H-shaped
 suite must keep the properties the 100 TB design depends on — no accidental
 cartesian products, broadcast joins for dimension tables, and pruned parquet
-scans. A refactor that silently degrades a plan (e.g. loses a broadcast hint
-or widens a scan) fails here even though results stay correct."""
+scans. A refactor that silently degrades a plan (e.g. a dim join the planner
+stops broadcasting, or a widened scan) fails here even though results stay
+correct."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from datafusion_table_providers_spark.core.memo import clear_memo_caches
 from datafusion_table_providers_spark.suite import FULL_SUITE
 
 SF = "/root/testdata/sf0.001"
+#: second scale for the dimension-join pins: with no hints left, the
+#: planner's own size estimates must still pick the same joins at 100x
+SF_LARGE = os.path.join(os.path.dirname(SF), "sf0.1")
 
 # queries whose plans must be cartesian-free (b09 is the deliberate theta
 # join; everything else doing a cross product is a bug)
@@ -36,25 +43,65 @@ MUST_BROADCAST = [
     "t10_returned_items",
 ]
 
+# entries whose joins all have a side the code bounds by a constant it
+# holds (query sets, centroids, shortlists, c15's connector dim) and hints
+# through the gate: no join of theirs may depend on Catalyst's estimate,
+# which sizes a filtered embeddings table as the whole table
+GATED = [
+    "d05_knn_bruteforce",
+    "d05b_knn_lsh",
+    "d06_lsh_ann",
+    "d06b_ivf_ann",
+    "d18b_pq_adc",
+    "d33_pq_rerank",
+    "c15_runtime_filter_scan",
+]
 
-def _plan(spark, name: str) -> str:
-    df = FULL_SUITE[name].fn(spark, SF)
+
+def _plan(spark, name: str, sf: str = SF) -> str:
+    df = FULL_SUITE[name].fn(spark, sf)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-@pytest.mark.parametrize("name", NO_CARTESIAN)
-def test_no_cartesian_product(spark, name):
-    plan = _plan(spark, name)
+def _at_both_scales(names):
+    """(name, sf) params; the sf0.001 ids stay the bare query names."""
+    return [pytest.param(n, SF, id=n) for n in names] + [
+        pytest.param(n, SF_LARGE, id=f"{n}-sf0.1") for n in names
+    ]
+
+
+@pytest.mark.parametrize("name, sf", _at_both_scales(NO_CARTESIAN))
+def test_no_cartesian_product(spark, name, sf):
+    plan = _plan(spark, name, sf)
     assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"
     assert "BroadcastNestedLoopJoin" not in plan, (
         f"{name} degenerated to nested-loop join"
     )
 
 
-@pytest.mark.parametrize("name", MUST_BROADCAST)
-def test_dimension_joins_broadcast(spark, name):
-    plan = _plan(spark, name)
+@pytest.mark.parametrize("name, sf", _at_both_scales(MUST_BROADCAST))
+def test_dimension_joins_broadcast(spark, name, sf):
+    plan = _plan(spark, name, sf)
     assert "BroadcastHashJoin" in plan, f"{name} lost its broadcast dim join"
+
+
+@pytest.mark.parametrize("name", GATED)
+def test_gated_sides_broadcast_without_estimates(spark, name):
+    """With Spark's size-based broadcast off, every join of a GATED entry
+    still broadcasts: none shuffles or goes cartesian, as each would past
+    the threshold if its bounded side were left to the planner."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        clear_memo_caches()
+        plan = _plan(spark, name)
+    finally:
+        spark.conf.set(key, old)
+        clear_memo_caches()
+    assert "Broadcast" in plan, plan
+    for op in ("CartesianProduct", "SortMergeJoin", "ShuffledHashJoin"):
+        assert op not in plan, f"{name}: {op} with no size estimate\n{plan}"
 
 
 def test_scan_projection_pruned(spark):

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from datafusion_table_providers_spark import session
 from datafusion_table_providers_spark.llm import dedup
 from datafusion_table_providers_spark.llm.dedup import (
     D22_BLOCK_CAP,
@@ -185,9 +186,9 @@ def test_d02b_broadcast_cap_branches_agree(spark, cap, monkeypatch):
             for r in dedup.d02b_minhash_lsh_pairs(spark, SF).collect()
         )
 
-    monkeypatch.setattr(dedup, "SEMIJOIN_MAX_BROADCAST_ROWS", cap)
+    monkeypatch.setattr(session, "BROADCAST_MAX_ROWS", cap)
     rows = run()
-    monkeypatch.setattr(dedup, "SEMIJOIN_MAX_BROADCAST_ROWS", 10**9 - cap)
+    monkeypatch.setattr(session, "BROADCAST_MAX_ROWS", 10**9 - cap)
     rows2 = run()
     assert rows == rows2 and len(rows) > 0
 
@@ -460,7 +461,7 @@ def test_d26_bucket_broadcast_cap_agrees(spark, monkeypatch):
         )
 
     want = run()
-    monkeypatch.setattr(dedup, "SEMIJOIN_MAX_BROADCAST_ROWS", 0)
+    monkeypatch.setattr(session, "BROADCAST_MAX_ROWS", 0)
     assert run() == want and len(want) > 0
 
 

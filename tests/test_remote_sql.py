@@ -1,12 +1,18 @@
 """Remote-SQL backend SQL-generation tests (server-free, crates/postgres +
 crates/mysql shape): JDBC scan options, federation context, DDL/DML gen,
-credential provider indirection."""
+credential provider indirection. DML statements render through
+write/statement.py, the one generator every writer path uses."""
 
 import pytest
 from pyspark.sql import types as T
 
 from datafusion_table_providers_spark.sources.remote_sql import RemoteSqlBackend
 from datafusion_table_providers_spark.write.on_conflict import OnConflict
+from datafusion_table_providers_spark.write.statement import (
+    render_delete,
+    render_insert,
+    render_update,
+)
 
 
 def _pg():
@@ -60,12 +66,16 @@ def test_create_table_dialects():
 
 
 def test_insert_upsert_per_dialect():
-    pg = _pg().insert_sql("t", ["id", "v"], OnConflict.upsert(["id"]))
+    pg = render_insert(
+        "postgres", "t", ["id", "v"], on_conflict=OnConflict.upsert(["id"])
+    )
     assert pg == (
         'INSERT INTO "t" ("id", "v") VALUES (%s, %s) '
         'ON CONFLICT ("id") DO UPDATE SET "v" = EXCLUDED."v"'
     )
-    my = _my().insert_sql("t", ["id", "v"], OnConflict.upsert(["id"]))
+    my = render_insert(
+        "mysql", "t", ["id", "v"], on_conflict=OnConflict.upsert(["id"])
+    )
     assert my == (
         "INSERT INTO `t` (`id`, `v`) VALUES (%s, %s) "
         "ON DUPLICATE KEY UPDATE `v` = VALUES(`v`)"
@@ -73,8 +83,10 @@ def test_insert_upsert_per_dialect():
 
 
 def test_delete_update_sql():
-    assert _pg().delete_sql("t", "id < 10") == 'DELETE FROM "t" WHERE id < 10'
+    assert render_delete("postgres", "t", "id < 10") == (
+        'DELETE FROM "t" WHERE id < 10'
+    )
     assert (
-        _my().update_sql("t", {"v": "upper(v)"}, "id = 1")
+        render_update("mysql", "t", {"v": "upper(v)"}, "id = 1")
         == "UPDATE `t` SET `v` = upper(v) WHERE id = 1"
     )
