@@ -25,8 +25,8 @@ federation, the write layer, and the data-pipeline operator library.
 """
 
 from datafusion_table_providers_spark.session import get_spark, tune_session
-from datafusion_table_providers_spark.catalog import Catalog, load_tables
+from datafusion_table_providers_spark.catalog import load_tables
 from datafusion_table_providers_spark.engine import Engine
 
-__all__ = ["get_spark", "tune_session", "Catalog", "load_tables", "Engine"]
+__all__ = ["get_spark", "tune_session", "load_tables", "Engine"]
 __version__ = "0.1.0"

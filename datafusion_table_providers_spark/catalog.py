@@ -1,20 +1,16 @@
-"""Catalog / schema provider: register external tables as Spark views.
+"""Load the TPC-H-ish parquet tables (TESTDATA.md) as Spark temp views.
 
-Reference analog: ``DatabaseSchemaProvider`` lists remote schemas and tables
-and lazily builds a provider per table (crates/common/src/common.rs:18-95);
-DuckDB attach + search-path handling (crates/duckdb/src/conn.rs:101-305).
-
-Spark-first design: every registered table becomes a temp view backed either
-by a native file source (parquet — Catalyst handles partition pruning,
-predicate pushdown and column pruning) or by one of our Python Data Source
-connectors (duckdb/sqlite/...). Large fact tables should be read directly as
-parquet so the scan parallelism is Spark-native.
+The table registry itself — the ``DatabaseSchemaProvider`` analog
+(crates/common/src/common.rs:18-95) that names native, connector-backed and
+federated tables — is ``engine.Engine`` (``register_parquet``,
+``register_dataframe``, ``register_backend_table``). Large fact tables are
+read directly as parquet so the scan parallelism is Spark-native.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Dict, Iterable, Optional
+from typing import Dict, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -55,59 +51,3 @@ def load_tables(
             df.createOrReplaceTempView(name)
     return out
 
-
-class Catalog:
-    """Session-scoped registry of engine tables across backends.
-
-    ``Catalog.register_parquet`` / ``register_dataframe`` register Spark-native
-    tables; connector modules (sources/) register their own through
-    ``register_connector_table`` so the federation layer can see which tables
-    share a compute context (reference: JoinPushDown::AllowedFor —
-    crates/common/src/sql/db_connection_pool/mod.rs:49-57).
-    """
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        # table name -> compute context string (None = Spark-native)
-        self._contexts: Dict[str, Optional[str]] = {}
-        # table name -> remote name (for SQL generation when federating)
-        self._remote_names: Dict[str, str] = {}
-
-    def register_parquet(self, name: str, path: str) -> DataFrame:
-        df = self.spark.read.parquet(path)
-        df.createOrReplaceTempView(name)
-        self._contexts[name] = None
-        return df
-
-    def register_dataframe(self, name: str, df: DataFrame) -> DataFrame:
-        df.createOrReplaceTempView(name)
-        self._contexts[name] = None
-        return df
-
-    def register_connector_table(
-        self,
-        name: str,
-        df: DataFrame,
-        compute_context: str,
-        remote_name: Optional[str] = None,
-    ) -> DataFrame:
-        """Register a connector-backed view plus its federation context.
-
-        ``compute_context`` mirrors the reference's per-pool context string
-        (host/port/db for Postgres — crates/postgres/src/pool.rs:513-529;
-        file path + attach list for SQLite — crates/sqlite/src/pool.rs:51-90).
-        Tables sharing a context may be collapsed into ONE pushed query.
-        """
-        df.createOrReplaceTempView(name)
-        self._contexts[name] = compute_context
-        self._remote_names[name] = remote_name or name
-        return df
-
-    def compute_context(self, name: str) -> Optional[str]:
-        return self._contexts.get(name)
-
-    def remote_name(self, name: str) -> str:
-        return self._remote_names.get(name, name)
-
-    def tables(self) -> Dict[str, Optional[str]]:
-        return dict(self._contexts)

@@ -22,7 +22,7 @@ Everything is md5-based so Spark and the DuckDB oracle compute identical
 hashes; min() over fixed-width lowercase-hex strings == numeric min.
 
 Cross-cutting discipline (r22): wherever a verdict is a pure function of
-the underlying VALUES — document text (d02b/d04/d26), normalized prefix
+the underlying VALUES — document text (d02b/d04/d12/d26), normalized prefix
 (d22), simhash value (d03b) — the pipeline runs once per distinct value
 and fans verdicts back out to doc pairs at the end; see _text_groups.
 """
@@ -819,76 +819,75 @@ FROM inter JOIN sizes s1 ON da = s1.doc_id JOIN sizes s2 ON db = s2.doc_id
 
 
 # --- d12: duplicate-cluster assignment (connected components) -------------
-# The graph step a production dedup pipeline needs after candidate pairs:
-# near-duplicate pairs form a graph; each document must map to ONE canonical
-# representative (the component's minimum doc_id). Spark side: iterative
-# min-label propagation — each round is one shuffle join (edges ⋈ labels),
-# rounds ≈ component diameter (dup clusters are tiny, so 2-4 rounds); at
-# 100 TB this is the standard large-scale connected-components discipline
-# (no driver-side graph, converges by fixpoint count check). Oracle side:
-# DuckDB recursive-CTE transitive closure over the same LSH pairs.
+# Near-duplicate pairs form a graph; each doc maps to its component's
+# minimum doc_id. Spark side: components of the text-group graph (d02b's
+# verified group pairs before the fan-out, see _text_groups), expanded to
+# docs through the group map. Oracle side: DuckDB recursive-CTE closure.
 D12_JACCARD_TAU = 0.5
 
 
-# Memoized: the component labels are recomputed identically by every
-# caller (d12 row, d34 keep-best, p01/p02 pipelines — up to four times in
-# one driver run); the result is a localCheckpoint'd table of
-# duplicate-cluster members (small), valid for the life of the
-# SparkSession, and the input parquet is immutable per sf_dir — so
-# memoizing is safe and cuts the repeated 20-round label-propagation cost.
+def _components(edges):
+    """The star forest of the undirected graph ``edges`` (lo < hi): a row
+    (lo, hi) per node hi of a component, lo being its minimum. Alternates
+    large-star and small-star (Kiveris et al., "Connected Components in
+    MapReduce and Beyond", SoCC 2014), so rounds grow with the log of the
+    component size, not its diameter. Neither step raises the edge count
+    or Σ lo, and each keeps both only when it changes nothing: each
+    round's checkpoint job observes the pair, and the loop stops when a
+    round repeats the round before."""
+    from pyspark.sql import Window
+
+    # decimal: a long sum overflows into an error under ANSI mode
+    stat = F.struct(F.count("*"), F.sum(F.col("lo").cast("decimal(38,0)")))
+
+    def edge(a, b, x="lo", y="hi"):
+        return F.struct(F.col(a).alias(x), F.col(b).alias(y))
+
+    prev = None
+    while True:
+        uv = F.array(edge("lo", "hi", "u", "v"), edge("hi", "lo", "u", "v"))
+        m = F.least("u", F.min("v").over(Window.partitionBy("u"))).alias("m")
+        # large-star: node u's larger neighbours v attach to m = min(u, N(u))
+        large = edges.select(F.inline(uv)).select("u", "v", m)
+        large = large.where(F.col("v") > F.col("u"))
+        # small-star: node v and its smaller neighbours m attach to their min
+        lo = F.min("m").over(Window.partitionBy("v")).alias("lo")
+        small = large.select(lo, "m", "v")
+        obs = Observation()
+        out = (
+            small.select(F.inline(F.array(edge("lo", "v"), edge("lo", "m"))))
+            .where(F.col("lo") < F.col("hi"))
+            .distinct()
+            .observe(obs, stat.alias("stat"))
+            .localCheckpoint(eager=True)
+        )
+        now = _observed(obs, "stat", lambda: out.agg(stat).first()[0])
+        if now == prev:
+            return out
+        prev, edges = now, out
+
+
+# Memoized: d12, d34, p01 and p02 read the same labels; rounds run once.
 @memo_artifact
 def d12_dedup_components(spark, sf_dir):
-    pairs = (
-        d02b_minhash_lsh_pairs(spark, sf_dir)
-        .filter(F.col("jaccard") >= D12_JACCARD_TAU)
-        .select("da", "db")
-        .localCheckpoint(eager=True)  # cut the heavy minhash lineage once
+    sig = _rep_signature_df(spark, sf_dir)
+    pairs = _verify_pairs(_lsh_candidates(sig), sig)
+    pairs = pairs.filter(F.col("jaccard") >= D12_JACCARD_TAU)
+    stars = _components(pairs.select(F.col("ga").alias("lo"), F.col("gb").alias("hi")))
+    # d02b pairs identical texts at 1.0, so a group of >= 2 docs whose text
+    # has a signature is a node even without a cross-group edge
+    m, n_reps = _group_map(spark, sf_dir)
+    with_sig = bounded_broadcast(sig.select(F.col("doc_id").alias("gid")), n_reps)
+    dup = m.where(F.col("doc_id") != F.col("gid")).join(with_sig, "gid", "left_semi")
+    # the smallest label of each star leaf, star centre and duplicate group
+    labels = (
+        stars.union(stars.select("lo", "lo"))
+        .union(dup.select("gid", "gid"))
+        .groupBy(F.col("hi").alias("gid"))
+        .agg(F.min("lo").alias("component_id"))
     )
-    edges = pairs.union(
-        pairs.select(F.col("db").alias("da"), F.col("da").alias("db"))
-    ).select(F.col("da").alias("src"), F.col("db").alias("dst"))
-    # round 0 fused into the seed: with initial lbl(x) = x, the first
-    # propagation round computes exactly least(node, min(neighbor)) — so
-    # seed with that directly and save one full join+checkpoint+count round
-    # (edges are bidirectional, so groupBy(src) covers every node)
-    labels = edges.groupBy(F.col("src").alias("node")).agg(
-        F.least(F.col("node"), F.min("dst")).alias("lbl")
-    )
-    changed = None
-    for _ in range(20):  # min-label propagation needs ≤ diameter rounds
-        nbr = (
-            edges.join(labels, edges.dst == F.col("node"))
-            .groupBy(F.col("src").alias("node2"))
-            .agg(F.min("lbl").alias("nbr_lbl"))
-        )
-        new_labels = (
-            labels.join(nbr, labels.node == F.col("node2"), "left")
-            .select(
-                "node",
-                F.least(F.col("lbl"), F.coalesce("nbr_lbl", "lbl")).alias("lbl"),
-            )
-        )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        # returning unconverged labels would silently split true components
-        # (and diverge from the exact recursive-CTE oracle) — fail loudly;
-        # chains deeper than 20 hops need a higher round cap
-        raise RuntimeError(
-            "connected-components did not converge within 20 rounds "
-            f"({changed} labels still changing) — raise the round cap"
-        )
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("lbl").alias("component_id")
-    )
+    labels = bounded_broadcast(labels, n_reps)
+    return m.join(labels, "gid").select("doc_id", "component_id")
 
 
 def _d12_sql() -> str:
@@ -1152,7 +1151,7 @@ SUITE["d26_fuzzy_decontaminate"] = QueryCase(
 # highest-QUALITY member of each near-duplicate cluster (the convention in
 # published curation pipelines — e.g. RefinedWeb keeps by heuristic rank).
 # Composition of two certified primitives: d12's connected components
-# (min-label propagation over the MinHash-LSH pair graph) joined to d08's
+# (large-star/small-star over the MinHash-LSH pair graph) joined to d08's
 # quality score; one window per component picks the argmax. The quality
 # column is already floor-rounded to 6 dp, so the (quality DESC, doc_id
 # ASC) order is deterministic on both engines. Scale: the join and window

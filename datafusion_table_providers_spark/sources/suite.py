@@ -448,31 +448,26 @@ SUITE["c05b_upsert_dml"] = QueryCase(
 # --- C11: catalog provider (A26) — views across native + connector -------
 # DatabaseSchemaProvider analog (crates/common/src/common.rs:18-95): a
 # parquet-native table and a connector-backed table registered through the
-# Catalog resolve in ONE spark.sql statement. Certifies registration,
+# Engine resolve in ONE spark.sql statement. Certifies registration,
 # view resolution, and the connector scan under a SQL join driver-side.
 def c11_catalog_views(spark, sf_dir):
     utc(spark)
-    from datafusion_table_providers_spark.catalog import Catalog
     from datafusion_table_providers_spark.sources.duckdb_source import (
         duckdb_reader_df,
     )
 
-    cat = Catalog(spark)
-    cat.register_parquet("cat_orders", _pq(sf_dir, "orders"))
-    backend = _duckdb_parquet_backend(sf_dir)
+    eng = Engine(spark)
+    eng.register_parquet("cat_orders", _pq(sf_dir, "orders"))
     # auto_broadcast: the row-count statistic marks the dim broadcastable
     # (Python-DS scans expose no stats, so Catalyst would shuffle-join it)
     cdf = duckdb_reader_df(
         spark,
-        backend,
+        _duckdb_parquet_backend(sf_dir),
         "customer",
         columns=["c_custkey", "c_mktsegment"],
         auto_broadcast=True,
     )
-    cat.register_connector_table(
-        "cat_customer", cdf, backend.compute_context(), "customer"
-    )
-    assert set(cat.tables()) >= {"cat_orders", "cat_customer"}
+    eng.register_dataframe("cat_customer", cdf)
     # NB: Spark SQL parses bare `100.0` as DECIMAL (DataFrame F.lit(100.0)
     # is DOUBLE), so the rounding formula spells its literals as explicit
     # DOUBLE casts to keep the whole expression in IEEE doubles like the

@@ -71,3 +71,8 @@ def test_d02b_build_job_budget(spark):
 def test_d26_build_job_budget(spark):
     jobs = _warm_build_jobs(spark, dedup.d26_fuzzy_decontaminate)
     assert jobs <= 6, jobs
+
+
+def test_d12_build_job_budget(spark):
+    jobs = _warm_build_jobs(spark, dedup.d12_dedup_components)
+    assert jobs <= 18, jobs

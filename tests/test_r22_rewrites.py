@@ -310,6 +310,36 @@ def test_d02b_group_expand_matches_naive_dup_heavy(spark, dup_heavy_dir):
     assert 9_000_006 in flat  # "exactly three words" has one shingle
 
 
+def _naive_d12(spark, sf_dir):
+    """Components of the doc-level pair graph of :func:`_naive_d02b` at
+    D12_JACCARD_TAU, each doc labelled with its component's minimum."""
+    import networkx as nx
+
+    pairs = _naive_d02b(spark, sf_dir).filter(
+        F.col("jaccard") >= dedup.D12_JACCARD_TAU
+    )
+    g = nx.Graph((r.da, r.db) for r in pairs.collect())
+    return sorted((d, min(c)) for c in nx.connected_components(g) for d in c)
+
+
+def test_d12_group_expand_matches_naive(spark):
+    got = sorted(map(tuple, dedup.d12_dedup_components(spark, SF).collect()))
+    assert got == _naive_d12(spark, SF) and len(got) > 0
+
+
+def test_d12_group_expand_matches_naive_dup_heavy(spark, dup_heavy_dir):
+    """Every text of the replicated corpus is a group of >= 3 docs, so each
+    group is a node even without a cross-group edge; shingle-less
+    duplicate groups are not."""
+    got = sorted(
+        map(tuple, dedup.d12_dedup_components(spark, dup_heavy_dir).collect())
+    )
+    assert got == _naive_d12(spark, dup_heavy_dir)
+    docs = {d for d, _ in got}
+    assert 9_000_000 not in docs and 9_000_004 not in docs
+    assert 9_000_006 in docs  # "exactly three words" has one shingle
+
+
 def test_d04_group_expand_matches_naive(spark):
     got = sorted(
         (r.da, r.db, r.shared, r.jaccard)
