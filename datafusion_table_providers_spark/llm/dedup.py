@@ -298,13 +298,18 @@ def _observed(obs, name: str, fallback):
     checkpoint. The metrics arrive through Spark's asynchronous listener
     bus, a few ms after the action returns, so wait up to a second for
     them. ``Observation.get`` blocks until some action fills it, so if that
-    job did not, run ``fallback()`` instead of waiting forever."""
+    job did not, run ``fallback()`` instead of waiting forever. When AQE
+    drops an empty query stage that holds the ``observe`` node, Spark fills
+    the Observation with an empty row, on which ``Observation.get`` fails:
+    run ``fallback()`` then too."""
     fut = obs._jo.future()
     deadline = time.monotonic() + 1.0
     while not fut.isCompleted():
         if time.monotonic() >= deadline:
             return fallback()
         time.sleep(0.002)
+    if obs._jo.getRow().length() == 0:
+        return fallback()
     return obs.get[name]
 
 

@@ -2,16 +2,16 @@
 
 Reference analog: crates/common/src/util/constraints.rs:28-123 — incoming
 batches are checked for PK/unique violations *before* any write, using a
-``count(1) OVER (PARTITION BY keys) > 1`` window. That check is literally a
-Spark window aggregate, which is how it's expressed here — distributed, no
-collect, scales to any input size.
+``count(1) OVER (PARTITION BY keys) > 1`` window. Here the same count is a
+Spark ``groupBy`` aggregate that also flags NULL keys — one distributed pass,
+no collect beyond the first faulty group, scales to any input size.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -20,29 +20,42 @@ class ConstraintViolation(Exception):
 
 
 def validate_unique(df: DataFrame, keys: Sequence[str]) -> None:
-    """Raise if `df` contains duplicate key tuples (batch self-consistency).
+    """Raise if `keys` do not hold a primary key over `df`: a NULL in a key
+    column, or a duplicate key tuple (batch self-consistency).
 
-    Uses groupBy-count rather than a window so Catalyst can do map-side
-    partial aggregation and stop at the first duplicate found (LIMIT 1).
+    One pass: groupBy-count rather than a window, so Catalyst does map-side
+    partial aggregation, keeping only groups with a NULL key or more than
+    one row. NULL groups sort first, so a batch with both faults reports the
+    NULL.
     """
     if not keys:
         return
-    dup = (
+    null_key = F.lit(False)
+    for k in keys:
+        null_key = null_key | F.col(k).isNull()
+    bad = (
         df.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
+        .withColumn("__null", null_key)
+        .filter(F.col("__null") | (F.col("__n") > 1))
+        .orderBy(F.col("__null").desc())
         .limit(1)
         .collect()
     )
-    if dup:
-        vals = {k: dup[0][k] for k in keys}
-        raise ConstraintViolation(
-            f"incoming batch violates unique constraint on {list(keys)}: "
-            f"duplicate key {vals}"
-        )
+    if not bad:
+        return
+    if bad[0]["__null"]:
+        raise ConstraintViolation(f"NULL in constrained columns {list(keys)}")
+    vals = {k: bad[0][k] for k in keys}
+    raise ConstraintViolation(
+        f"incoming batch violates unique constraint on {list(keys)}: "
+        f"duplicate key {vals}"
+    )
 
 
 def validate_not_null(df: DataFrame, keys: Sequence[str]) -> None:
+    """Raise if a `keys` column of `df` holds a NULL (``validate_unique``
+    checks this too)."""
     if not keys:
         return
     cond = None

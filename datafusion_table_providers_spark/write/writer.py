@@ -43,7 +43,9 @@ from datafusion_table_providers_spark.sources.backends import (
     DuckDBBackend,
     SQLiteBackend,
 )
-from datafusion_table_providers_spark.write.constraints import (
+# validate_not_null is not called here: validate_unique checks NULL keys in
+# the same job. perfbench/trace.py times both names on this module.
+from datafusion_table_providers_spark.write.constraints import (  # noqa: F401
     validate_not_null,
     validate_unique,
 )
@@ -122,7 +124,6 @@ def insert_into(
       otherwise.
     """
     if primary_keys:
-        validate_not_null(df, primary_keys)
         validate_unique(df, primary_keys)
     if create:
         create_table(backend, table, df.schema, primary_keys=primary_keys)
@@ -368,10 +369,9 @@ def distributed_insert(
     cols = [f.name for f in df.schema.fields]
     # constraint pre-validation, same discipline as insert_into (reference
     # constraints.rs:28-123 — reject the batch BEFORE any row lands); the
-    # window-count check is a distributed Spark aggregate, so it scales with
+    # group-count check is a distributed Spark aggregate, so it scales with
     # the input like the write itself
     if primary_keys:
-        validate_not_null(df, primary_keys)
         validate_unique(df, primary_keys)
     staging = f"{table}__stg_{uuid.uuid4().hex[:12]}"
 

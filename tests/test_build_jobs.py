@@ -53,6 +53,19 @@ def test_observed_rep_count_matches_naive(spark, dup_heavy_dir):
     assert n < dedup._doc_count(spark, dup_heavy_dir)
 
 
+def test_observed_falls_back_when_aqe_drops_the_observed_stage(spark):
+    """An ``observe`` below an exchange on an empty input: AQE drops the
+    empty stage and Spark fills the Observation with an empty row."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    empty = spark.range(0).selectExpr("id", "id % 3 AS k").localCheckpoint()
+    out = (empty.observe(obs, F.count(F.lit(1)).alias("n"))
+           .groupBy("k").count()
+           .localCheckpoint(eager=True))
+    assert dedup._observed(obs, "n", lambda: out.count()) == 0
+
+
 def _warm_build_jobs(spark, op):
     """Jobs of a second build of ``op`` after the memo is cleared: a build
     in a cold session can run a job or two more while Spark warms up."""

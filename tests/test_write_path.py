@@ -1,6 +1,8 @@
 """Write-path behavior tests: constraints, upsert, overwrite atomicity,
 DELETE/UPDATE counts, sort/limit pushdown fixture (FIXTURES.md)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -11,6 +13,8 @@ from datafusion_table_providers_spark.write.constraints import (
     validate_unique,
 )
 from datafusion_table_providers_spark.write.on_conflict import OnConflict
+
+from tests.test_build_jobs import _with_jobs
 
 SCHEMA = T.StructType(
     [
@@ -29,6 +33,38 @@ def test_constraint_rejects_duplicates(spark, tmp_duckdb):
 def test_constraint_window_check_direct(spark):
     ok = spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA)
     validate_unique(ok, ["id"])  # no raise
+
+
+@pytest.mark.parametrize(
+    "rows, keys, message",
+    [
+        ([(1, 1, "a"), (None, 2, "b")], ["id"], "NULL in constrained"),
+        ([(1, 1, "a"), (1, 2, "b")], ["id"], "duplicate key {'id': 1}"),
+        # both faults: the NULL is reported, as before the checks were folded
+        ([(1, 1, "a"), (1, 2, "b"), (None, 3, "c")], ["id"], "NULL in constrained"),
+        ([(1, 1, "a"), (1, None, "b")], ["id", "k"], "NULL in constrained"),
+        ([(1, 2, "a"), (1, 2, "b"), (1, 3, "c")], ["id", "k"], "duplicate key"),
+    ],
+)
+def test_constraint_rejects_null_and_duplicate_keys(spark, tmp_duckdb, rows,
+                                                    keys, message):
+    df = spark.createDataFrame(rows, "id long, k long, v string")
+    with pytest.raises(ConstraintViolation, match=re.escape(message)):
+        writer.insert_into(tmp_duckdb, "t", df, primary_keys=keys)
+
+
+def test_pk_validation_is_one_pass(spark, tmp_duckdb):
+    # a nullable key: on a NOT NULL column Catalyst drops a NULL check
+    df = spark.range(2000, numPartitions=4).selectExpr(
+        "nullif(id, -1) AS id", "string(id) AS v")
+    _, plain = _with_jobs(spark, lambda: writer.insert_into(
+        tmp_duckdb, "a", df, via="arrow"))
+    _, pk = _with_jobs(spark, lambda: writer.insert_into(
+        tmp_duckdb, "b", df, primary_keys=["id"], via="arrow"))
+    # one group-count pass: its shuffle-map job and its result job; a
+    # separate NOT NULL pass added two more (its LIMIT 1 scan tries one
+    # partition, then the rest)
+    assert pk - plain <= 2, (pk, plain)
 
 
 def test_upsert_do_nothing_and_update(spark, tmp_duckdb):
