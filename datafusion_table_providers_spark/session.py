@@ -31,12 +31,45 @@ read, so a rewritten or removed archive is still re-read (the stdlib
 contract), and an unchanged one costs one ``stat``: the first call in a
 process reads each archive once, later calls read none. CPython 3.12 made
 the re-read lazy (gh-103200); there the guard does nothing.
+
+``get_spark`` also fixes how its Python workers reach the JVM, with three
+launch-time confs (sessions it did not build keep Spark's defaults):
+
+- ``spark.python.unix.domain.socket.enabled``: workers talk to the JVM over
+  a Unix domain socket instead of loopback TCP. Over TCP each Python task
+  blocked a median 39.8 ms in ``pyarrow.ipc.open_stream`` waiting for the
+  JVM's first Arrow message: Spark 4.1's ``PythonWorkerFactory`` sets no
+  ``TCP_NODELAY``, and 40 ms is Linux's minimum delayed-ACK time. A Unix
+  socket has no Nagle or delayed ACK; the wait is 0.0 ms.
+- ``spark.python.unix.domain.socket.dir``: a private (0700) directory made
+  once per driver process directly under ``/tmp`` and removed at interpreter
+  exit. Spark names each socket ``<dir>/.<uuid>.sock`` (42 characters after
+  the directory) and rejects a configured directory over 61 characters, but
+  its default, ``java.io.tmpdir``, is not checked: under a long temp path
+  (70 characters reproduced it) every worker fails with ``OSError: AF_UNIX
+  path too long``. ``$TMPDIR`` can be that long, so it is not used. A
+  daemon killed with the JVM leaves its socket file behind, so the whole
+  directory goes at exit.
+- ``spark.python.daemon.module``: workers fork from ``worker_daemon``, which
+  imports pyarrow, pandas, DuckDB and the package's scan and write modules
+  (installing the zip guard above) before it serves. A fresh worker then
+  starts with them loaded; before, the first ``pa.array`` of a worker
+  imported pandas lazily (135 ms standalone, 170-180 ms inside a worker),
+  which made ``read_sqlite`` samples bimodal.
+
+So every Python worker of a ``get_spark`` session must be able to import
+this package (run from the repository root, or put it on ``PYTHONPATH``),
+as Python Data Source workers already had to.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import sys
+import tempfile
 import zipimport
 
 from pyspark.sql import DataFrame, SparkSession
@@ -117,6 +150,17 @@ def bounded_broadcast(df: DataFrame, n_rows: int) -> DataFrame:
     return F.broadcast(df) if n_rows <= BROADCAST_MAX_ROWS else df
 
 
+@functools.cache
+def _socket_dir() -> str:
+    """This process's private worker-socket directory: under ``/tmp`` (never
+    ``$TMPDIR``) so it stays far below Spark's 61-character limit, mode
+    0700, removed at interpreter exit. Made before the JVM starts, so its
+    removal runs after PySpark's own exit handlers."""
+    path = tempfile.mkdtemp(prefix="dtps-", dir="/tmp")
+    atexit.register(shutil.rmtree, path, True)
+    return path
+
+
 def get_spark(app_name: str = "datafusion_table_providers_spark") -> SparkSession:
     """Build (or reuse) a tuned SparkSession on local[$SPARK_GRAFT_CPUS]."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -126,6 +170,13 @@ def get_spark(app_name: str = "datafusion_table_providers_spark") -> SparkSessio
         # JVM-launch-time settings (ignored on an already-running session):
         # 32 concurrent tasks deserializing wide plans need real heap.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # Python workers over a Unix socket, forked from a warm daemon (see
+        # the module docstring). Static confs: kept out of TUNING, which
+        # tune_session sets at runtime.
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", _socket_dir())
+        .config("spark.python.daemon.module",
+                "datafusion_table_providers_spark.worker_daemon")
     )
     for k, v in TUNING.items():
         builder = builder.config(k, v)

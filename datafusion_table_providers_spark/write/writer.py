@@ -291,7 +291,7 @@ def _insert_sqlite(backend, table, df, mode, on_conflict) -> int:
     # the bounded-mpsc-channel analog (write.rs:409-421).
     batch = []
     for row in df.toLocalIterator():
-        batch.append(tuple(row[c] for c in cols))
+        batch.append(tuple(row))  # a Row is a tuple in `cols` order
         if len(batch) >= 10000:
             backend.executemany(sql, batch)
             total += len(batch)

@@ -312,6 +312,30 @@ def test_sqlite_auto_routes_staged_for_large_inputs(spark, tmp_path, monkeypatch
     )
 
 
+def test_sqlite_loop_binds_rows_by_position(spark, tmp_path):
+    """The row loop binds each Row positionally in the frame's column order,
+    which is not alphabetical here: into a table it creates, and into an
+    existing table that declares the same columns in another order."""
+    from datafusion_table_providers_spark.sources.backends import SQLiteBackend
+
+    b = SQLiteBackend(str(tmp_path / "order.db"))
+    rows = [(3, "c", 1.5, None), (1, "a", -2.0, "x"), (2, None, None, "y")]
+    df = spark.createDataFrame(
+        rows, "z_id long, name string, amount double, b_tag string"
+    ).coalesce(1)
+    assert writer.insert_into(b, "created", df, via="loop") == 3
+    b.execute(
+        'CREATE TABLE "declared" (b_tag TEXT, amount REAL, z_id INTEGER, '
+        "name TEXT)"
+    )
+    assert writer.insert_into(b, "declared", df, create=False, via="loop") == 3
+    for table in ("created", "declared"):
+        got = b.query_arrow(
+            f'SELECT z_id, name, amount, b_tag FROM "{table}" ORDER BY z_id'
+        ).to_pylist()
+        assert [tuple(r.values()) for r in got] == sorted(rows)
+
+
 def test_sqlite_staged_overwrite_and_memory_fallback(spark, tmp_path):
     from datafusion_table_providers_spark.sources.backends import SQLiteBackend
 
