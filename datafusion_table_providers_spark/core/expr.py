@@ -278,10 +278,6 @@ def translate_filters(
     return clauses, unsupported
 
 
-def _esc(s: str) -> str:
-    return s.replace("'", "''")
-
-
 def build_select(
     dialect: Dialect,
     relation: str,

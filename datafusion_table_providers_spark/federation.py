@@ -250,11 +250,3 @@ def materialize(
     if explain is not None:
         explain.remainder_sql = None if not views or rel.context() else sql
     return spark.sql(sql)
-
-
-def explain_plan(spark: SparkSession, rel: Rel) -> FederationPlan:
-    """Dry-run analysis is not free of execution (fragments materialize), so
-    this simply runs materialize with capture — intended for tests/docs."""
-    plan = FederationPlan()
-    materialize(spark, rel, explain=plan)
-    return plan

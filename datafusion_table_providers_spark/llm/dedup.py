@@ -22,7 +22,7 @@ Everything is md5-based so Spark and the DuckDB oracle compute identical
 hashes; min() over fixed-width lowercase-hex strings == numeric min.
 
 Cross-cutting discipline (r22): wherever a verdict is a pure function of
-the underlying VALUES — document text (d02b/d04/d12/d26), normalized prefix
+the underlying VALUES — document text (d02b/d04/d12/d26/d35), normalized prefix
 (d22), simhash value (d03b) — the pipeline runs once per distinct value
 and fans verdicts back out to doc pairs at the end; see _text_groups.
 """
@@ -478,23 +478,27 @@ def _verify_pairs(cand, sig):
     )
 
 
-def d02b_minhash_lsh_pairs(spark, sf_dir):
-    # GROUP LEVEL (r22): candidacy and exact Jaccard are pure functions of
-    # the two TEXTS, so band join and verification run once per distinct
-    # text (group representative) and the verdicts fan back out to doc
-    # pairs at the end (see _text_groups). The rep signature table arrives
-    # checkpointed + memoized with each rep's shingle set, which is all
-    # that verification reads.
+def _minhash_groups(spark, sf_dir):
+    """(gpairs, with_sig): the verified (ga, gb, jaccard) rep pairs and the
+    (gid, jaccard = 1.0) groups whose rep has a signature.
+
+    Candidacy and exact Jaccard are pure functions of the two TEXTS, so
+    band join and verification run once per distinct text (group
+    representative) on the memoized rep signature table, which carries
+    each rep's shingle set (all that verification reads). Identical texts
+    share every band key and every shingle, so the per-doc pipeline always
+    paired them at jaccard exactly 1.0 (inter = na = nb), provided the
+    text has >= 1 shingle: docs under SHINGLE_W words produce no signature
+    and never pair."""
     sig = _rep_signature_df(spark, sf_dir)
     gpairs = _verify_pairs(_lsh_candidates(sig), sig)
-    # intra-group pairs: identical texts share every band key and every
-    # shingle, so the per-doc pipeline always paired them at jaccard
-    # exactly 1.0 (inter = na = nb) — PROVIDED the text has >= 1 shingle
-    # (docs under SHINGLE_W words produce no signature and never pair).
-    # Restrict to groups whose rep carries a signature.
     with_sig = sig.select(F.col("doc_id").alias("gid"), F.lit(1.0).alias("jaccard"))
+    return gpairs, with_sig
+
+
+def d02b_minhash_lsh_pairs(spark, sf_dir):
     m = _text_groups(spark, sf_dir)
-    return _fan_out(m, _doc_count(spark, sf_dir), gpairs, with_sig)
+    return _fan_out(m, _doc_count(spark, sf_dir), *_minhash_groups(spark, sf_dir))
 
 
 def _d02b_sql() -> str:
@@ -681,8 +685,8 @@ def d03b_simhash_pairs(spark, sf_dir):
     # the expansion fan-out below is ATOMIC per gpair row (one row emits
     # |group_a|×|group_b| pairs) and AQE coalesces the tiny gpairs exchange
     # into a handful of tasks — a few heavy group pairs then serialize the
-    # whole expansion (measured: one 14.5s straggler vs 0.6s median on
-    # d35's critical path). Spread the rows round-robin over 4× the
+    # whole expansion (measured: one 14.5s straggler vs 0.6s median).
+    # Spread the rows round-robin over 4× the
     # parallelism first so heavy rows land apart (guide §2.5: skew —
     # split/spread the hot keys); the exchange itself is distinct-value
     # pairs, orders of magnitude smaller than its fan-out.
@@ -691,7 +695,7 @@ def d03b_simhash_pairs(spark, sf_dir):
     # m leaves the window hash-partitioned by SIMHASH — i.e. every member
     # of a big group sits in ONE partition, so the intra fan-out (each
     # probe row emits |group| rows) would be produced by a handful of
-    # straggler tasks (measured: d35's expansion stage ran at ~3-way
+    # straggler tasks (measured: the expansion stage ran at ~3-way
     # effective parallelism). Spread the PROBE rows by doc_id first — the
     # per-row output is then Σ|group| per task, uniform (guide §2.5).
     # Every doc probes (intra pairs are hamming 0 by identity).
@@ -723,21 +727,22 @@ FREQ_CAP = 50  # drop shingles present in more docs than this (skew guard)
 MIN_SHARED = 2
 
 
-def d04_ngram_jaccard(spark, sf_dir, rep_shingles=None):
-    # GROUP LEVEL (r22, see d02b/_text_groups): the shared-shingle count
-    # and Jaccard depend only on the two texts and the GLOBAL document
-    # frequency of each shingle, so the self-join runs once per distinct
-    # text and fans back out at the end. ``rep_shingles`` (passed by the
-    # d35 ensemble) must be the REP-level distinct shingle table
-    # (_shingles_of(_rep_docs(...))): document frequency is weighted by
-    # group size below, so a per-doc table would count duplicates twice.
+def _d04_groups(spark, sf_dir, rep_shingles=None):
+    """(gpairs, intra_g): d04's (ga, gb, shared, jaccard) rep pairs and the
+    (gid, shared, jaccard) groups whose member pairs it emits.
+
+    The shared-shingle count and Jaccard depend only on the two texts and
+    the GLOBAL document frequency of each shingle, so the self-join runs
+    once per distinct text (see _text_groups). ``rep_shingles``, when
+    given, must be the REP-level distinct shingle table
+    (``_shingles_of(_rep_docs(...))``): document frequency is weighted by
+    group size below, so a per-doc table would count duplicates twice."""
     sh = (
         rep_shingles
         if rep_shingles is not None
         else _shingles_of(_rep_docs(spark, sf_dir))
     )
-    m = _text_groups(spark, sf_dir)
-    gsize = m.groupBy("gid").agg(F.count("*").alias("gn"))
+    gsize = _text_groups(spark, sf_dir).groupBy("gid").agg(F.count("*").alias("gn"))
     # document frequency of s = Σ group sizes over the groups whose text
     # contains s (each rep row stands for gn identical docs) — identical
     # to the per-doc count. The group-size table is 2 longs/group;
@@ -804,7 +809,12 @@ def d04_ngram_jaccard(spark, sf_dir, rep_shingles=None):
             F.col("shared") / (F.col("n") + F.col("n") - F.col("shared")), 6
         ).alias("jaccard"),
     )
-    return _fan_out(m, _doc_count(spark, sf_dir), gpairs, intra_g)
+    return gpairs, intra_g
+
+
+def d04_ngram_jaccard(spark, sf_dir):
+    m = _text_groups(spark, sf_dir)
+    return _fan_out(m, _doc_count(spark, sf_dir), *_d04_groups(spark, sf_dir))
 
 
 _D04_SQL = f"""
@@ -875,14 +885,13 @@ def _components(edges):
 # Memoized: d12, d34, p01 and p02 read the same labels; rounds run once.
 @memo_artifact
 def d12_dedup_components(spark, sf_dir):
-    sig = _rep_signature_df(spark, sf_dir)
-    pairs = _verify_pairs(_lsh_candidates(sig), sig)
+    pairs, with_sig = _minhash_groups(spark, sf_dir)
     pairs = pairs.filter(F.col("jaccard") >= D12_JACCARD_TAU)
     stars = _components(pairs.select(F.col("ga").alias("lo"), F.col("gb").alias("hi")))
     # d02b pairs identical texts at 1.0, so a group of >= 2 docs whose text
     # has a signature is a node even without a cross-group edge
     m, n_reps = _group_map(spark, sf_dir)
-    with_sig = bounded_broadcast(sig.select(F.col("doc_id").alias("gid")), n_reps)
+    with_sig = bounded_broadcast(with_sig.select("gid"), n_reps)
     dup = m.where(F.col("doc_id") != F.col("gid")).join(with_sig, "gid", "left_semi")
     # the smallest label of each star leaf, star centre and duplicate group
     labels = (
@@ -1230,20 +1239,24 @@ SUITE["d12b_components_keepbest"] = QueryCase(
 # Production dedup at scale runs SEVERAL cheap near-dup detectors and
 # trusts only their agreement (each method has distinct false-positive
 # modes: MinHash misses low-Jaccard paraphrases, SimHash collides on
-# short texts, n-gram Jaccard over-fires on boilerplate). The ensemble
-# verdict — a pair is a duplicate iff >= 2 of {minhash, simhash, ngram}
-# flag it — is a pure composition: union the three certified pair tables
-# with method tags, one groupBy on the pair key. No new shuffle shape;
-# candidate generation stays bucketed in each underlying method.
-#: method → bit tag for the ensemble verdict aggregate. Every member emits
-#: a given (da, db) pair AT MOST ONCE (d02b: distinct candidates inner-
-#: joined to per-pair-unique tables; d03b: disjoint cross/intra sets of
-#: unique pairs; d04: groupBy output), so sum(tag) is a faithful method
-#: SET — the bit mask replaces count(DISTINCT)/collect_set, which planned
-#: as THREE ObjectHashAggregate passes and TWO full exchanges of the
-#: ~158M-row pair union at sf1 (object-mode agg, no codegen). The mask
-#: form is one codegen HashAggregate with map-side partials and ONE
-#: exchange (guide §2.3 aggregate-before-shuffle, §2.4 remove exchanges).
+# short texts, n-gram Jaccard over-fires on boilerplate). A pair is a
+# duplicate iff >= 2 of {minhash, simhash, ngram} flag it.
+#
+# Each member is a pure function of the two texts, so the vote runs on
+# text-group pairs and fans out to doc pairs once (see _text_groups):
+# - cross-group: the minhash and n-gram members' verified group pairs sum
+#   their method bits per (ga, gb); simhash adds its bit when the two
+#   reps' simhashes lie within HAMMING_MAX. With 4 byte-bands and
+#   HAMMING_MAX = 3, pigeonhole makes d03b's banded pair set exactly the
+#   hamming <= 3 set, so comparing the values is d03b's verdict. Simhash
+#   alone is one vote, so only a pair another member flagged can reach two.
+# - intra-group: identical texts with a signature are minhash 1.0 and
+#   hamming 0, so each such group votes minhash + simhash, plus ngram when
+#   d04 pairs its members. A group without a signature (under SHINGLE_W
+#   words) can reach only simhash, so it never pairs.
+#: method → bit tag. Each member emits a group pair at most once, so
+#: sum(tag) is the method SET: one codegen HashAggregate, where
+#: count(DISTINCT)/collect_set planned object-mode aggregates.
 _D35_TAG = {"minhash": 1, "ngram": 2, "simhash": 4}
 #: mask → the exact string collect_set+array_sort+array_join produced
 _D35_MASK_STR = [
@@ -1253,86 +1266,37 @@ _D35_MASK_STR = [
 
 
 def d35_ensemble_neardup(spark, sf_dir):
-    # The minhash member memoizes the rep signature table with each text's
-    # distinct shingle set; exploding those sets IS the n-gram member's
-    # distinct rep-shingle table, so no second shingle pass, distinct
-    # shuffle or checkpoint runs for it. SimHash blocks on single words —
-    # it keeps its own pass (and its own distinct-simhash grouping, which
-    # subsumes identical texts).
-    rep_shingles = _rep_signature_df(spark, sf_dir).select(
-        "doc_id", F.explode("sh").alias("s")
+    mh, with_sig = _minhash_groups(spark, sf_dir)
+    # the rep signature table's shingle sets are d04's rep shingle table
+    sh = _rep_signature_df(spark, sf_dir).select("doc_id", F.explode("sh").alias("s"))
+    ng, ng_intra = _d04_groups(spark, sf_dir, sh)
+    votes = (
+        mh.select("ga", "gb", F.lit(_D35_TAG["minhash"]).alias("tag"))
+        .unionByName(ng.select("ga", "gb", F.lit(_D35_TAG["ngram"]).alias("tag")))
+        .groupBy("ga", "gb")
+        .agg(F.sum("tag").alias("mask"))
     )
-    mh = d02b_minhash_lsh_pairs(spark, sf_dir).select(
-        "da", "db", F.lit(_D35_TAG["minhash"]).alias("tag")
+    # every voted rep has shingles, hence a text and a simhash
+    n_reps = _rep_count(spark, sf_dir)
+    rsim = bounded_broadcast(_simhashes_of(_rep_docs(spark, sf_dir)), n_reps)
+    near = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))) <= HAMMING_MAX
+    sim_tag = F.when(near, _D35_TAG["simhash"]).otherwise(0)
+    cross = (
+        votes.join(rsim.toDF("ga", "ha"), "ga")
+        .join(rsim.toDF("gb", "hb"), "gb")
+        .select("ga", "gb", (F.col("mask") + sim_tag).alias("mask"))
+        .filter(F.bit_count("mask") >= 2)
     )
-    ng = d04_ngram_jaccard(spark, sf_dir, rep_shingles=rep_shingles).select(
-        "da", "db", F.lit(_D35_TAG["ngram"]).alias("tag")
+    ng_tag = ng_intra.select("gid", F.lit(_D35_TAG["ngram"]).alias("tag"))
+    intra = with_sig.join(bounded_broadcast(ng_tag, n_reps), "gid", "left").select(
+        "gid",
+        (
+            F.lit(_D35_TAG["minhash"] | _D35_TAG["simhash"])
+            + F.coalesce("tag", F.lit(0))
+        ).alias("mask"),
     )
-    # A pair can only reach >= 2 methods if minhash or ngram flags it —
-    # simhash alone is one method. So aggregate the two SMALL members first
-    # (both are output-bounded: LSH-verified / MIN_SHARED-filtered), then
-    # mark simhash membership by probing d03b's pair stream against that
-    # small pair set. On a near-dup-heavy corpus the simhash member utterly
-    # dominates the union (sf1 synth: ~157.3M of 157.7M rows); aggregating
-    # the union hash-partitioned it twice and spilled the partial aggregate
-    # (32 concurrent tasks × ~157M mostly-unique keys vs a shared-heap
-    # execution pool — measured at ~4-way effective parallelism). The probe
-    # form never exchanges or aggregates the dominant stream at all: a
-    # broadcast LEFT SEMI consumes it map-side (guide §3.2 semi-join
-    # reduction; §2.2 shuffle fewer bytes). Past the broadcast cap the semi
-    # join shuffles both sides — still |small| + one pass over sh, never an
-    # aggregate of sh.
-    small = (
-        mh.unionByName(ng)
-        .groupBy("da", "db")
-        .agg(F.sum("tag").alias("mask_s"))
-        # referenced twice (semi-join probe + final left join): cut the
-        # full minhash+ngram lineage once instead of executing it per
-        # reference
-        .localCheckpoint(eager=True)
-    )
-    # Simhash membership WITHOUT materializing d03b's pair stream: with 4
-    # byte-bands and HAMMING_MAX = 3, pigeonhole guarantees every
-    # hamming-≤-3 pair shares at least one untouched band, so d03b's pair
-    # set is EXACTLY {(da < db): hamming(simhash_a, simhash_b) ≤ 3} — the
-    # band blocking is pure acceleration, zero recall loss (set equality
-    # pinned in tests). Since the output needs ≥ 2 methods and simhash
-    # alone is 1, output ⊆ `small`; so attach each side's simhash VALUE to
-    # the small pair set (simhash is a pure text function — computed once
-    # per text-group rep, looked up through the group map) and filter on
-    # hamming directly. O(|small|) probes replace the d03b fan-out, whose
-    # expanded pair stream dominated the ensemble even when consumed
-    # map-side (guide §1.1 first-principles floor: one signature pass +
-    # one probe per candidate pair).
     m = _text_groups(spark, sf_dir)
-    rsim = _simhashes_of(_rep_docs(spark, sf_dir)).withColumnRenamed(
-        "doc_id", "gid"
-    )
-    n_docs = _doc_count(spark, sf_dir)
-    doc_sim = m.join(bounded_broadcast(rsim, n_docs), "gid").select(
-        "doc_id", "simhash"
-    )
-    sim_b = bounded_broadcast(doc_sim, n_docs)
-    hits = (
-        small.select("da", "db")
-        .join(sim_b.select(F.col("doc_id").alias("da"), F.col("simhash").alias("ha")), "da")
-        .join(sim_b.select(F.col("doc_id").alias("db"), F.col("simhash").alias("hb")), "db")
-        .filter(
-            F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))) <= HAMMING_MAX
-        )
-        .select("da", "db", F.lit(_D35_TAG["simhash"]).alias("tag_sh"))
-    )
-    # `small` is per-pair unique (groupBy output) and the simhash lookup
-    # is 1 row/doc, so `hits` is per-pair unique and the left join below
-    # adds the simhash bit exactly once.
-    agg = small.join(
-        bounded_broadcast(hits, n_docs), ["da", "db"], "left"
-    ).select(
-        "da",
-        "db",
-        (F.col("mask_s") + F.coalesce("tag_sh", F.lit(0))).alias("mask"),
-    )
-    return agg.filter(F.bit_count("mask") >= 2).select(
+    return _fan_out(m, _doc_count(spark, sf_dir), cross, intra).select(
         "da",
         "db",
         F.bit_count("mask").cast("long").alias("n_methods"),

@@ -1182,8 +1182,8 @@ SUITE["b31_stream_sessions"] = QueryCase(
 def b32_stream_connector_sink(spark, sf_dir):
     utc(spark)
     import shutil
-    import tempfile
 
+    from datafusion_table_providers_spark.session import scratch_dir
     from datafusion_table_providers_spark.sources.backends import (
         DuckDBBackend,
     )
@@ -1197,9 +1197,10 @@ def b32_stream_connector_sink(spark, sf_dir):
 
     app = spark.sparkContext.applicationId
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"engine_b32_{tag}_{app}")
-    # A crashed prior run can orphan a WAL / tmp next to the database;
-    # DuckDB would replay the stale WAL into the fresh file — sweep them.
+    base = os.path.join(scratch_dir(), f"engine_b32_{tag}_{app}")
+    # An earlier call in this process leaves the database, its WAL / tmp
+    # and the stream checkpoint behind; DuckDB would replay a stale WAL into
+    # the fresh file — sweep them.
     for leftover in (
         base + ".duckdb",
         base + ".duckdb.wal",

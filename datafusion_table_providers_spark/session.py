@@ -161,6 +161,17 @@ def _socket_dir() -> str:
     return path
 
 
+@functools.cache
+def scratch_dir() -> str:
+    """This process's directory for the engine's temp files (spooled
+    fragments, sink databases, signature stores, compaction targets): made
+    under ``tempfile.gettempdir()`` on first use and removed with all it
+    holds at interpreter exit."""
+    path = tempfile.mkdtemp(prefix="dtps-scratch-")
+    atexit.register(shutil.rmtree, path, True)
+    return path
+
+
 def get_spark(app_name: str = "datafusion_table_providers_spark") -> SparkSession:
     """Build (or reuse) a tuned SparkSession on local[$SPARK_GRAFT_CPUS]."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")

@@ -314,20 +314,3 @@ class SQLiteBackend(Backend):
                 "SELECT name FROM sqlite_master WHERE type IN ('table','view')"
             ).fetchall()
         return [r[0] for r in rows]
-
-
-#: Process-wide instance cache, keyed like the reference's DbInstanceKey
-#: (crates/duckdb/src/lib.rs:358-398) so repeated factory calls share a pool.
-_INSTANCES: Dict[str, Backend] = {}
-
-
-def get_backend(kind: str, path: str = ":memory:", **kwargs) -> Backend:
-    key = f"{kind}:{path}"
-    if key not in _INSTANCES:
-        if kind == "duckdb":
-            _INSTANCES[key] = DuckDBBackend(path, **kwargs)
-        elif kind == "sqlite":
-            _INSTANCES[key] = SQLiteBackend(path, **kwargs)
-        else:
-            raise ValueError(f"unknown backend kind: {kind}")
-    return _INSTANCES[key]

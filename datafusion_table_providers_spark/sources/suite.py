@@ -21,7 +21,7 @@ from datafusion_table_providers_spark import session
 from datafusion_table_providers_spark.core.case import QueryCase, utc
 from datafusion_table_providers_spark.engine import Engine
 from datafusion_table_providers_spark.operators.relational import _r, _rsql
-from datafusion_table_providers_spark.session import bounded_broadcast
+from datafusion_table_providers_spark.session import bounded_broadcast, scratch_dir
 from datafusion_table_providers_spark.sources.backends import (
     DuckDBBackend,
     SQLiteBackend,
@@ -639,13 +639,11 @@ def c14_signature_store_dedup(spark, sf_dir):
     stored = sig.filter(F.col("doc_id") % 10 != 0)
     new = sig.filter(F.col("doc_id") % 10 == 0)
 
-    # per-application filename: two concurrent drivers (or xdist workers)
+    # a per-process directory: two concurrent drivers (or xdist workers)
     # must not race on one store file — one would remove/rewrite it while
     # the other's executors are lazily scanning it
     app = spark.sparkContext.applicationId
-    path = os.path.join(
-        tempfile.gettempdir(), f"engine_sig_{_tag(sf_dir)}_{app}.duckdb"
-    )
+    path = os.path.join(scratch_dir(), f"engine_sig_{_tag(sf_dir)}_{app}.duckdb")
     if os.path.exists(path):
         os.remove(path)
     backend = DuckDBBackend(path)
@@ -786,9 +784,7 @@ def c16_compacted_scan(spark, sf_dir):
     from datafusion_table_providers_spark.write.output import compact_dataset
 
     app = spark.sparkContext.applicationId
-    path = os.path.join(
-        tempfile.gettempdir(), f"engine_compact_{_tag(sf_dir)}_{app}"
-    )
+    path = os.path.join(scratch_dir(), f"engine_compact_{_tag(sf_dir)}_{app}")
     if os.path.exists(path):
         import shutil
 

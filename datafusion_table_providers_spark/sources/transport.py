@@ -18,13 +18,13 @@ not the driver — hold the data. Driver memory is bounded by
 
 On a real cluster pass ``spool_dir`` on shared storage (the same contract as
 write.writer's spool transport); executor parquet reads need a path every
-node sees.
+node sees. Its files are the caller's to remove. Without it, a spool lands in
+``session.scratch_dir()``, which is removed at interpreter exit.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 from typing import Optional
 
@@ -32,7 +32,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-from datafusion_table_providers_spark.session import bounded_broadcast
+from datafusion_table_providers_spark.session import bounded_broadcast, scratch_dir
 
 #: Above this many rows a pushed fragment is spooled instead of held on the
 #: driver. ~250k rows of a typical aggregate result is tens of MB — well
@@ -69,7 +69,7 @@ def materialize_remote(
             buffered.append(batch)
             rows += batch.num_rows
             if rows > threshold_rows:
-                base = spool_dir or tempfile.gettempdir()
+                base = spool_dir or scratch_dir()
                 path = os.path.join(base, f"fed_spool_{uuid.uuid4().hex}.parquet")
                 writer = pq.ParquetWriter(path, buffered[0].schema)
                 for b in buffered:

@@ -78,8 +78,9 @@ for _mod, _attr in [
 #: c14_signature_store_dedup for c04 (c14 itself writes through
 #: writer.insert_into into DuckDB and scans back through the connector;
 #: c05b/c07/c08/c13 keep the rest of the write path certified),
-#: d35_ensemble_neardup for d03b (d35 executes the d02b/d03b/d04 builders
-#: verbatim and unions them), and p03_corpus_report for p01b (p02 keeps the
+#: d35_ensemble_neardup for d03b (d35 votes on the text-group pairs of the
+#: d02b and d04 builders and applies d03b's hamming test to the reps'
+#: simhashes), and p03_corpus_report for p01b (p02 keeps the
 #: pipeline capstone slot). c15_runtime_filter_scan (dynamic-filter
 #: pushdown) later replaces r2+r3-green c01; the session's remaining new
 #: ops certify in-round too — d36b_mix_pipeline (d36+d38+d39+p04 merged)

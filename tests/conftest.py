@@ -57,3 +57,22 @@ def dup_heavy_dir(spark, tmp_path):
         *[c for c in src.columns if c != "doc_id"],
     ).unionByName(extra.select(*src.columns)).write.parquet(out)
     return str(tmp_path)
+
+
+@pytest.fixture()
+def large_group_dir(spark, tmp_path):
+    """sf0.001 plus one very large text group: 300 copies of one long text
+    (its every shingle is over the n-gram frequency cap) and 5 near-variants
+    that each swap one of its 80 words."""
+    words = [f"tok{i}" for i in range(80)]
+    texts = [" ".join(words)] * 300
+    for at in (10, 25, 40, 55, 70):
+        texts.append(" ".join(words[:at] + [f"alt{at}"] + words[at + 1:]))
+    src = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    extra = spark.createDataFrame(
+        [(8_000_000 + i, t, "en", "s8", len(t)) for i, t in enumerate(texts)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    out = str(tmp_path / "documents.parquet")
+    src.unionByName(extra.select(*src.columns)).write.parquet(out)
+    return str(tmp_path)

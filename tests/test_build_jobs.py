@@ -89,3 +89,8 @@ def test_d26_build_job_budget(spark):
 def test_d12_build_job_budget(spark):
     jobs = _warm_build_jobs(spark, dedup.d12_dedup_components)
     assert jobs <= 18, jobs
+
+
+def test_d35_build_job_budget(spark):
+    jobs = _warm_build_jobs(spark, dedup.d35_ensemble_neardup)
+    assert jobs <= 6, jobs

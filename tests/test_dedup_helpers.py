@@ -61,7 +61,7 @@ BROADCAST_SITES = {
     "d04": {"d04.common"},
     "d22": {"d22.bad"},
     "d04b": {"d04.common", "d22.bad"},
-    "d35": {"d04.common"},  # inside d35's eager `small` checkpoint
+    "d35": {"d04.common"},  # d04's rare-shingle filter in d35's final plan
     "d36": {"d36.mix"},
     "d39": {"d36.mix"},  # d39 orders d36's repeats
     "p04": {"p04.mix"},

@@ -218,3 +218,55 @@ def test_small_federated_fragment_broadcasts(spark, tmp_path):
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
     assert joined.count() == 50_000
+
+
+#: Spools one fragment to the default directory and one to a caller's, then
+#: exits; prints where each went.
+SPOOL_SCRIPT = """
+import json, os, sys
+from datafusion_table_providers_spark.session import get_spark, scratch_dir
+from datafusion_table_providers_spark.sources.backends import DuckDBBackend
+from datafusion_table_providers_spark.sources.transport import materialize_remote
+
+spark = get_spark("spool_cleanup")
+b = DuckDBBackend(":memory:")
+sql = "SELECT range AS id FROM range(10)"
+df = materialize_remote(spark, b, sql, threshold_rows=0)
+kept = materialize_remote(spark, b, sql, threshold_rows=0, spool_dir=sys.argv[1])
+print(json.dumps({"rows": [df.count(), kept.count()], "scratch": scratch_dir(),
+                  "spooled": os.listdir(scratch_dir())}))
+"""
+
+
+def test_default_spool_removed_at_exit(tmp_path):
+    """A fragment spooled without ``spool_dir`` lands in the process's
+    scratch directory under the temp dir, which is gone once the driver
+    exits; a caller's ``spool_dir`` keeps its file."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp, keep = tmp_path / "tmp", tmp_path / "keep"
+    tmp.mkdir()
+    keep.mkdir()
+    env = dict(
+        os.environ,
+        PYTHONPATH=root,
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        TMPDIR=str(tmp),
+        PYSPARK_PYTHON=sys.executable,
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", SPOOL_SCRIPT, str(keep)],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["rows"] == [10, 10]
+    assert out["scratch"].startswith(str(tmp))
+    assert [f.startswith("fed_spool_") for f in out["spooled"]] == [True]
+    assert not os.path.exists(out["scratch"])
+    assert [f.name.startswith("fed_spool_") for f in keep.iterdir()] == [True]

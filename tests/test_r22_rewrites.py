@@ -132,16 +132,20 @@ def test_d03b_group_expand_matches_naive(spark):
     assert any(h == 0 for (_, _, h) in got)
 
 
-def test_d35_mask_agg_matches_countdistinct(spark):
-    """The bit-mask ensemble aggregate must reproduce the old
-    countDistinct/collect_set aggregate row-for-row."""
-    mh = dedup.d02b_minhash_lsh_pairs(spark, SF).select(
+@pytest.mark.parametrize("corpus", ["sf0.001", "dup_heavy", "large_group"])
+def test_d35_mask_agg_matches_countdistinct(spark, corpus, request):
+    """The group-level vote must reproduce the legacy doc-level aggregate
+    (the union of the three members' doc pairs, countDistinct/collect_set
+    per pair) row-for-row, on plain, all-duplicate and one-large-group
+    corpora."""
+    sf_dir = SF if corpus == "sf0.001" else request.getfixturevalue(f"{corpus}_dir")
+    mh = dedup.d02b_minhash_lsh_pairs(spark, sf_dir).select(
         "da", "db", F.lit("minhash").alias("method")
     )
-    sh = dedup.d03b_simhash_pairs(spark, SF).select(
+    sh = dedup.d03b_simhash_pairs(spark, sf_dir).select(
         "da", "db", F.lit("simhash").alias("method")
     )
-    ng = dedup.d04_ngram_jaccard(spark, SF).select(
+    ng = dedup.d04_ngram_jaccard(spark, sf_dir).select(
         "da", "db", F.lit("ngram").alias("method")
     )
     u = mh.unionByName(sh).unionByName(ng)
@@ -156,8 +160,33 @@ def test_d35_mask_agg_matches_countdistinct(spark):
         .filter(F.col("n_methods") >= 2)
     )
     want = sorted(map(tuple, legacy.collect()))
-    got = sorted(map(tuple, dedup.d35_ensemble_neardup(spark, SF).collect()))
+    got = sorted(map(tuple, dedup.d35_ensemble_neardup(spark, sf_dir).collect()))
     assert got == want and len(got) > 0
+
+    # every member pair of a group whose rep has a signature votes minhash
+    # and simhash (identical texts), and no other member pair appears
+    m = dedup._text_groups(spark, sf_dir)
+    with_sig = dedup._rep_signature_df(spark, sf_dir).select(
+        F.col("doc_id").alias("gid")
+    )
+    a = m.join(with_sig, "gid").select("gid", F.col("doc_id").alias("da"))
+    b = m.select("gid", F.col("doc_id").alias("db"))
+    intra = {
+        (r.da, r.db)
+        for r in a.join(b, "gid").filter(F.col("da") < F.col("db")).collect()
+    }
+    gid = {r.doc_id: r.gid for r in m.collect()}
+    assert intra <= {(da, db) for da, db, _, _ in got}
+    assert intra or corpus == "sf0.001"  # sf0.001 has no duplicate text
+    for da, db, _, methods in got:
+        if gid[da] == gid[db]:
+            assert (da, db) in intra
+            assert methods in ("minhash,simhash", "minhash,ngram,simhash")
+    if corpus == "dup_heavy":
+        # the empty, 1-token and 2-token duplicate groups have no shingle
+        flat = {d for p in got for d in p[:2]}
+        assert flat.isdisjoint(range(9_000_000, 9_000_006))
+        assert {9_000_006, 9_000_007} <= flat
 
 
 def test_d35_members_emit_unique_pairs(spark):

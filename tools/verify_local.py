@@ -28,13 +28,13 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 STRICT = os.environ.get("VERIFY_STRICT", "") == "1"
 
 
-def canon(v):
+def canon(v, strict: bool = STRICT):
     if v is None:
         return "NULL"
     if isinstance(v, float):
         if math.isnan(v):
             return "NaN"
-        if STRICT:
+        if strict:
             return repr(v)
         if v == int(v) and abs(v) < 1e15:
             return str(int(v))
@@ -48,15 +48,61 @@ def canon(v):
     if isinstance(v, dt.date):
         return v.isoformat()
     if isinstance(v, (list, tuple)):
-        return "[" + ",".join(canon(x) for x in v) + "]"
+        return "[" + ",".join(canon(x, strict) for x in v) + "]"
     if isinstance(v, bytes):
         return v.hex()
     return str(v)
 
 
-def rows_key(cols, rows):
+def rows_key(cols, rows, strict: bool = STRICT):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(canon(r[i]) for i in order) for r in rows)
+    return sorted(tuple(canon(r[i], strict) for i in order) for r in rows)
+
+
+def oracle_connection(sf_dir: str):
+    """An in-memory DuckDB connection with one view per parquet table of
+    ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def compare_entry(spark, con, fn, sql, sf_dir: str, strict: bool = STRICT):
+    """(verdict, detail) of one registry entry ``fn`` against its oracle
+    ``sql`` on ``con``. The verdict is PASS, FAIL or SKIP (no oracle); a
+    value mismatch's detail ends with the first differing row of each
+    side."""
+    try:
+        sdf = fn(spark, sf_dir)
+        srows = sdf.collect()
+        scols = sdf.columns
+    except Exception as e:
+        return "FAIL", f"spark error: {type(e).__name__}: {e}"
+    if sql is None:
+        return "SKIP", f"no oracle (rows-only): {len(srows)} rows"
+    try:
+        res = con.execute(sql)
+        ocols = [d[0] for d in res.description]
+        orows = res.fetchall()
+    except Exception as e:
+        return "FAIL", f"duckdb error: {type(e).__name__}: {e}"
+    if sorted(scols) != sorted(ocols):
+        return "FAIL", f"columns spark={sorted(scols)} oracle={sorted(ocols)}"
+    if len(srows) != len(orows):
+        return "FAIL", f"rowcount spark={len(srows)} oracle={len(orows)}"
+    sk = rows_key(scols, [[r[c] for c in scols] for r in srows], strict)
+    ok = rows_key(ocols, orows, strict)
+    diff = [(a, b) for a, b in zip(sk, ok) if a != b]
+    if diff:
+        a, b = diff[0]
+        return "FAIL", (
+            f"value mismatch ({len(diff)}/{len(sk)} rows differ)"
+            f"\n  spark : {a}\n  oracle: {b}"
+        )
+    return "PASS", f"{len(srows)} rows"
 
 
 def main():
@@ -87,63 +133,20 @@ def main():
         spark = get_spark("verify_local")
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    con = oracle_connection(sf_dir)
 
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-
-    n_pass = n_fail = n_skip = 0
+    counts = {"PASS": 0, "FAIL": 0, "SKIP": 0}
     for name, fn in qs.items():
         if filters and not any(f in name for f in filters):
             continue
         t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            srows = sdf.collect()
-            scols = sdf.columns
-        except Exception as e:
-            print(f"FAIL {name}: spark error: {type(e).__name__}: {e}")
-            n_fail += 1
-            continue
-        sql = oracles.get(name)
-        if sql is None:
-            print(f"SKIP {name}: no oracle (rows-only): {len(srows)} rows  [{time.time()-t0:.1f}s]")
-            n_skip += 1
-            continue
-        try:
-            res = con.execute(sql)
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
-        except Exception as e:
-            print(f"FAIL {name}: duckdb error: {type(e).__name__}: {e}")
-            n_fail += 1
-            continue
-        if sorted(scols) != sorted(ocols):
-            print(f"FAIL {name}: columns spark={sorted(scols)} oracle={sorted(ocols)}")
-            n_fail += 1
-            continue
-        if len(srows) != len(orows):
-            print(f"FAIL {name}: rowcount spark={len(srows)} oracle={len(orows)}")
-            n_fail += 1
-            continue
-        sk = rows_key(scols, [[r[c] for c in scols] for r in srows])
-        ok = rows_key(ocols, orows)
-        if sk != ok:
-            ndiff = sum(1 for a, b in zip(sk, ok) if a != b)
-            print(f"FAIL {name}: value mismatch ({ndiff}/{len(sk)} rows differ)")
-            for a, b in list(zip(sk, ok))[:200]:
-                if a != b:
-                    print(f"  spark : {a}\n  oracle: {b}")
-                    break
-            n_fail += 1
-            continue
-        print(f"PASS {name}: {len(srows)} rows  [{time.time()-t0:.1f}s]")
-        n_pass += 1
+        verdict, detail = compare_entry(spark, con, fn, oracles.get(name), sf_dir)
+        counts[verdict] += 1
+        print(f"{verdict} {name}: {detail}  [{time.time()-t0:.1f}s]")
 
-    print(f"\n{n_pass} passed, {n_fail} failed, {n_skip} rows-only")
-    return 1 if n_fail else 0
+    print(f"\n{counts['PASS']} passed, {counts['FAIL']} failed, "
+          f"{counts['SKIP']} rows-only")
+    return 1 if counts["FAIL"] else 0
 
 
 if __name__ == "__main__":
