@@ -4,15 +4,18 @@ A realistic corpus-preparation flow chained from the primitives this package
 provides, as ONE oracle-checked query:
 
 1. **quality gate** — drop documents under 5 whitespace tokens;
-2. **exact dedup** — keep the minimum doc_id per md5(text) (d01 discipline);
-3. **near-dup removal** — drop every non-canonical member of a MinHash-LSH
-   duplicate component (d02b candidates → d12 connected components; the
-   canonical representative is the component's min doc_id);
-4. **report** — surviving docs and token mass per language.
+2. **exact + near-dup removal** — drop every non-canonical member of a
+   MinHash-LSH duplicate component (d02b candidates → d12 connected
+   components; the canonical representative is the component's min doc_id).
+   Identical texts that pass the gate share a component, so this also
+   keeps exactly the minimum doc_id per md5(text) (see
+   :func:`_curated_docs`);
+3. **report** — surviving docs and token mass per language.
 
-Scale shape: each stage is one shuffle (hash-group / semi-join / anti-join);
-nothing is quadratic and nothing touches the driver. The DuckDB oracle
-replays the identical pipeline with the d12 recursive-CTE closure inlined.
+Scale shape: each stage is one shuffle (hash-group / anti-join); nothing is
+quadratic and nothing touches the driver. The DuckDB oracle replays the
+pipeline naively — a separate exact-dedup pass, then the d12 recursive-CTE
+closure inlined.
 """
 
 from __future__ import annotations
@@ -29,22 +32,35 @@ from datafusion_table_providers_spark.operators.relational import _t
 MIN_TOKENS = 5
 
 
-def p01_training_data_prep(spark, sf_dir):
+def _curated_docs(spark, sf_dir):
+    """(doc_id, lang, source, n_tokens) of the docs that pass the quality
+    gate and are the canonical member of their d12 component (or in none):
+    the front half p01 and p02 share.
+
+    It needs no exact-dedup pass. ``n_tokens`` counts the tokens of
+    ``split(text, " ")``, empty ones included, and the dedup shingles
+    posexplode the same split, so every doc that passes the gate has at
+    least MIN_TOKENS - 2 shingles and a MinHash signature. d12 puts every
+    text group with a signature whole into one component labelled with a
+    doc_id no larger than the group's minimum, so it drops every other
+    member of the group, as exact dedup would."""
     d = _t(spark, sf_dir, "documents")
-    base = d.select(
-        "doc_id", "lang", "text", F.size(F.split("text", " ")).alias("n_tokens")
-    )
-    filtered = base.filter(F.col("n_tokens") >= MIN_TOKENS)
-    keep_exact = filtered.groupBy(F.md5("text").alias("h")).agg(
-        F.min("doc_id").alias("doc_id")
-    )
-    kept = filtered.join(
-        keep_exact.select("doc_id"), "doc_id", "left_semi"
-    )
     comp = d12_dedup_components(spark, sf_dir)
     dropme = comp.filter(F.col("component_id") != F.col("doc_id")).select("doc_id")
-    final = kept.join(dropme, "doc_id", "left_anti")
-    return final.groupBy("lang").agg(
+    return (
+        d.select(
+            "doc_id",
+            "lang",
+            "source",
+            F.size(F.split("text", " ")).alias("n_tokens"),
+        )
+        .filter(F.col("n_tokens") >= MIN_TOKENS)
+        .join(dropme, "doc_id", "left_anti")
+    )
+
+
+def p01_training_data_prep(spark, sf_dir):
+    return _curated_docs(spark, sf_dir).groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tokens").alias("total_tokens"),
     )
@@ -76,14 +92,15 @@ FROM final GROUP BY lang
 
 
 def p02_full_curation(spark, sf_dir):
-    """The complete curation flow as one DAG: quality gate → exact dedup →
+    """The complete curation flow as one DAG: quality gate → exact and
     near-dup removal → eval-set exclusion + decontamination → deterministic
     stratified sampling → sequence packing → per-source packing report.
 
-    Every stage is the already-certified primitive (p01 front half, d13/d14/
-    d15 back half) chained without materialization: Catalyst sees one plan,
-    each stage is at most one shuffle, and the only driver-visible data is
-    the final per-source report."""
+    Every stage is the already-certified primitive (p01's front half
+    :func:`_curated_docs`, d13/d14/d15 back half) chained without
+    materialization: Catalyst sees one plan, each stage is at most one
+    shuffle, and the only driver-visible data is the final per-source
+    report."""
     from datafusion_table_providers_spark.llm.curation import (
         DECON_MOD,
         DECON_N,
@@ -93,24 +110,7 @@ def p02_full_curation(spark, sf_dir):
     )
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
-    base = d.select(
-        "doc_id",
-        "lang",
-        "source",
-        "text",
-        F.size(F.split("text", " ")).alias("n_tokens"),
-    )
-    filtered = base.filter(F.col("n_tokens") >= MIN_TOKENS)
-    keep_exact = filtered.groupBy(F.md5("text").alias("h")).agg(
-        F.min("doc_id").alias("doc_id")
-    )
-    kept = filtered.join(keep_exact.select("doc_id"), "doc_id", "left_semi")
-    comp = d12_dedup_components(spark, sf_dir)
-    dropme = comp.filter(F.col("component_id") != F.col("doc_id")).select(
-        "doc_id"
-    )
-    deduped = kept.join(dropme, "doc_id", "left_anti")
+    deduped = _curated_docs(spark, sf_dir)
 
     # decontamination: exclude the eval split itself, then drop any training
     # doc sharing a DECON_N-gram with it, as in d13.

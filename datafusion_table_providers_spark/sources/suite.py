@@ -6,14 +6,14 @@ SQLite connectors with pushdown, whole-plan federation, and the write path
 equivalent plain SQL on the raw parquet — so a pass certifies the connector
 pipeline, not just Catalyst.
 
-Temp databases are rebuilt per (sf_dir) under /tmp and keyed by scale so
-repeated runs are idempotent.
+Temp databases are rebuilt per (sf_dir) in the process's
+``session.scratch_dir()``, keyed by scale so repeated runs are idempotent,
+and removed with that directory at interpreter exit.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -136,7 +136,7 @@ def c04_duckdb_write_roundtrip(spark, sf_dir):
         duckdb_reader_df,
     )
 
-    path = os.path.join(tempfile.gettempdir(), f"engine_w_{_tag(sf_dir)}.duckdb")
+    path = os.path.join(scratch_dir(), f"engine_w_{_tag(sf_dir)}.duckdb")
     if os.path.exists(path):
         os.remove(path)
     backend = DuckDBBackend(path)
@@ -163,7 +163,7 @@ def c05_duckdb_upsert(spark, sf_dir):
         duckdb_reader_df,
     )
 
-    path = os.path.join(tempfile.gettempdir(), f"engine_u_{_tag(sf_dir)}.duckdb")
+    path = os.path.join(scratch_dir(), f"engine_u_{_tag(sf_dir)}.duckdb")
     if os.path.exists(path):
         os.remove(path)
     backend = DuckDBBackend(path)
@@ -204,7 +204,7 @@ def c06_duckdb_dml(spark, sf_dir):
         duckdb_reader_df,
     )
 
-    path = os.path.join(tempfile.gettempdir(), f"engine_d_{_tag(sf_dir)}.duckdb")
+    path = os.path.join(scratch_dir(), f"engine_d_{_tag(sf_dir)}.duckdb")
     if os.path.exists(path):
         os.remove(path)
     backend = DuckDBBackend(path)
@@ -236,7 +236,7 @@ def c07_sqlite_roundtrip(spark, sf_dir):
         sqlite_reader_df,
     )
 
-    path = os.path.join(tempfile.gettempdir(), f"engine_s_{_tag(sf_dir)}.db")
+    path = os.path.join(scratch_dir(), f"engine_s_{_tag(sf_dir)}.db")
     if os.path.exists(path):
         os.remove(path)
     backend = SQLiteBackend(path)
@@ -274,7 +274,7 @@ def c08_duckdb_overwrite(spark, sf_dir):
         duckdb_reader_df,
     )
 
-    path = os.path.join(tempfile.gettempdir(), f"engine_o_{_tag(sf_dir)}.duckdb")
+    path = os.path.join(scratch_dir(), f"engine_o_{_tag(sf_dir)}.duckdb")
     if os.path.exists(path):
         os.remove(path)
     backend = DuckDBBackend(path)
@@ -305,9 +305,7 @@ def c09_dbapi_scan(spark, sf_dir):
         dbapi_reader_df,
     )
 
-    path = os.path.join(
-        tempfile.gettempdir(), f"engine_dbapi_{_tag(sf_dir)}.db"
-    )
+    path = os.path.join(scratch_dir(), f"engine_dbapi_{_tag(sf_dir)}.db")
     if os.path.exists(path):
         os.remove(path)
     backend = SQLiteBackend(path)
@@ -517,9 +515,7 @@ def c13_sqlite_dml(spark, sf_dir):
         sqlite_reader_df,
     )
 
-    path = os.path.join(
-        tempfile.gettempdir(), f"engine_sdml_{_tag(sf_dir)}.db"
-    )
+    path = os.path.join(scratch_dir(), f"engine_sdml_{_tag(sf_dir)}.db")
     if os.path.exists(path):
         os.remove(path)
     backend = SQLiteBackend(path)
@@ -568,9 +564,7 @@ def c12_adbc_scan(spark, sf_dir):
     utc(spark)
     from datafusion_table_providers_spark.factories import ADBCTableFactory
 
-    path = os.path.join(
-        tempfile.gettempdir(), f"engine_adbc_{_tag(sf_dir)}.duckdb"
-    )
+    path = os.path.join(scratch_dir(), f"engine_adbc_{_tag(sf_dir)}.duckdb")
     if os.path.exists(path):
         os.remove(path)
     backend = DuckDBBackend(path)

@@ -3,7 +3,10 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# the sweep's oracle compare and job-group counter (tools/verify_local.py)
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -5,26 +5,13 @@ one build reads the documents table once."""
 
 from __future__ import annotations
 
-import time
-
 import pyspark.sql.functions as F
 
 from datafusion_table_providers_spark.core.memo import clear_memo_caches
 from datafusion_table_providers_spark.llm import dedup
 
 from tests.conftest import SF_DIR
-
-
-def _with_jobs(spark, fn):
-    """(fn(), number of Spark jobs fn ran), counted through a job group."""
-    sc = spark.sparkContext
-    group = f"build-jobs-{time.time_ns()}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+from verify_local import job_group
 
 
 def test_doc_count_and_schema_from_footers(spark, dup_heavy_dir):
@@ -32,11 +19,9 @@ def test_doc_count_and_schema_from_footers(spark, dup_heavy_dir):
     # next to _SUCCESS and .crc files
     for sf in (SF_DIR, dup_heavy_dir):
         clear_memo_caches()
-        (docs, n), jobs = _with_jobs(
-            spark,
-            lambda: (dedup._documents(spark, sf), dedup._doc_count(spark, sf)),
-        )
-        assert jobs == 0
+        with job_group(spark) as build:
+            docs, n = dedup._documents(spark, sf), dedup._doc_count(spark, sf)
+        assert build.jobs == []
         inferred = spark.read.parquet(f"{sf}/documents.parquet")
         assert docs.schema == inferred.schema
         assert n == inferred.count()
@@ -45,8 +30,9 @@ def test_doc_count_and_schema_from_footers(spark, dup_heavy_dir):
 def test_observed_rep_count_matches_naive(spark, dup_heavy_dir):
     clear_memo_caches()
     m = dedup._text_groups(spark, dup_heavy_dir)
-    n, jobs = _with_jobs(spark, lambda: dedup._rep_count(spark, dup_heavy_dir))
-    assert jobs == 0
+    with job_group(spark) as build:
+        n = dedup._rep_count(spark, dup_heavy_dir)
+    assert build.jobs == []
     assert n == m.where(F.col("doc_id") == F.col("gid")).count()
     # the replicated corpus has 3 copies of each sf0.001 text plus 4
     # duplicated degenerate texts, so groups are far fewer than docs
@@ -71,9 +57,10 @@ def _warm_build_jobs(spark, op):
     in a cold session can run a job or two more while Spark warms up."""
     op(spark, SF_DIR)
     clear_memo_caches()
-    df, jobs = _with_jobs(spark, lambda: op(spark, SF_DIR))
+    with job_group(spark) as build:
+        df = op(spark, SF_DIR)
     assert df.count() > 0
-    return jobs
+    return len(build.jobs)
 
 
 def test_d02b_build_job_budget(spark):

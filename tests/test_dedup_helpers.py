@@ -21,8 +21,8 @@ from datafusion_table_providers_spark.llm import dedup, similarity  # noqa: F401
 from datafusion_table_providers_spark.suite import FULL_SUITE
 
 from tests.conftest import SF_DIR
-from tests.test_build_jobs import _with_jobs
 from tests.test_r22_rewrites import _naive_d02b
+from verify_local import job_group
 
 _FINAL = re.compile(r"== Final Plan ==(.*?)(== Initial Plan ==|$)", re.S)
 
@@ -243,8 +243,9 @@ def test_memo_artifact(spark, build):
     same rows."""
     clear_memo_caches()
     first = build(spark, SF_DIR)
-    again, jobs = _with_jobs(spark, lambda: build(spark, SF_DIR))
-    assert again is first and jobs == 0
+    with job_group(spark) as call:
+        again = build(spark, SF_DIR)
+    assert again is first and call.jobs == []
     n = sum(len(b.cache) for b in MEMO_BUILDERS)
     assert n > 0 and clear_memo_caches() == n
     assert not any(b.cache for b in MEMO_BUILDERS)

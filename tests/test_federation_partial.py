@@ -15,6 +15,8 @@ from datafusion_table_providers_spark.sources.backends import (
 )
 from datafusion_table_providers_spark.write import writer
 
+from tests.conftest import SF_DIR
+
 SCHEMA = T.StructType(
     [
         T.StructField("id", T.LongType(), False),
@@ -220,28 +222,34 @@ def test_small_federated_fragment_broadcasts(spark, tmp_path):
     assert joined.count() == 50_000
 
 
-#: Spools one fragment to the default directory and one to a caller's, then
-#: exits; prints where each went.
+#: Spools one fragment to the default directory and one to a caller's, runs
+#: two registry entries that write sink databases, then exits; prints where
+#: each went.
 SPOOL_SCRIPT = """
 import json, os, sys
 from datafusion_table_providers_spark.session import get_spark, scratch_dir
 from datafusion_table_providers_spark.sources.backends import DuckDBBackend
 from datafusion_table_providers_spark.sources.transport import materialize_remote
+from datafusion_table_providers_spark.suite import FULL_SUITE
 
 spark = get_spark("spool_cleanup")
 b = DuckDBBackend(":memory:")
 sql = "SELECT range AS id FROM range(10)"
 df = materialize_remote(spark, b, sql, threshold_rows=0)
 kept = materialize_remote(spark, b, sql, threshold_rows=0, spool_dir=sys.argv[1])
+spooled = os.listdir(scratch_dir())
+sinks = [FULL_SUITE[n].fn(spark, sys.argv[2]).count()
+         for n in ("c04_duckdb_write_roundtrip", "c12_adbc_scan")]
 print(json.dumps({"rows": [df.count(), kept.count()], "scratch": scratch_dir(),
-                  "spooled": os.listdir(scratch_dir())}))
+                  "spooled": spooled, "sinks": sinks}))
 """
 
 
 def test_default_spool_removed_at_exit(tmp_path):
-    """A fragment spooled without ``spool_dir`` lands in the process's
-    scratch directory under the temp dir, which is gone once the driver
-    exits; a caller's ``spool_dir`` keeps its file."""
+    """A fragment spooled without ``spool_dir``, and the sink databases of
+    the connector entries, land in the process's scratch directory under
+    the temp dir, which is gone once the driver exits; a caller's
+    ``spool_dir`` keeps its file."""
     import json
     import os
     import subprocess
@@ -260,7 +268,7 @@ def test_default_spool_removed_at_exit(tmp_path):
         PYSPARK_PYTHON=sys.executable,
     )
     proc = subprocess.run(
-        [sys.executable, "-c", SPOOL_SCRIPT, str(keep)],
+        [sys.executable, "-c", SPOOL_SCRIPT, str(keep), SF_DIR],
         cwd=str(tmp_path), env=env, capture_output=True, text=True, timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
@@ -268,5 +276,9 @@ def test_default_spool_removed_at_exit(tmp_path):
     assert out["rows"] == [10, 10]
     assert out["scratch"].startswith(str(tmp))
     assert [f.startswith("fed_spool_") for f in out["spooled"]] == [True]
+    assert all(n > 0 for n in out["sinks"]), out["sinks"]
     assert not os.path.exists(out["scratch"])
+    left = [f for _, dirs, files in os.walk(tmp) for f in dirs + files
+            if f.startswith("engine_")]
+    assert left == []
     assert [f.name.startswith("fed_spool_") for f in keep.iterdir()] == [True]

@@ -14,7 +14,7 @@ from datafusion_table_providers_spark.write.constraints import (
 )
 from datafusion_table_providers_spark.write.on_conflict import OnConflict
 
-from tests.test_build_jobs import _with_jobs
+from verify_local import job_group
 
 SCHEMA = T.StructType(
     [
@@ -57,14 +57,14 @@ def test_pk_validation_is_one_pass(spark, tmp_duckdb):
     # a nullable key: on a NOT NULL column Catalyst drops a NULL check
     df = spark.range(2000, numPartitions=4).selectExpr(
         "nullif(id, -1) AS id", "string(id) AS v")
-    _, plain = _with_jobs(spark, lambda: writer.insert_into(
-        tmp_duckdb, "a", df, via="arrow"))
-    _, pk = _with_jobs(spark, lambda: writer.insert_into(
-        tmp_duckdb, "b", df, primary_keys=["id"], via="arrow"))
+    with job_group(spark) as plain:
+        writer.insert_into(tmp_duckdb, "a", df, via="arrow")
+    with job_group(spark) as pk:
+        writer.insert_into(tmp_duckdb, "b", df, primary_keys=["id"], via="arrow")
     # one group-count pass: its shuffle-map job and its result job; a
     # separate NOT NULL pass added two more (its LIMIT 1 scan tries one
     # partition, then the rest)
-    assert pk - plain <= 2, (pk, plain)
+    assert len(pk.jobs) - len(plain.jobs) <= 2, (pk.jobs, plain.jobs)
 
 
 def test_upsert_do_nothing_and_update(spark, tmp_duckdb):

@@ -1,17 +1,17 @@
-"""Synthesize an sf1 decade for the scale probe (VERDICT r3 item 7).
+"""Synthesize an sf1 decade for the registry sweep (tools/verify_local.py).
 
 The driver ships testdata only up to sf0.1; one more decade is needed to
 separate output-growth from algorithmic growth on the mildly super-linear
 curves (d13/d22/d25). sf1 is sf0.1 unioned 10× with disjoint id offsets
-(doc_id / vec_id / event_id / user_id), exactly the judge's prescription:
-content is replicated verbatim, so ops keyed on content (dedup families)
-see a 10×-duplication workload — the probe records output rows alongside
-wall-clock so cost-per-output-row stays interpretable.
+(doc_id / vec_id / event_id / user_id): content is replicated verbatim, so
+ops keyed on content (dedup families) see a 10×-duplication workload — the
+sweep records output rows alongside wall-clock so cost-per-output-row
+stays interpretable.
 
-Only the three tables the probe's SHOW ops read (documents, embeddings,
-events) are synthesized. Output: /root/repo/.sf1/*.parquet (workdir —
-/root/testdata is read-only). DuckDB does the union + rewrite in one
-statement per table; ~1M events rows total, seconds of work.
+Only the three tables the LLM and streaming families read (documents,
+embeddings, events) are synthesized. Output: /root/repo/.sf1/*.parquet
+(workdir — /root/testdata is read-only). DuckDB does the union + rewrite in
+one statement per table; ~1M events rows total, seconds of work.
 """
 
 from __future__ import annotations
