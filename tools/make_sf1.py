@@ -9,9 +9,10 @@ sweep records output rows alongside wall-clock so cost-per-output-row
 stays interpretable.
 
 Only the three tables the LLM and streaming families read (documents,
-embeddings, events) are synthesized. Output: /root/repo/.sf1/*.parquet
-(workdir — /root/testdata is read-only). DuckDB does the union + rewrite in
-one statement per table; ~1M events rows total, seconds of work.
+embeddings, events) are synthesized. Output: ``<out_dir>/*.parquet``
+(``.sf1`` in the repo by default; the source testdata is left untouched).
+DuckDB does the union + rewrite in one statement per table; ~1M events rows
+total, seconds of work.
 """
 
 from __future__ import annotations
