@@ -14,6 +14,8 @@ from typing import Dict, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datafusion_table_providers_spark.operators.relational import _scan
+
 #: The driver's TPC-H-ish star schema plus pipeline tables (TESTDATA.md).
 TPCH_TABLES = (
     "region",
@@ -45,7 +47,7 @@ def load_tables(
         path = os.path.join(sf_dir, f"{name}.parquet")
         if not os.path.exists(path):
             continue
-        df = spark.read.parquet(path)
+        df = _scan(spark, path)[0]
         out[name] = df
         if register_views:
             df.createOrReplaceTempView(name)

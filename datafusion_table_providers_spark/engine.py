@@ -127,7 +127,9 @@ class Engine:
 
     # -- registration -----------------------------------------------------
     def register_parquet(self, name: str, path: str) -> DataFrame:
-        df = self.spark.read.parquet(path)
+        from datafusion_table_providers_spark.operators.relational import _scan
+
+        df = _scan(self.spark, path)[0]
         df.createOrReplaceTempView(name)
         self._tables[name] = TableHandle(name, None, name)
         return df

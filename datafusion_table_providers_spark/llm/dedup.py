@@ -37,8 +37,7 @@ from pyspark.sql import functions as F
 
 from datafusion_table_providers_spark.core.case import QueryCase, utc
 from datafusion_table_providers_spark.core.memo import memo_artifact
-from datafusion_table_providers_spark.core.types import arrow_to_spark_schema
-from datafusion_table_providers_spark.operators.relational import _r, _rsql, _t
+from datafusion_table_providers_spark.operators.relational import _r, _rsql, _scan
 from datafusion_table_providers_spark.session import bounded_broadcast
 
 N_HASHES = 16
@@ -246,40 +245,15 @@ SELECT doc_id, {bands} FROM sig
 
 
 # --- shared corpus reads -------------------------------------------------
-def _footers(path: str):
-    """(row count, Arrow schema) of a local parquet file, or of a directory
-    of part files (skipping ``_``/``.`` entries as Spark's file index does),
-    read from the footers on the driver. None when the path holds no
-    parquet file on the driver's filesystem."""
-    import pyarrow.parquet as pq
-
-    def hidden(name):
-        return name.startswith(".") or (name.startswith("_") and "=" not in name)
-
-    files = [path] if os.path.isfile(path) else []
-    for root, dirs, names in os.walk(path):
-        dirs[:] = sorted(d for d in dirs if not hidden(d))
-        files += [os.path.join(root, f) for f in sorted(names) if not hidden(f)]
-    if not files:
-        return None
-    metas = [pq.read_metadata(f) for f in files]
-    return sum(m.num_rows for m in metas), metas[0].schema.to_arrow_schema()
-
-
 @memo_artifact
 def _corpus(spark, sf_dir):
     """(documents DataFrame, footer row count or None). The broadcast
-    gates need |corpus| on every dedup build, and a plain
-    ``spark.read.parquet`` runs a schema-inference job per call. One pass
-    over the parquet footers on the driver gives both the row count and the
-    schema, so neither costs a Spark job, and the group map, the rep docs
-    and the shingle pass of one build share this one read."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    foot = _footers(path)
-    if foot is None:  # remote storage: Spark infers the schema
-        return _t(spark, sf_dir, "documents"), None
+    gates need |corpus| on every dedup build; ``_scan`` reads both the row
+    count and the schema from the parquet footers on the driver, so neither
+    costs a Spark job, and the group map, the rep docs and the shingle pass
+    of one build share this one read."""
     utc(spark)
-    return spark.read.schema(arrow_to_spark_schema(foot[1])).parquet(path), foot[0]
+    return _scan(spark, os.path.join(sf_dir, "documents.parquet"))
 
 
 def _documents(spark, sf_dir):

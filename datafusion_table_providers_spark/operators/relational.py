@@ -24,10 +24,53 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datafusion_table_providers_spark.core.case import QueryCase, events_ts_meta, utc
+from datafusion_table_providers_spark.core.types import arrow_to_spark_schema
+
+
+def _footers(path: str):
+    """(row count, Arrow schema) of a local parquet file, or of a directory
+    of part files (skipping ``_``/``.`` entries as Spark's file index does),
+    read from the footers on the driver. None when the path holds no
+    parquet file on the driver's filesystem, or holds ``k=v`` partition
+    directories, whose columns no footer carries."""
+    import pyarrow.parquet as pq
+
+    def hidden(name):
+        return name.startswith((".", "_"))
+
+    files = [path] if os.path.isfile(path) else []
+    for root, dirs, names in os.walk(path):
+        if any("=" in d for d in dirs):
+            return None
+        dirs[:] = sorted(d for d in dirs if not hidden(d))
+        files += [os.path.join(root, f) for f in sorted(names) if not hidden(f)]
+    if not files:
+        return None
+    metas = [pq.read_metadata(f) for f in files]
+    return sum(m.num_rows for m in metas), metas[0].schema.to_arrow_schema()
+
+
+def _scan(spark: SparkSession, path: str):
+    """(DataFrame, row count) of the parquet at ``path``. A plain
+    ``spark.read.parquet`` runs a schema-inference Spark job while the
+    DataFrame is built; for a local path the footers give the schema and
+    the row count on the driver instead, so building costs no job. Other
+    paths (remote storage, partition directories, a type the Arrow mapping
+    lacks) fall back to Spark's inference, with no row count."""
+    foot = _footers(path)
+    if foot is not None:
+        try:
+            schema = arrow_to_spark_schema(foot[1])
+        except TypeError:
+            foot = None
+    if foot is None:
+        return spark.read.parquet(path), None
+    return spark.read.schema(schema).parquet(path), foot[0]
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     utc(spark)
+    path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         # Driver testdata has shipped events.ts both as TIMESTAMP(NANOS)
         # (round 1) and TIMESTAMP(MICROS) (round 2) — handle either. Nanos
@@ -39,11 +82,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         nanos, _ = events_ts_meta(sf_dir)
         if nanos:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        if nanos:
+            df = spark.read.parquet(path)
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        else:
+            df = _scan(spark, path)[0]
         return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _scan(spark, path)[0]
 
 
 def _r(col, decimals: int = 2):

@@ -275,30 +275,40 @@ class SQLiteBackend(Backend):
                 yield _build(p, schema)
 
     def execute(self, sql: str, params: Optional[Iterable] = None) -> int:
-        with self._lock:
-            con = self._connect()
-            cur = con.execute(sql, tuple(params or ()))
-            con.commit()
-            return cur.rowcount if cur.rowcount >= 0 else 0
+        return self._commit(lambda con: con.execute(sql, tuple(params or ())))
 
     def executemany(self, sql: str, seq) -> int:
+        return self._commit(lambda con: con.executemany(sql, seq))
+
+    def _commit(self, call) -> int:
+        """One auto-committed call. A failure rolls back what the call left
+        pending (an ``executemany`` that fails on its Nth row has run the
+        rows before it), so the next call's commit cannot land it."""
         with self._lock:
             con = self._connect()
-            cur = con.executemany(sql, seq)
-            con.commit()
+            try:
+                cur = call(con)
+                con.commit()
+            except BaseException:
+                con.rollback()
+                raise
             return cur.rowcount if cur.rowcount >= 0 else 0
 
     def transaction(self):
         """Context manager yielding the raw connection with the backend lock
-        held; commits on exit, rolls back on error. Lets multi-statement
-        units (data + commit-log marker in the streaming sink) be atomic —
-        the per-call auto-commit of execute/executemany cannot."""
+        held, inside an explicit ``BEGIN``; commits on exit, rolls back on
+        error. Lets multi-statement units (data + commit-log marker in the
+        streaming sink, a staged insert's DDL and rows) be atomic — the
+        per-call auto-commit of execute/executemany cannot, and sqlite3
+        opens no transaction of its own before DDL."""
         from contextlib import contextmanager
 
         @contextmanager
         def _tx():
             with self._lock:
                 con = self._connect()
+                if not con.in_transaction:
+                    con.execute("BEGIN")
                 try:
                     yield con
                     con.commit()

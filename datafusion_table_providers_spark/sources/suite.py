@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from datafusion_table_providers_spark import session
 from datafusion_table_providers_spark.core.case import QueryCase, utc
 from datafusion_table_providers_spark.engine import Engine
-from datafusion_table_providers_spark.operators.relational import _r, _rsql
+from datafusion_table_providers_spark.operators.relational import _r, _rsql, _scan, _t
 from datafusion_table_providers_spark.session import bounded_broadcast, scratch_dir
 from datafusion_table_providers_spark.sources.backends import (
     DuckDBBackend,
@@ -140,7 +140,7 @@ def c04_duckdb_write_roundtrip(spark, sf_dir):
     if os.path.exists(path):
         os.remove(path)
     backend = DuckDBBackend(path)
-    src = spark.read.parquet(_pq(sf_dir, "customer")).filter(
+    src = _t(spark, sf_dir, "customer").filter(
         F.col("c_custkey") <= 500
     )
     writer.insert_into(
@@ -167,7 +167,7 @@ def c05_duckdb_upsert(spark, sf_dir):
     if os.path.exists(path):
         os.remove(path)
     backend = DuckDBBackend(path)
-    cust = spark.read.parquet(_pq(sf_dir, "customer"))
+    cust = _t(spark, sf_dir, "customer")
     base = cust.filter(F.col("c_custkey") <= 300)
     writer.insert_into(
         backend, "cust", base, mode="append", primary_keys=["c_custkey"]
@@ -208,7 +208,7 @@ def c06_duckdb_dml(spark, sf_dir):
     if os.path.exists(path):
         os.remove(path)
     backend = DuckDBBackend(path)
-    nat = spark.read.parquet(_pq(sf_dir, "nation"))
+    nat = _t(spark, sf_dir, "nation")
     writer.insert_into(backend, "nat", nat, mode="append")
     n_del = writer.delete_from(backend, "nat", "n_regionkey = 0")
     n_upd = writer.update(
@@ -240,7 +240,7 @@ def c07_sqlite_roundtrip(spark, sf_dir):
     if os.path.exists(path):
         os.remove(path)
     backend = SQLiteBackend(path)
-    sup = spark.read.parquet(_pq(sf_dir, "supplier"))
+    sup = _t(spark, sf_dir, "supplier")
     writer.insert_into(
         backend, "supplier_copy", sup, mode="append", primary_keys=["s_suppkey"]
     )
@@ -278,7 +278,7 @@ def c08_duckdb_overwrite(spark, sf_dir):
     if os.path.exists(path):
         os.remove(path)
     backend = DuckDBBackend(path)
-    reg = spark.read.parquet(_pq(sf_dir, "region"))
+    reg = _t(spark, sf_dir, "region")
     writer.insert_into(backend, "reg", reg, mode="append")
     # overwrite with a transformed generation — old data must fully vanish
     reg2 = reg.withColumn("r_name", F.concat(F.lit("NEW_"), F.col("r_name")))
@@ -309,7 +309,7 @@ def c09_dbapi_scan(spark, sf_dir):
     if os.path.exists(path):
         os.remove(path)
     backend = SQLiteBackend(path)
-    part = spark.read.parquet(_pq(sf_dir, "part"))
+    part = _t(spark, sf_dir, "part")
     writer.insert_into(
         backend, "part_copy", part, mode="append", primary_keys=["p_partkey"]
     )
@@ -519,7 +519,7 @@ def c13_sqlite_dml(spark, sf_dir):
     if os.path.exists(path):
         os.remove(path)
     backend = SQLiteBackend(path)
-    nat = spark.read.parquet(_pq(sf_dir, "nation"))
+    nat = _t(spark, sf_dir, "nation")
     writer.insert_into(backend, "nat", nat, mode="append")
     n_del = writer.delete_from(backend, "nat", "n_regionkey = 0")
     n_upd = writer.update(
@@ -568,7 +568,7 @@ def c12_adbc_scan(spark, sf_dir):
     if os.path.exists(path):
         os.remove(path)
     backend = DuckDBBackend(path)
-    sup = spark.read.parquet(_pq(sf_dir, "supplier"))
+    sup = _t(spark, sf_dir, "supplier")
     writer.insert_into(
         backend, "supplier_adbc", sup, mode="append", primary_keys=["s_suppkey"]
     )
@@ -710,7 +710,7 @@ def c15_runtime_filter_scan(spark, sf_dir):
     )
 
     dim = (
-        spark.read.parquet(_pq(sf_dir, "customer"))
+        _t(spark, sf_dir, "customer")
         .filter(
             (F.col("c_mktsegment") == "BUILDING") & (F.col("c_nationkey") == 5)
         )
@@ -783,13 +783,13 @@ def c16_compacted_scan(spark, sf_dir):
         import shutil
 
         shutil.rmtree(path)
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     docs.repartition(64).write.parquet(path)
     n_before, n_after = compact_dataset(
         spark, path, target_file_bytes=64 << 20, cluster_by=["doc_id"]
     )
     assert n_before == 64 and n_after < 64, (n_before, n_after)
-    return spark.read.parquet(path).select(
+    return _scan(spark, path)[0].select(
         "doc_id", "lang", "source", "n_chars"
     )
 

@@ -53,6 +53,10 @@ def render_insert(
     col_sql = ", ".join(q(c) for c in cols)
     if select_from is not None:
         body = f"SELECT {col_sql} FROM {select_from}"
+        if on_conflict and dialect_name == "sqlite":
+            # SQLite reads ``FROM t ON CONFLICT`` as a join constraint; a
+            # WHERE clause ends the SELECT (its documented parsing fix)
+            body += " WHERE true"
     else:
         mark = param_mark or _PARAM_MARK.get(dialect_name, "?")
         body = f"VALUES ({', '.join([mark] * len(cols))})"

@@ -4,8 +4,12 @@ Reference analog (crates/duckdb/src/write.rs, crates/common/src/util/dml.rs):
 
 - INSERT append: input stream → staging relation → single-transaction
   ``INSERT INTO t SELECT * FROM staging [ON CONFLICT ...]`` (write.rs:377-711,
-  staging `write_to_table` :920-987), constraint pre-validation first
-  (:466-476), ANALYZE after (:989-996).
+  staging `write_to_table` :920-987), ANALYZE after (:989-996). Every
+  transport runs in the same order: stage the rows in the sink, check the
+  primary key on the staging relation with one sink-side query
+  (``constraints.validate_unique``, write.rs:466-476), and only then
+  ``CREATE TABLE`` and ingest — a rejected batch lands no row and creates
+  no table, and the check runs no Spark job.
 - INSERT overwrite: write to a staging table, then atomically swap inside one
   transaction (the reference re-points a view / swaps the DB file,
   write.rs:712-880 + file_swap.rs; an embedded transactional rename is the
@@ -27,11 +31,15 @@ reader already models on the scan side.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 import uuid
+from contextlib import contextmanager
 from typing import Dict, Optional, Sequence
 
 from pyspark.sql import DataFrame
 
+from datafusion_table_providers_spark.core.expr import DIALECTS
 from datafusion_table_providers_spark.core.types import create_table_ddl
 from datafusion_table_providers_spark.write.statement import (
     render_delete,
@@ -43,8 +51,10 @@ from datafusion_table_providers_spark.sources.backends import (
     DuckDBBackend,
     SQLiteBackend,
 )
-# validate_not_null is not called here: validate_unique checks NULL keys in
-# the same job. perfbench/trace.py times both names on this module.
+# Called through this module's names, so perfbench/trace.py times the key
+# check as write.constraint_s. validate_not_null is not called here
+# (validate_unique checks NULL keys in the same query); the tracer patches
+# both names.
 from datafusion_table_providers_spark.write.constraints import (  # noqa: F401
     validate_not_null,
     validate_unique,
@@ -122,14 +132,14 @@ def insert_into(
     - ``"auto"`` — spool when the input has >8 partitions AND a valid spool
       location exists (``spool_dir`` given, or local master); arrow
       otherwise.
-    """
-    if primary_keys:
-        validate_unique(df, primary_keys)
-    if create:
-        create_table(backend, table, df.schema, primary_keys=primary_keys)
 
+    With ``primary_keys``, the staged rows are checked before ``create``
+    makes the table (``validate_unique``); a violation raises
+    ``ConstraintViolation`` and leaves the sink as it was.
+    """
+    keys = tuple(primary_keys)
+    local = df.sparkSession.conf.get("spark.master", "").startswith("local")
     if isinstance(backend, DuckDBBackend):
-        local = df.sparkSession.conf.get("spark.master", "").startswith("local")
         if via == "auto":
             via = (
                 "spool"
@@ -144,10 +154,18 @@ def insert_into(
                     "spool transport on a non-local master needs spool_dir "
                     "on shared storage readable by the sink host"
                 )
-            return _insert_duckdb_spool(
-                backend, table, df, mode, on_conflict, spool_dir
-            )
-        return _insert_duckdb(backend, table, df, mode, on_conflict)
+            stage = _spool_stage(df, spool_dir)
+        else:
+            stage = _arrow_stage(backend, df)
+        with stage as (relation, n):
+            if keys:
+                n = validate_unique(_fetchone(backend), relation, keys)
+            elif n is None:
+                n = _fetchone(backend)(f"SELECT COUNT(*) FROM {relation}")[0]
+            if create:
+                create_table(backend, table, df.schema, primary_keys=keys)
+            _staged_ingest(backend, table, mode, df.columns, relation, on_conflict)
+        return n
     if isinstance(backend, SQLiteBackend):
         # For SQLite, ``via`` is "loop" (toLocalIterator prepared-statement
         # batches — every row transits the driver, right for small frames)
@@ -159,7 +177,6 @@ def insert_into(
         # database is a real file under a local master; on a cluster pass
         # via="staged" explicitly only if the file is on storage every
         # executor can open safely.
-        local = df.sparkSession.conf.get("spark.master", "").startswith("local")
         if via in ("auto", "arrow", "spool"):
             via = (
                 "staged"
@@ -169,8 +186,6 @@ def insert_into(
                 else "loop"
             )
         if via == "staged":
-            if mode == "overwrite":
-                backend.execute(f'DELETE FROM "{table}"')
             return distributed_insert(
                 df,
                 table,
@@ -179,8 +194,11 @@ def insert_into(
                 connect_kwargs={"timeout": 120.0},
                 dialect_name="sqlite",
                 on_conflict=on_conflict,
+                create=create,
+                primary_keys=keys,
+                mode=mode,
             )
-        return _insert_sqlite(backend, table, df, mode, on_conflict)
+        return _insert_sqlite(backend, table, df, mode, on_conflict, keys, create)
     raise ValueError(f"no write support for backend {backend}")
 
 
@@ -207,6 +225,17 @@ def _spool_safe(schema) -> bool:
         return True
 
     return all(ok(f.dataType) for f in schema.fields)
+
+
+def _fetchone(backend: DuckDBBackend):
+    """``fetchone(sql)`` on a DuckDB backend: the first result row as a
+    tuple, or None."""
+
+    def fetch(sql):
+        rows = backend.query_arrow(sql).to_pylist()
+        return tuple(rows[0].values()) if rows else None
+
+    return fetch
 
 
 def _staged_ingest(backend, table, mode, names, source_rel, on_conflict) -> None:
@@ -236,68 +265,111 @@ def _staged_ingest(backend, table, mode, names, source_rel, on_conflict) -> None
     backend.execute(f'ANALYZE "{table}"')
 
 
-def _insert_duckdb_spool(backend, table, df, mode, on_conflict, spool_dir=None) -> int:
-    """Executor-parallel ingest: partitions land as parquet files written by
-    the cluster, the embedded sink reads them back with its native parquet
-    scanner in one staged transaction. Serialization work is distributed
-    across executors (the reference's single writer thread only ever sees
-    Arrow it must build itself — write.rs:413); the driver never holds data."""
-    import shutil
-    import tempfile
-
+@contextmanager
+def _spool_stage(df, spool_dir=None):
+    """Executor-parallel staging: partitions land as parquet files written
+    by the cluster, and the embedded sink reads them back with its native
+    parquet scanner. Serialization work is distributed across executors
+    (the reference's single writer thread only ever sees Arrow it must
+    build itself — write.rs:413); the driver never holds data. Yields the
+    ``read_parquet`` glob and no row count; the spool is removed on exit."""
     if not _spool_safe(df.schema):
         raise ValueError(
             "interval columns cannot take the spool transport (parquet "
             "round-trip drops the logical type); use via='arrow'"
         )
-    names = [f.name for f in df.schema.fields]
     if spool_dir is not None:
         spool = os.path.join(spool_dir, f"dtps_spool_{uuid.uuid4().hex[:12]}")
     else:
         spool = tempfile.mkdtemp(prefix="dtps_spool_")
     try:
         df.write.mode("overwrite").parquet(spool)
-        glob_rel = f"read_parquet('{spool}/*.parquet')"
-        n = backend.query_arrow(f"SELECT COUNT(*) AS n FROM {glob_rel}")[0][0].as_py()
-        _staged_ingest(backend, table, mode, names, glob_rel, on_conflict)
+        yield f"read_parquet('{spool}/*.parquet')", None
     finally:
         shutil.rmtree(spool, ignore_errors=True)
-    return n
 
 
-def _insert_duckdb(backend, table, df, mode, on_conflict) -> int:
-    arrow = df.toArrow()  # Arrow end-to-end; no row-wise conversion
+@contextmanager
+def _arrow_stage(backend, df):
+    """``df.toArrow()`` registered as the staging relation (Arrow end to
+    end, no row-wise conversion); yields it and its row count."""
+    arrow = df.toArrow()
     staging = f"staging_{uuid.uuid4().hex[:12]}"
     backend.register_arrow(staging, arrow)
     try:
-        _staged_ingest(
-            backend, table, mode, arrow.schema.names, f'"{staging}"', on_conflict
-        )
+        yield f'"{staging}"', arrow.num_rows
     finally:
         backend.unregister(staging)
-    return arrow.num_rows
 
 
-def _insert_sqlite(backend, table, df, mode, on_conflict) -> int:
+def _insert_sqlite(backend, table, df, mode, on_conflict, keys=(), create=False) -> int:
     """Prepared-statement batch insert — the reference's fast path
     (prepared toggle crates/sqlite/src/lib.rs:157-161, bench
-    benches/sqlite_insert_benchmark.rs)."""
-    cols = [f.name for f in df.schema.fields]
-    sql = render_insert("sqlite", table, cols, on_conflict=on_conflict)
+    benches/sqlite_insert_benchmark.rs) — in ONE transaction, so a row the
+    sink rejects rolls back every row before it. With ``keys`` the rows
+    stream into a TEMP staging table first and commit through
+    ``_commit_staged``, like ``distributed_insert``'s."""
+    cols = df.columns
+    with backend.transaction() as con:
+        if not keys:
+            _prepare_target(con.execute, "sqlite", table, df.schema, (), create, mode)
+            return _stream_rows(
+                con, render_insert("sqlite", table, cols, on_conflict=on_conflict), df
+            )
+        stage = f"{table}__stg_{uuid.uuid4().hex[:12]}"
+        ddl = create_table_ddl(stage, df.schema, "sqlite")
+        con.execute(ddl.replace("CREATE TABLE", "CREATE TEMP TABLE", 1))
+        n = _stream_rows(con, render_insert("sqlite", stage, cols), df)
+        _commit_staged(con.execute, "sqlite", table, df.schema,
+                       backend.dialect.quote_ident(stage), keys, create, mode,
+                       on_conflict)
+        return n
+
+
+def _prepare_target(run, dialect_name, table, schema, keys, create, mode) -> None:
+    """Create the target table (IF NOT EXISTS) when asked, and empty it for
+    an overwrite; ``run(sql)`` executes one statement in the caller's open
+    transaction."""
+    if create:
+        run(create_table_ddl(table, schema, dialect_name, primary_keys=tuple(keys),
+                             if_not_exists=True))
     if mode == "overwrite":
-        backend.execute(f'DELETE FROM "{table}"')
+        run(f"DELETE FROM {DIALECTS[dialect_name].quote_ident(table)}")
+
+
+def _commit_staged(run, dialect_name, table, schema, staging_q, keys, create,
+                   mode, on_conflict):
+    """The commit of a staging-table transport, inside its one open
+    transaction: check ``keys`` on the staging table, prepare the target,
+    ingest with ``INSERT … SELECT``, drop the staging table. ``run(sql)``
+    executes one statement and returns its cursor; returns the ingest's
+    ``rowcount``."""
+    q = DIALECTS[dialect_name].quote_ident
+    if keys:
+        validate_unique(lambda sql: run(sql).fetchone(), staging_q, keys, q)
+    _prepare_target(run, dialect_name, table, schema, keys, create, mode)
+    count = run(
+        render_insert(dialect_name, table, schema.names, select_from=staging_q,
+                      on_conflict=on_conflict)
+    ).rowcount
+    run(f"DROP TABLE {staging_q}")
+    return count
+
+
+def _stream_rows(con, sql: str, df: DataFrame, batch_size: int = 10_000) -> int:
+    """Bind every row of `df` to the prepared `sql` on `con`, in batches.
+    toLocalIterator streams one partition at a time — bounded driver
+    memory, the bounded-mpsc-channel analog (write.rs:409-421)."""
     total = 0
-    # toLocalIterator streams one partition at a time — bounded driver memory,
-    # the bounded-mpsc-channel analog (write.rs:409-421).
     batch = []
     for row in df.toLocalIterator():
-        batch.append(tuple(row))  # a Row is a tuple in `cols` order
-        if len(batch) >= 10000:
-            backend.executemany(sql, batch)
+        batch.append(tuple(row))  # a Row is a tuple in column order
+        if len(batch) >= batch_size:
+            con.executemany(sql, batch)
             total += len(batch)
             batch = []
     if batch:
-        backend.executemany(sql, batch)
+        con.executemany(sql, batch)
         total += len(batch)
     return total
 
@@ -339,6 +411,7 @@ def distributed_insert(
     create: bool = False,
     primary_keys: Sequence[str] = (),
     batch_size: int = 10_000,
+    mode: str = "append",
 ) -> int:
     """Distributed sink: per-partition ``foreachPartition`` writers with a
     driver-side transactional commit — the 1000-executor path the
@@ -352,7 +425,12 @@ def distributed_insert(
     duplicates. The driver then commits ``INSERT INTO target SELECT …
     FROM staging [ON CONFLICT …]`` in ONE transaction and drops the staging
     table — the reference's staging-table discipline (write.rs:558-710,
-    920-987) with the write fan-in moved off the driver.
+    920-987) with the write fan-in moved off the driver. Before that commit
+    the driver checks ``primary_keys`` on the staging table
+    (``validate_unique``, one query on the sink), and only after it passes
+    does the same transaction create the target (``create``, IF NOT
+    EXISTS), empty it (``mode="overwrite"``) and ingest. A rejected batch or
+    a failed task lands no row, and the staging table is dropped either way.
 
     Embedded single-writer engines (SQLite) serialize the partition writers
     on the file lock — correct but not parallel; the target is server
@@ -361,46 +439,31 @@ def distributed_insert(
     import importlib
     import json as _json
 
-    from datafusion_table_providers_spark.core.expr import DIALECTS
-
     kwargs = dict(connect_kwargs or {})
     dialect = DIALECTS[dialect_name]
     q = dialect.quote_ident
     cols = [f.name for f in df.schema.fields]
-    # constraint pre-validation, same discipline as insert_into (reference
-    # constraints.rs:28-123 — reject the batch BEFORE any row lands); the
-    # group-count check is a distributed Spark aggregate, so it scales with
-    # the input like the write itself
-    if primary_keys:
-        validate_unique(df, primary_keys)
     staging = f"{table}__stg_{uuid.uuid4().hex[:12]}"
+    staging_q, part_q = q(staging), q("__part")
 
     def _connect():
         mod = importlib.import_module(dbapi_module)
         return mod.connect(*list(connect_args), **kwargs)
 
+    from pyspark.sql import types as _T
+
+    stage_schema = _T.StructType(
+        df.schema.fields + [_T.StructField("__part", _T.IntegerType(), False)]
+    )
     con = _connect()
     try:
-        cur = con.cursor()
-        if create:
-            cur.execute(
-                create_table_ddl(
-                    table, df.schema, dialect_name, primary_keys=primary_keys
-                )
-            )
-        from pyspark.sql import types as _T
-
-        stage_schema = _T.StructType(
-            df.schema.fields + [_T.StructField("__part", _T.IntegerType(), False)]
-        )
-        cur.execute(create_table_ddl(staging, stage_schema, dialect_name))
+        con.cursor().execute(create_table_ddl(staging, stage_schema, dialect_name))
         con.commit()
     finally:
         con.close()
 
     # serialize the connection spec, not a connection
     spec = (dbapi_module, list(connect_args), _json.dumps(kwargs))
-    staging_q, part_q = q(staging), q("__part")
 
     def _write_partition(rows):
         import importlib as _il
@@ -443,25 +506,30 @@ def distributed_insert(
         finally:
             wcon.close()
 
-    df.foreachPartition(_write_partition)
-
-    con = _connect()
     try:
-        cur = con.cursor()
-        cur.execute(
-            render_insert(
-                dialect_name,
-                table,
-                cols,
-                select_from=staging_q,
-                on_conflict=on_conflict,
-            )
-        )
-        count = cur.rowcount
-        cur.execute(f"DROP TABLE {staging_q}")
-        con.commit()
-        if count is None or count < 0:
-            count = -1
-        return count
-    finally:
-        con.close()
+        df.foreachPartition(_write_partition)
+        con = _connect()
+        try:
+            cur = con.cursor()
+
+            def run(sql):
+                cur.execute(sql)  # DB-API leaves its return value unspecified
+                return cur
+
+            count = _commit_staged(run, dialect_name, table, df.schema,
+                                   staging_q, primary_keys, create, mode,
+                                   on_conflict)
+            con.commit()
+        finally:
+            con.close()
+    except BaseException:
+        con = _connect()
+        try:
+            con.cursor().execute(f"DROP TABLE IF EXISTS {staging_q}")
+            con.commit()
+        finally:
+            con.close()
+        raise
+    if count is None or count < 0:
+        count = -1
+    return count

@@ -27,6 +27,34 @@ def test_doc_count_and_schema_from_footers(spark, dup_heavy_dir):
         assert n == inferred.count()
 
 
+def test_table_reads_build_without_jobs(spark):
+    """Local table reads take their schema from the parquet footers, so a
+    scan entry builds without a schema-inference job."""
+    from datafusion_table_providers_spark.operators import relational
+
+    assert _warm_build_jobs(spark, relational.b01_scan_projection) == 0
+    for name in ("customer", "events", "lineitem"):
+        with job_group(spark) as build:
+            df = relational._t(spark, SF_DIR, name)
+        assert build.jobs == [], name
+        inferred = spark.read.parquet(f"{SF_DIR}/{name}.parquet")
+        if name == "events":
+            inferred = inferred.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+        assert df.schema == inferred.schema, name
+
+
+def test_partitioned_reads_fall_back_to_inference(spark, tmp_path):
+    """``k=v`` directories carry a column no footer has: Spark infers."""
+    from datafusion_table_providers_spark.operators import relational
+
+    path = str(tmp_path / "parts")
+    spark.range(6).selectExpr("id", "id % 2 AS k").write.partitionBy(
+        "k").parquet(path)
+    df, n = relational._scan(spark, path)
+    assert n is None and sorted(df.columns) == ["id", "k"]
+    assert df.count() == 6
+
+
 def test_observed_rep_count_matches_naive(spark, dup_heavy_dir):
     clear_memo_caches()
     m = dedup._text_groups(spark, dup_heavy_dir)

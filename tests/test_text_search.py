@@ -85,7 +85,7 @@ def test_editdist_exact_dups_have_distance_zero(spark):
 
 
 def test_phrase_search_hits_are_real(spark):
-    from datafusion_table_providers_spark.llm.dedup import _t  # reuse reader
+    from datafusion_table_providers_spark.operators.relational import _t
     from datafusion_table_providers_spark.llm.text import (
         D23_PHRASE,
         d23_phrase_search,

@@ -1,12 +1,18 @@
 """Write-path behavior tests: constraints, upsert, overwrite atomicity,
 DELETE/UPDATE counts, sort/limit pushdown fixture (FIXTURES.md)."""
 
+import os
 import re
+import sqlite3
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datafusion_table_providers_spark.sources.backends import (
+    DuckDBBackend,
+    SQLiteBackend,
+)
 from datafusion_table_providers_spark.write import writer
 from datafusion_table_providers_spark.write.constraints import (
     ConstraintViolation,
@@ -30,9 +36,13 @@ def test_constraint_rejects_duplicates(spark, tmp_duckdb):
         writer.insert_into(tmp_duckdb, "t", df, primary_keys=["id"])
 
 
-def test_constraint_window_check_direct(spark):
-    ok = spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA)
-    validate_unique(ok, ["id"])  # no raise
+def test_constraint_window_check_direct(tmp_duckdb):
+    # the check reads a staging relation in the sink: no raise, and it
+    # returns the relation's row count
+    tmp_duckdb.execute(
+        "CREATE TABLE s AS SELECT * FROM (VALUES (1, 'a'), (2, 'b')) v(id, v)"
+    )
+    assert validate_unique(writer._fetchone(tmp_duckdb), '"s"', ["id"]) == 2
 
 
 @pytest.mark.parametrize(
@@ -53,18 +63,132 @@ def test_constraint_rejects_null_and_duplicate_keys(spark, tmp_duckdb, rows,
         writer.insert_into(tmp_duckdb, "t", df, primary_keys=keys)
 
 
-def test_pk_validation_is_one_pass(spark, tmp_duckdb):
+#: every write transport: DuckDB's two through ``insert_into``, SQLite's
+#: two through ``insert_into`` and ``distributed_insert`` called directly
+TRANSPORTS = ["arrow", "spool", "loop", "staged", "distributed_insert"]
+
+
+class _Sink:
+    """One transport's sink in ``tmp_path``: ``write(df, table, **kw)`` and
+    the relations it holds (tables, views, TEMP tables, spool entries)."""
+
+    def __init__(self, transport, tmp_path):
+        self.transport = transport
+        self.spool = tmp_path / "spool"
+        self.spool.mkdir(parents=True)
+        if transport in ("arrow", "spool"):
+            self.backend = DuckDBBackend(str(tmp_path / "c.duckdb"))
+        else:
+            self.path = str(tmp_path / "c.db")
+            self.backend = SQLiteBackend(self.path)
+
+    def write(self, df, table, **kw):
+        if self.transport == "distributed_insert":
+            return writer.distributed_insert(
+                df, table, "sqlite3", connect_args=[self.path],
+                dialect_name="sqlite", create=True, **kw,
+            )
+        return writer.insert_into(self.backend, table, df, via=self.transport,
+                                  spool_dir=str(self.spool), **kw)
+
+    def relations(self):
+        if isinstance(self.backend, DuckDBBackend):
+            sql = "SELECT table_name AS n FROM information_schema.tables"
+        else:
+            sql = ("SELECT name AS n FROM sqlite_master UNION ALL "
+                   "SELECT name FROM sqlite_temp_master")
+        got = self.backend.query_arrow(sql).column(0).to_pylist()
+        return sorted(got) + sorted(os.listdir(self.spool))
+
+    def count(self, table):
+        return self.backend.query_arrow(
+            f'SELECT COUNT(*) AS n FROM "{table}"').column(0)[0].as_py()
+
+
+def test_pk_validation_is_one_pass(spark, tmp_path):
     # a nullable key: on a NOT NULL column Catalyst drops a NULL check
     df = spark.range(2000, numPartitions=4).selectExpr(
         "nullif(id, -1) AS id", "string(id) AS v")
-    with job_group(spark) as plain:
-        writer.insert_into(tmp_duckdb, "a", df, via="arrow")
-    with job_group(spark) as pk:
-        writer.insert_into(tmp_duckdb, "b", df, primary_keys=["id"], via="arrow")
-    # one group-count pass: its shuffle-map job and its result job; a
-    # separate NOT NULL pass added two more (its LIMIT 1 scan tries one
-    # partition, then the rest)
-    assert len(pk.jobs) - len(plain.jobs) <= 2, (pk.jobs, plain.jobs)
+    for transport in TRANSPORTS:
+        sink = _Sink(transport, tmp_path / transport)
+        with job_group(spark) as plain:
+            sink.write(df, "a")
+        with job_group(spark) as pk:
+            sink.write(df, "b", primary_keys=["id"])
+        # the key check is one query on the sink's staging relation
+        assert len(pk.jobs) == len(plain.jobs), (transport, pk.jobs,
+                                                 plain.jobs)
+        assert sink.count("b") == 2000
+
+
+@pytest.mark.parametrize("transport", TRANSPORTS)
+@pytest.mark.parametrize(
+    "rows, keys, message",
+    [
+        ([(1, 1, "a"), (None, 2, "b")], ["id"],
+         "NULL in constrained columns ['id']"),
+        ([(1, 1, "a"), (1, 2, "b"), (2, 3, "c")], ["id"],
+         "incoming batch violates unique constraint on ['id']: "
+         "duplicate key {'id': 1}"),
+        ([(1, 1, "a"), (1, 2, "b"), (None, 3, "c")], ["id"],
+         "NULL in constrained columns ['id']"),
+        ([(1, 1, "a"), (1, None, "b")], ["id", "k"],
+         "NULL in constrained columns ['id', 'k']"),
+        ([(1, 2, "a"), (1, 2, "b"), (1, 3, "c")], ["id", "k"],
+         "incoming batch violates unique constraint on ['id', 'k']: "
+         "duplicate key {'id': 1, 'k': 2}"),
+    ],
+    ids=["null", "duplicate", "both", "composite-null", "composite-duplicate"],
+)
+def test_constraint_matrix_lands_nothing(spark, tmp_path, transport, rows,
+                                         keys, message):
+    """Each transport rejects the batch with the same message, before the
+    target table exists, and leaves no staging table or spool behind."""
+    sink = _Sink(transport, tmp_path)
+    before = sink.relations()
+    df = spark.createDataFrame(rows, "id long, k long, v string")
+    with pytest.raises(ConstraintViolation, match=f"^{re.escape(message)}$"):
+        sink.write(df, "t", primary_keys=keys)
+    assert sink.relations() == before
+
+
+@pytest.mark.parametrize("transport", TRANSPORTS)
+def test_rejected_batch_leaves_existing_rows(spark, tmp_path, transport):
+    sink = _Sink(transport, tmp_path)
+    good = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    sink.write(good, "t", primary_keys=["id"])
+    before = sink.relations()
+    bad = spark.createDataFrame([(3, "c"), (3, "d")], "id long, v string")
+    with pytest.raises(ConstraintViolation, match="duplicate key {'id': 3}"):
+        sink.write(bad, "t", primary_keys=["id"])
+    assert sink.count("t") == 2 and sink.relations() == before
+
+
+def test_sqlite_loop_insert_is_atomic(spark, tmp_path):
+    """A row the sink rejects part-way through a loop insert rolls back
+    every row before it, including whole batches already sent."""
+    b = SQLiteBackend(str(tmp_path / "atomic.db"))
+    b.execute('CREATE TABLE "t" ("id" INTEGER, "v" TEXT NOT NULL)')
+    df = spark.range(15_000, numPartitions=2).selectExpr(
+        "id", "IF(id = 12000, NULL, string(id)) AS v")
+    with pytest.raises(sqlite3.IntegrityError):
+        writer.insert_into(b, "t", df, create=False, via="loop")
+    b.execute('CREATE TABLE "other" ("x" INTEGER)')  # commits nothing pending
+    assert b.query_arrow('SELECT COUNT(*) AS n FROM "t"')[0][0].as_py() == 0
+
+
+@pytest.mark.parametrize("transport", ["loop", "staged"])
+def test_sqlite_transports_upsert(spark, tmp_path, transport):
+    """ON CONFLICT through a SQLite staging table (the loop's TEMP table
+    with keys, the staged path's partition table)."""
+    b = SQLiteBackend(str(tmp_path / "up.db"))
+    base = spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA)
+    writer.insert_into(b, "t", base, primary_keys=["id"], via=transport)
+    wave = spark.createDataFrame([(2, "B"), (3, "c")], SCHEMA)
+    writer.insert_into(b, "t", wave, primary_keys=["id"], via=transport,
+                       on_conflict=OnConflict.upsert(["id"]))
+    got = b.query_arrow('SELECT id, v FROM "t" ORDER BY id').to_pylist()
+    assert [tuple(r.values()) for r in got] == [(1, "a"), (2, "B"), (3, "c")]
 
 
 def test_upsert_do_nothing_and_update(spark, tmp_duckdb):
