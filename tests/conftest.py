@@ -1,5 +1,7 @@
 import os
 import sys
+import threading
+from contextlib import contextmanager
 
 import pytest
 
@@ -9,6 +11,22 @@ sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+@contextmanager
+def serving(server):
+    """Run an in-process Flight server's ``serve()`` in a thread; on exit
+    shut it down and wait for that thread. A serve thread still finishing
+    after ``shutdown()`` returns can close the listener of a server started
+    next in the process, whose clients then get ``Connection refused``."""
+    t = threading.Thread(target=server.serve, daemon=True)
+    t.start()
+    try:
+        yield server
+    finally:
+        server.shutdown()
+        t.join(30)
+        assert not t.is_alive(), "Flight serve thread did not exit"
 
 
 @pytest.fixture(scope="session")

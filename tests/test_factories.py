@@ -1,8 +1,6 @@
 """Public factory API tests — signature parity with the reference's Python
 surface (python/python/datafusion_table_providers/*.py)."""
 
-import threading
-
 import pyarrow as pa
 import pyarrow.flight as flight
 import pytest
@@ -16,6 +14,8 @@ from datafusion_table_providers_spark.factories import (
     SqliteTableFactory,
 )
 from datafusion_table_providers_spark.write import writer
+
+from tests.conftest import serving
 
 SCHEMA = T.StructType(
     [T.StructField("id", T.LongType(), False), T.StructField("v", T.StringType())]
@@ -80,17 +80,13 @@ class OneShotServer(flight.FlightServerBase):
 
 
 def test_flight_factory(spark):
-    s = OneShotServer()
-    threading.Thread(target=s.serve, daemon=True).start()
-    try:
+    with serving(OneShotServer()) as s:
         factory = FlightTableFactory().with_session(spark)
         df = factory.get_table(
             f"grpc://127.0.0.1:{s.port}",
             {"flight.sql.query": "SELECT * FROM anything"},
         )
         assert sorted(r["id"] for r in df.collect()) == [1, 2, 3]
-    finally:
-        s.shutdown()
 
 
 def test_clickhouse_arg_key_injection_rejected(spark):

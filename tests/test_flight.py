@@ -4,11 +4,11 @@ Mirrors the reference's endpoint-per-partition contract
 (crates/flightsql/src/exec.rs:54-130): the server announces 2 endpoints and
 Spark must produce one input partition per endpoint."""
 
-import threading
-
 import pyarrow as pa
 import pyarrow.flight as flight
 import pytest
+
+from tests.conftest import serving
 
 
 class TwoEndpointServer(flight.FlightServerBase):
@@ -41,11 +41,8 @@ class TwoEndpointServer(flight.FlightServerBase):
 
 @pytest.fixture(scope="module")
 def server():
-    s = TwoEndpointServer()
-    t = threading.Thread(target=s.serve, daemon=True)
-    t.start()
-    yield s
-    s.shutdown()
+    with serving(TwoEndpointServer()) as s:
+        yield s
 
 
 def test_flight_partition_per_endpoint(spark, server):
@@ -119,11 +116,8 @@ class VariantEncodingServer(flight.FlightServerBase):
 
 @pytest.fixture(scope="module")
 def variant_server():
-    s = VariantEncodingServer()
-    t = threading.Thread(target=s.serve, daemon=True)
-    t.start()
-    yield s
-    s.shutdown()
+    with serving(VariantEncodingServer()) as s:
+        yield s
 
 
 def test_variant_endpoint_casts_to_declared_schema(spark, variant_server):

@@ -3,11 +3,12 @@ exposes a cursor-ticket protocol; the stream must deliver all rows exactly
 once across microbatches."""
 
 import json
-import threading
 
 import pyarrow as pa
 import pyarrow.flight as flight
 import pytest
+
+from tests.conftest import serving
 
 
 class CursorServer(flight.FlightServerBase):
@@ -33,11 +34,8 @@ class CursorServer(flight.FlightServerBase):
 
 @pytest.fixture(scope="module")
 def cursor_server():
-    s = CursorServer()
-    t = threading.Thread(target=s.serve, daemon=True)
-    t.start()
-    yield s
-    s.shutdown()
+    with serving(CursorServer()) as s:
+        yield s
 
 
 def test_flight_stream_delivers_all_rows(spark, cursor_server, tmp_path):
