@@ -288,8 +288,9 @@ def create_table_ddl(
     dialect_name: str,
     primary_keys: Tuple[str, ...] = (),
     if_not_exists: bool = False,
+    temporary: bool = False,
 ) -> str:
-    """CREATE TABLE from a Spark schema (CreateTableBuilder,
+    """CREATE [TEMP] TABLE from a Spark schema (CreateTableBuilder,
     statement.rs:37-142 — incl. PK clause :127-134). Identifier quoting and
     nullability follow the target dialect (ClickHouse: columns are
     non-nullable unless wrapped in Nullable(...), and a table ENGINE is
@@ -329,7 +330,8 @@ def create_table_ddl(
         pk = ", ".join(q(k) for k in primary_keys)
         cols.append(f"PRIMARY KEY ({pk})")
     ine = "IF NOT EXISTS " if if_not_exists else ""
-    ddl = f'CREATE TABLE {ine}{q(table)} ({", ".join(cols)})'
+    temp = "TEMP " if temporary else ""
+    ddl = f'CREATE {temp}TABLE {ine}{q(table)} ({", ".join(cols)})'
     if ch:
         order = (
             "(" + ", ".join(q(k) for k in primary_keys) + ")"

@@ -31,8 +31,9 @@ def _footers(path: str):
     """(row count, Arrow schema) of a local parquet file, or of a directory
     of part files (skipping ``_``/``.`` entries as Spark's file index does),
     read from the footers on the driver. None when the path holds no
-    parquet file on the driver's filesystem, or holds ``k=v`` partition
-    directories, whose columns no footer carries."""
+    parquet file on the driver's filesystem, holds ``k=v`` partition
+    directories, whose columns no footer carries, or has an INT96 column:
+    Arrow reads INT96 as a zone-less timestamp, Spark as a zoned one."""
     import pyarrow.parquet as pq
 
     def hidden(name):
@@ -47,7 +48,10 @@ def _footers(path: str):
     if not files:
         return None
     metas = [pq.read_metadata(f) for f in files]
-    return sum(m.num_rows for m in metas), metas[0].schema.to_arrow_schema()
+    schema = metas[0].schema
+    if any(c.physical_type == "INT96" for c in schema):
+        return None
+    return sum(m.num_rows for m in metas), schema.to_arrow_schema()
 
 
 def _scan(spark: SparkSession, path: str):
@@ -55,8 +59,9 @@ def _scan(spark: SparkSession, path: str):
     ``spark.read.parquet`` runs a schema-inference Spark job while the
     DataFrame is built; for a local path the footers give the schema and
     the row count on the driver instead, so building costs no job. Other
-    paths (remote storage, partition directories, a type the Arrow mapping
-    lacks) fall back to Spark's inference, with no row count."""
+    paths (remote storage, partition directories, INT96 timestamps, a type
+    the Arrow mapping lacks) fall back to Spark's inference, with no row
+    count."""
     foot = _footers(path)
     if foot is not None:
         try:

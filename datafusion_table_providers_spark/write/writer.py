@@ -317,8 +317,7 @@ def _insert_sqlite(backend, table, df, mode, on_conflict, keys=(), create=False)
                 con, render_insert("sqlite", table, cols, on_conflict=on_conflict), df
             )
         stage = f"{table}__stg_{uuid.uuid4().hex[:12]}"
-        ddl = create_table_ddl(stage, df.schema, "sqlite")
-        con.execute(ddl.replace("CREATE TABLE", "CREATE TEMP TABLE", 1))
+        con.execute(create_table_ddl(stage, df.schema, "sqlite", temporary=True))
         n = _stream_rows(con, render_insert("sqlite", stage, cols), df)
         _commit_staged(con.execute, "sqlite", table, df.schema,
                        backend.dialect.quote_ident(stage), keys, create, mode,
@@ -356,7 +355,7 @@ def _commit_staged(run, dialect_name, table, schema, staging_q, keys, create,
     return count
 
 
-def _stream_rows(con, sql: str, df: DataFrame, batch_size: int = 10_000) -> int:
+def _stream_rows(con, sql: str, df: DataFrame) -> int:
     """Bind every row of `df` to the prepared `sql` on `con`, in batches.
     toLocalIterator streams one partition at a time — bounded driver
     memory, the bounded-mpsc-channel analog (write.rs:409-421)."""
@@ -364,7 +363,7 @@ def _stream_rows(con, sql: str, df: DataFrame, batch_size: int = 10_000) -> int:
     batch = []
     for row in df.toLocalIterator():
         batch.append(tuple(row))  # a Row is a tuple in column order
-        if len(batch) >= batch_size:
+        if len(batch) >= 10_000:
             con.executemany(sql, batch)
             total += len(batch)
             batch = []
@@ -511,6 +510,10 @@ def distributed_insert(
         con = _connect()
         try:
             cur = con.cursor()
+            if dialect_name == "sqlite":
+                # sqlite3 opens no transaction before DDL: without it the
+                # target's CREATE would commit on its own
+                cur.execute("BEGIN")
 
             def run(sql):
                 cur.execute(sql)  # DB-API leaves its return value unspecified

@@ -44,7 +44,9 @@ def test_table_reads_build_without_jobs(spark):
 
 
 def test_partitioned_reads_fall_back_to_inference(spark, tmp_path):
-    """``k=v`` directories carry a column no footer has: Spark infers."""
+    """``k=v`` directories carry a column no footer has, and an INT96
+    timestamp (Spark's default output type) reads as zoned in Spark but
+    zone-less in Arrow: Spark infers both."""
     from datafusion_table_providers_spark.operators import relational
 
     path = str(tmp_path / "parts")
@@ -53,6 +55,19 @@ def test_partitioned_reads_fall_back_to_inference(spark, tmp_path):
     df, n = relational._scan(spark, path)
     assert n is None and sorted(df.columns) == ["id", "k"]
     assert df.count() == 6
+
+    path = str(tmp_path / "int96")
+    key = "spark.sql.parquet.outputTimestampType"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        spark.range(3).selectExpr("id", "current_timestamp() AS ts").write.parquet(path)
+    finally:
+        spark.conf.set(key, prior)
+    df, n = relational._scan(spark, path)
+    assert n is None
+    assert df.schema == spark.read.parquet(path).schema
+    assert len(df.collect()) == 3
 
 
 def test_observed_rep_count_matches_naive(spark, dup_heavy_dir):

@@ -380,6 +380,23 @@ def test_distributed_insert_foreachpartition(spark, tmp_path):
     con.close()
 
 
+def test_distributed_insert_failed_ingest_creates_no_table(spark, tmp_path):
+    """The key check, the target's CREATE and the ingest commit together: an
+    ``INSERT … SELECT`` the sink rejects after the check leaves no table."""
+    path = str(tmp_path / "fail.db")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA)
+    # ``v`` has no unique index, so SQLite rejects the conflict target
+    with pytest.raises(sqlite3.OperationalError, match="ON CONFLICT"):
+        writer.distributed_insert(
+            df, "sink", "sqlite3", connect_args=[path], dialect_name="sqlite",
+            create=True, primary_keys=["id"],
+            on_conflict=OnConflict.do_nothing(["v"]),
+        )
+    con = sqlite3.connect(path)
+    assert con.execute("SELECT name FROM sqlite_master").fetchall() == []
+    con.close()
+
+
 def test_distributed_insert_validates_constraints(spark, tmp_path):
     import pytest as _pytest
 
