@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import sqlite3
 import threading
+from contextlib import contextmanager
 from typing import Dict, Iterable, Optional, Tuple
 
 import pyarrow as pa
@@ -29,6 +30,21 @@ from datafusion_table_providers_spark.core.expr import (
 )
 
 _LOCAL = threading.local()
+
+
+@contextmanager
+def _transaction(lock, connect):
+    """``connect()`` under ``lock``, inside ``BEGIN``: commit on exit,
+    roll back on error."""
+    with lock:
+        con = connect()
+        con.execute("BEGIN")
+        try:
+            yield con
+            con.commit()
+        except BaseException:
+            con.rollback()
+            raise
 
 
 class Backend:
@@ -140,6 +156,13 @@ class DuckDBBackend(Backend):
             except Exception:
                 row = None
             return int(row[0]) if row and isinstance(row[0], int) else 0
+
+    def transaction(self):
+        """The connection with the backend lock held, inside ``BEGIN``;
+        commits on exit, rolls back on error. DuckDB's DDL is
+        transactional, so a write's CREATE, overwrite step and ingest
+        commit together."""
+        return _transaction(self._lock, self._connect)
 
     def register_arrow(self, name: str, table: pa.Table) -> None:
         with self._lock:
@@ -295,28 +318,13 @@ class SQLiteBackend(Backend):
             return cur.rowcount if cur.rowcount >= 0 else 0
 
     def transaction(self):
-        """Context manager yielding the raw connection with the backend lock
-        held, inside an explicit ``BEGIN``; commits on exit, rolls back on
-        error. Lets multi-statement units (data + commit-log marker in the
-        streaming sink, a staged insert's DDL and rows) be atomic — the
-        per-call auto-commit of execute/executemany cannot, and sqlite3
-        opens no transaction of its own before DDL."""
-        from contextlib import contextmanager
-
-        @contextmanager
-        def _tx():
-            with self._lock:
-                con = self._connect()
-                if not con.in_transaction:
-                    con.execute("BEGIN")
-                try:
-                    yield con
-                    con.commit()
-                except BaseException:
-                    con.rollback()
-                    raise
-
-        return _tx()
+        """The connection with the backend lock held, inside an explicit
+        ``BEGIN`` (sqlite3 opens no transaction of its own before DDL);
+        commits on exit, rolls back on error. Every write commits through
+        one: a staged insert's DDL, rows and the stream sink's commit-log
+        marker land together or not at all, which the per-call auto-commit
+        of execute/executemany cannot do."""
+        return _transaction(self._lock, self._connect)
 
     def table_names(self) -> list:
         with self._lock:

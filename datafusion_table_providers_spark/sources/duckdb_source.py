@@ -227,14 +227,6 @@ class DuckDBDataSource(DataSource):
         return DuckDBReader(schema, self.options)
 
 
-def table_row_count(backend, relation: str) -> int:
-    """Row-count statistic for a backend relation (reference A15,
-    crates/flightsql/src/lib.rs:343-349 reports these to the optimizer).
-    The Python DS API has no stats hook, so the count feeds OUR planning —
-    auto-sizing partitioned scans (``num_partitions=None`` below)."""
-    return row_count(lambda sql: _first_row(backend, sql), relation)
-
-
 def _first_row(backend, sql: str) -> list:
     return list(backend.query_arrow(sql).to_pylist()[0].values())
 

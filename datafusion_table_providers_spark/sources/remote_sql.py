@@ -8,8 +8,9 @@ already implemented); what the reference adds on top — and what this module
 provides — is:
 
 - dialect-aware DDL (CREATE TABLE from Spark schema) through
-  `core/types.py`; its INSERT / upsert / DELETE / UPDATE statements render
-  through `write/statement.py` like every other writer's;
+  `core/types.py`; writes take ``writer.distributed_insert`` with the
+  backend's ``dbapi_spec()``, whose statements render through
+  `write/statement.py` like every other writer's;
 - federation metadata: a ``compute_context`` of (host, port, database, user)
   — crates/postgres/src/pool.rs:513-529 — so same-server tables collapse
   into one pushed query via ``Engine.sql``;
@@ -32,7 +33,6 @@ from typing import Callable, Dict, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from datafusion_table_providers_spark.core.expr import DIALECTS
-from datafusion_table_providers_spark.write.on_conflict import OnConflict
 
 
 @dataclass
@@ -202,31 +202,3 @@ class RemoteSqlBackend:
         # postgres/mysql/clickhouse render their own names, odbc/adbc emit
         # ANSI passthrough).
         return create_table_ddl(table, schema, self.kind, primary_keys=primary_keys)
-
-
-def remote_insert_df(
-    backend: RemoteSqlBackend,
-    df: DataFrame,
-    table: str,
-    on_conflict: Optional[OnConflict] = None,
-    create: bool = False,
-    primary_keys: Sequence[str] = (),
-) -> int:
-    """Distributed write into a server backend: per-partition DB-API writers
-    + driver-side transactional commit (writer.distributed_insert), using
-    the backend's dbapi_spec transport — the write-side twin of reader_df's
-    DB-API path."""
-    from datafusion_table_providers_spark.write.writer import distributed_insert
-
-    module, args, kwargs = backend.dbapi_spec()
-    return distributed_insert(
-        df,
-        table,
-        module,
-        connect_args=args,
-        connect_kwargs=kwargs,
-        dialect_name=backend.kind if backend.kind in DIALECTS else "ansi",
-        on_conflict=on_conflict,
-        create=create,
-        primary_keys=primary_keys,
-    )

@@ -207,17 +207,21 @@ def stream_to_backend(
     checkpoint_dir: str,
     on_conflict=None,
 ):
-    """Stream → connector-write sink: ``foreachBatch`` feeding the same
-    ``writer.insert_into`` staging path batch writes use (reference analog:
-    an unbounded Flight stream landing in a DuckDB table — the two halves
-    exist separately in the reference; this joins them).
+    """Stream → connector-write sink: ``foreachBatch`` feeding each
+    micro-batch to the writer's transports — DuckDB's Arrow transport,
+    SQLite's loop — so it commits through ``writer._commit_staged`` like
+    every ``insert_into`` (reference analog: an unbounded Flight stream
+    landing in a DuckDB table — the two halves exist separately in the
+    reference; this joins them).
 
     Exactly-once across restarts: Spark's checkpoint makes batch ids stable,
-    and every applied id is recorded in ``<table>__commits`` so a replayed
-    batch (failure between sink write and checkpoint commit) is skipped —
-    the micro-batch analog of the reference's staging-table transactional
-    discipline (write.rs:558-710). Returns the StreamingQuery; callers
-    ``awaitTermination``."""
+    and every applied id is recorded in ``<table>__commits`` in the same
+    transaction as the batch's rows, so a replayed batch (failure between
+    sink write and checkpoint commit) is skipped and a crash between the
+    two can never double-apply one — the micro-batch analog of the
+    reference's staging-table transactional discipline (write.rs:558-710).
+    Returns the StreamingQuery; callers ``awaitTermination``."""
+    from datafusion_table_providers_spark.sources.backends import SQLiteBackend
     from datafusion_table_providers_spark.write import writer
 
     import uuid
@@ -243,8 +247,11 @@ def stream_to_backend(
         f'("run_id" VARCHAR, "batch_id" BIGINT, '
         f'PRIMARY KEY ("run_id", "batch_id"))'
     )
-
-    first = {"create": True}
+    insert = (
+        writer._insert_sqlite
+        if isinstance(backend, SQLiteBackend)
+        else writer._insert_duckdb
+    )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         seen = backend.query_arrow(
@@ -253,58 +260,8 @@ def stream_to_backend(
         )[0][0].as_py()
         if seen:
             return
-        if first["create"]:
-            writer.create_table(backend, table, batch_df.schema)
-            first["create"] = False
-        if not hasattr(backend, "register_arrow"):
-            # Backends without Arrow staging (SQLite): batch rows and the
-            # commit-log marker land in ONE connection-level transaction, so
-            # a crash between them can never double-apply a replayed batch —
-            # same exactly-once guarantee as the Arrow-staging path below.
-            cols_l = [f.name for f in batch_df.schema.fields]
-            col_sql = ", ".join(f'"{c}"' for c in cols_l)
-            ph = ", ".join("?" for _ in cols_l)
-            conflict_l = (
-                " " + on_conflict.to_sql(cols_l, backend.dialect.name)
-                if on_conflict
-                else ""
-            )
-            ins = f'INSERT INTO "{table}" ({col_sql}) VALUES ({ph}){conflict_l}'
-            with backend.transaction() as con:
-                rows = []
-                for row in batch_df.toLocalIterator():
-                    rows.append(tuple(row[c] for c in cols_l))
-                    if len(rows) >= 10000:
-                        con.executemany(ins, rows)
-                        rows = []
-                if rows:
-                    con.executemany(ins, rows)
-                con.execute(
-                    f'INSERT INTO "{commits}" VALUES (?, ?)', (run_id, batch_id)
-                )
-            return
-        # Data and the commit-log marker land in ONE transaction: a crash
-        # between them can therefore never double-apply a replayed batch
-        # (the reference's staging-table discipline, write.rs:558-710).
-        arrow = batch_df.toArrow()
-        names = list(arrow.schema.names)
-        cols = ", ".join(f'"{c}"' for c in names)
-        conflict = (
-            " " + on_conflict.to_sql(names, backend.dialect.name)
-            if on_conflict
-            else ""
-        )
-        staging = f"stg_{run_id}_{batch_id}"
-        backend.register_arrow(staging, arrow)
-        try:
-            backend.execute(
-                f'BEGIN; INSERT INTO "{table}" ({cols}) '
-                f'SELECT {cols} FROM "{staging}"{conflict}; '
-                f"INSERT INTO \"{commits}\" VALUES ('{run_id}', {batch_id}); "
-                f"COMMIT"
-            )
-        finally:
-            backend.unregister(staging)
+        insert(backend, table, batch_df, "append", on_conflict, create=True,
+               also=[f"INSERT INTO \"{commits}\" VALUES ('{run_id}', {batch_id})"])
 
     return (
         stream_df.writeStream.foreachBatch(_sink)

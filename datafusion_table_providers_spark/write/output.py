@@ -1,52 +1,20 @@
-"""Curated-corpus output: partitioned, shard-size-controlled parquet.
+"""Curated-corpus output: parquet laid out for the readers that follow.
 
 The end of every training-data pipeline is a write nobody grades until it
-falls over at scale: output shards must be (a) bounded in size so a
-downstream loader can stream them, (b) partitioned by the columns the
-loader filters on (source, language, shard), and (c) produced without
-funnelling data through the driver. Spark gives all three declaratively —
-this module pins the right incantation so callers don't rediscover it:
+falls over at scale. Spark gives the layout moves declaratively; this
+module pins them so callers don't rediscover them:
 
-- ``spark.sql.files.maxRecordsPerFile`` bounds rows per shard WITHOUT a
-  repartition shuffle (the writer splits oversized task outputs itself);
-- ``partitionBy`` produces the hive layout loaders prune on;
-- an optional ``target_shards`` repartition spreads the write across the
-  cluster when the upstream stage ended skewed or single-partitioned.
+- ``write_clustered`` range-partitions and sorts on the columns readers
+  filter on, so footer min/max stats skip whole files;
+- ``compact_dataset`` rewrites a dataset of many small files into
+  size-targeted ones, optionally clustering in the same pass.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    shard_rows: int = 100_000,
-    partition_by: Sequence[str] = (),
-    target_shards: Optional[int] = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as parquet shards of at most ``shard_rows`` rows.
-
-    ``target_shards`` repartitions first (by the partition columns when
-    given, else round-robin) — use it when the upstream stage collapsed to
-    few/skewed partitions; leave None to keep the upstream partitioning and
-    let ``maxRecordsPerFile`` do the size bounding alone.
-    """
-    out = df
-    if target_shards:
-        if partition_by:
-            out = out.repartition(target_shards, *partition_by)
-        else:
-            out = out.repartition(target_shards)
-    writer = out.write.mode(mode).option("maxRecordsPerFile", shard_rows)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
 
 
 def write_clustered(
@@ -73,58 +41,6 @@ def write_clustered(
         .write.mode(mode)
         .parquet(path)
     )
-
-
-def zorder_key(cols: Sequence[str], bits: int = 16):
-    """Z-order (Morton) key over 2+ numeric columns as a pure Column
-    expression: each column is rank-normalized to ``bits`` bits by the
-    caller (or passed raw when already small ints), then bits interleave.
-
-    Interleaving keeps locality in EVERY dimension, so range-partitioning
-    on the key gives each output file a bounded range in each column —
-    footer min/max stats prune on any filtered dimension, not just the
-    first sort key. This is the multi-column layout move (Delta/Iceberg
-    OPTIMIZE ZORDER) in plain Spark expressions."""
-    n = len(cols)
-    if n * bits > 63:
-        # bit n*bits-1 must stay below the sign bit of the 64-bit key;
-        # beyond 63 Spark's shiftleft also wraps the shift amount mod 64,
-        # silently colliding bits — refuse instead of degrading layout
-        raise ValueError(
-            f"zorder_key: {n} cols x {bits} bits = {n * bits} key bits > 63; "
-            "lower bits= so n*bits <= 63"
-        )
-    key = F.lit(0).cast("long")
-    for b in range(bits):
-        for i, c in enumerate(cols):
-            bit = F.shiftright(F.col(c).cast("long"), b).bitwiseAND(F.lit(1))
-            key = key.bitwiseOR(
-                F.shiftleft(bit.cast("long"), b * n + i)
-            )
-    return key
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cluster_by: Sequence[str],
-    num_files: int = 8,
-    bits: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet z-ordered on 2+ numeric columns: range-partition +
-    sort on the Morton key so every file is a compact hyper-rectangle and
-    selective filters on ANY of the cluster columns skip files."""
-    tmp = "__zkey"
-    out = df.withColumn(tmp, zorder_key(cluster_by, bits))
-    (
-        out.repartitionByRange(num_files, F.col(tmp))
-        .sortWithinPartitions(tmp)
-        .drop(tmp)
-        .write.mode(mode)
-        .parquet(path)
-    )
-
 
 
 def compact_dataset(

@@ -2,30 +2,31 @@
 
 Reference analog (crates/duckdb/src/write.rs, crates/common/src/util/dml.rs):
 
-- INSERT append: input stream → staging relation → single-transaction
+- INSERT: input stream → staging relation → single-transaction
   ``INSERT INTO t SELECT * FROM staging [ON CONFLICT ...]`` (write.rs:377-711,
   staging `write_to_table` :920-987), ANALYZE after (:989-996). Every
-  transport runs in the same order: stage the rows in the sink, check the
-  primary key on the staging relation with one sink-side query
-  (``constraints.validate_unique``, write.rs:466-476), and only then
-  ``CREATE TABLE`` and ingest — a rejected batch lands no row and creates
-  no table, and the check runs no Spark job.
-- INSERT overwrite: write to a staging table, then atomically swap inside one
-  transaction (the reference re-points a view / swaps the DB file,
-  write.rs:712-880 + file_swap.rs; an embedded transactional rename is the
-  equivalent atomicity point here).
+  writer — DuckDB's Arrow and spool transports, SQLite's loop and staged
+  transports, ``distributed_insert`` and the stream sink — stages its rows
+  in the sink and commits through ONE function, ``_commit_staged``, inside
+  one transaction: check the primary key on the staging relation with one
+  sink-side query (``constraints.validate_unique``, write.rs:466-476),
+  ``CREATE TABLE IF NOT EXISTS``, the overwrite step, the ingest. A
+  rejected batch or a failed ingest lands no row and creates no table,
+  and the check runs no Spark job.
+- INSERT overwrite: the same commit with the target emptied first, in the
+  same transaction, so readers see the old rows or the new ones (the
+  reference swaps a view or the DB file, write.rs:712-880 + file_swap.rs;
+  the embedded engines' transactional DDL is the atomicity point here).
+  The target keeps its columns, constraints and indexes.
 - DELETE / UPDATE: filters → remote ``DELETE FROM t WHERE ...`` /
   ``UPDATE t SET ... WHERE ...`` returning affected counts as one-row results
   (dml.rs:19-199, count_exec.rs).
 
-Spark-side streaming: the DataFrame is brought over as Arrow batches per
-partition (``toArrow`` on bounded inputs; ``toLocalIterator`` keeps memory
-bounded for large ones) and appended inside ONE transaction — matching the
-reference's bounded-channel single-writer design (write.rs:409-421). Embedded
-engines serialize writers anyway (DuckDB write gate, pool.rs:318); for truly
-distributed sinks (JDBC fleets) a per-partition ``foreachPartition`` writer
-with driver-side commit would replace this, which is what the partitioned
-reader already models on the scan side.
+Getting the rows to the sink: the Arrow transport brings the DataFrame over
+with ``toArrow``, the SQLite loop with ``toLocalIterator`` (one partition at
+a time — the reference's bounded-channel single writer, write.rs:409-421);
+the spool transport and ``distributed_insert`` write from the executors, so
+no row transits the driver.
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ import shutil
 import tempfile
 import uuid
 from contextlib import contextmanager
+from itertools import islice
 from typing import Dict, Optional, Sequence
 
 from pyspark.sql import DataFrame
@@ -127,15 +129,16 @@ def insert_into(
       both executors and the sink host can read (shared FS / object store):
       pass it via ``spool_dir``. With no ``spool_dir``, a driver-local temp
       dir is used — valid only under a ``local[*]`` master, enforced.
-      The staging semantics (single transaction, ON CONFLICT, ANALYZE
-      after) are identical to the Arrow transport.
+      The commit (single transaction, ON CONFLICT, ANALYZE after) is the
+      Arrow transport's.
     - ``"auto"`` — spool when the input has >8 partitions AND a valid spool
       location exists (``spool_dir`` given, or local master); arrow
       otherwise.
 
-    With ``primary_keys``, the staged rows are checked before ``create``
-    makes the table (``validate_unique``); a violation raises
-    ``ConstraintViolation`` and leaves the sink as it was.
+    Every transport commits through ``_commit_staged``: with
+    ``primary_keys`` the staged rows are checked first
+    (``validate_unique``); a violation raises ``ConstraintViolation`` and,
+    like any failed ingest, leaves the sink as it was.
     """
     keys = tuple(primary_keys)
     local = df.sparkSession.conf.get("spark.master", "").startswith("local")
@@ -148,24 +151,13 @@ def insert_into(
                 and (spool_dir is not None or local)
                 else "arrow"
             )
-        if via == "spool":
-            if spool_dir is None and not local:
-                raise ValueError(
-                    "spool transport on a non-local master needs spool_dir "
-                    "on shared storage readable by the sink host"
-                )
-            stage = _spool_stage(df, spool_dir)
-        else:
-            stage = _arrow_stage(backend, df)
-        with stage as (relation, n):
-            if keys:
-                n = validate_unique(_fetchone(backend), relation, keys)
-            elif n is None:
-                n = _fetchone(backend)(f"SELECT COUNT(*) FROM {relation}")[0]
-            if create:
-                create_table(backend, table, df.schema, primary_keys=keys)
-            _staged_ingest(backend, table, mode, df.columns, relation, on_conflict)
-        return n
+        if via == "spool" and spool_dir is None and not local:
+            raise ValueError(
+                "spool transport on a non-local master needs spool_dir "
+                "on shared storage readable by the sink host"
+            )
+        return _insert_duckdb(backend, table, df, mode, on_conflict, keys,
+                              create, via, spool_dir)
     if isinstance(backend, SQLiteBackend):
         # For SQLite, ``via`` is "loop" (toLocalIterator prepared-statement
         # batches — every row transits the driver, right for small frames)
@@ -227,42 +219,23 @@ def _spool_safe(schema) -> bool:
     return all(ok(f.dataType) for f in schema.fields)
 
 
-def _fetchone(backend: DuckDBBackend):
-    """``fetchone(sql)`` on a DuckDB backend: the first result row as a
-    tuple, or None."""
-
-    def fetch(sql):
-        rows = backend.query_arrow(sql).to_pylist()
-        return tuple(rows[0].values()) if rows else None
-
-    return fetch
-
-
-def _staged_ingest(backend, table, mode, names, source_rel, on_conflict) -> None:
-    """Shared staging discipline: append straight in, or build a fresh
-    generation and atomically swap (view re-point analog, write.rs:712-880)."""
-    if mode == "overwrite":
-        gen = f"{table}_gen_{uuid.uuid4().hex[:8]}"
-        backend.execute(f'CREATE TABLE "{gen}" AS SELECT * FROM "{table}" LIMIT 0')
-        backend.execute(
-            render_insert("duckdb", gen, names, select_from=source_rel)
-        )
-        backend.execute(
-            f'BEGIN; DROP TABLE "{table}"; '
-            f'ALTER TABLE "{gen}" RENAME TO "{table}"; COMMIT'
-        )
+def _insert_duckdb(backend, table, df, mode, on_conflict, keys=(), create=False,
+                   via="arrow", spool_dir=None, also=()) -> int:
+    """DuckDB's transports: stage `df` as a registered Arrow table
+    (``via="arrow"``) or a parquet spool (``"spool"``), commit it through
+    ``_commit_staged`` in one transaction, then ANALYZE (write.rs:989-996).
+    Returns the staged row count."""
+    if via == "spool":
+        stage = _spool_stage(df, spool_dir)
     else:
-        backend.execute(
-            render_insert(
-                "duckdb",
-                table,
-                names,
-                select_from=source_rel,
-                on_conflict=on_conflict,
-            )
-        )
-    # Stats refresh after bulk write (ANALYZE, write.rs:989-996)
+        stage = _arrow_stage(backend, df)
+    with stage as (relation, n), backend.transaction() as con:
+        if n is None:
+            n = con.execute(f"SELECT COUNT(*) FROM {relation}").fetchone()[0]
+        _commit_staged(con.execute, "duckdb", table, df.schema, relation, keys,
+                       create, mode, on_conflict, also)
     backend.execute(f'ANALYZE "{table}"')
+    return n
 
 
 @contextmanager
@@ -302,73 +275,80 @@ def _arrow_stage(backend, df):
         backend.unregister(staging)
 
 
-def _insert_sqlite(backend, table, df, mode, on_conflict, keys=(), create=False) -> int:
+def _insert_sqlite(backend, table, df, mode, on_conflict, keys=(), create=False,
+                   also=()) -> int:
     """Prepared-statement batch insert — the reference's fast path
     (prepared toggle crates/sqlite/src/lib.rs:157-161, bench
-    benches/sqlite_insert_benchmark.rs) — in ONE transaction, so a row the
-    sink rejects rolls back every row before it. With ``keys`` the rows
-    stream into a TEMP staging table first and commit through
-    ``_commit_staged``, like ``distributed_insert``'s."""
-    cols = df.columns
+    benches/sqlite_insert_benchmark.rs): the rows stream into a TEMP
+    staging table and commit through ``_commit_staged``, all in ONE
+    transaction, so a row the sink rejects rolls back every row before it.
+    Returns the streamed row count."""
+    q = backend.dialect.quote_ident
+    stage = f"{table}__stg_{uuid.uuid4().hex[:12]}"
     with backend.transaction() as con:
-        if not keys:
-            _prepare_target(con.execute, "sqlite", table, df.schema, (), create, mode)
-            return _stream_rows(
-                con, render_insert("sqlite", table, cols, on_conflict=on_conflict), df
-            )
-        stage = f"{table}__stg_{uuid.uuid4().hex[:12]}"
         con.execute(create_table_ddl(stage, df.schema, "sqlite", temporary=True))
-        n = _stream_rows(con, render_insert("sqlite", stage, cols), df)
-        _commit_staged(con.execute, "sqlite", table, df.schema,
-                       backend.dialect.quote_ident(stage), keys, create, mode,
-                       on_conflict)
-        return n
+        n = _bind_rows(con, render_insert("sqlite", stage, df.columns),
+                       map(tuple, df.toLocalIterator()))
+        _commit_staged(con.execute, "sqlite", table, df.schema, q(stage), keys,
+                       create, mode, on_conflict, also)
+        con.execute(f"DROP TABLE {q(stage)}")
+    return n
 
 
-def _prepare_target(run, dialect_name, table, schema, keys, create, mode) -> None:
-    """Create the target table (IF NOT EXISTS) when asked, and empty it for
-    an overwrite; ``run(sql)`` executes one statement in the caller's open
-    transaction."""
+def _commit_staged(run, dialect_name, table, schema, staging_q, keys, create,
+                   mode, on_conflict, also=()):
+    """The one commit of every writer, inside its caller's open
+    transaction: check ``keys`` on the staging relation, create the target
+    (IF NOT EXISTS) when asked, empty it for an overwrite, ingest with one
+    ``INSERT … SELECT [ON CONFLICT]``, then run the statements in ``also``
+    (the stream sink's commit-log marker). ``run(sql)`` executes one
+    statement and returns its cursor; returns the ingest's ``rowcount``."""
+    q = DIALECTS[dialect_name].quote_ident
+    if keys:
+        validate_unique(lambda sql: run(sql).fetchone(), staging_q, keys, q)
     if create:
         run(create_table_ddl(table, schema, dialect_name, primary_keys=tuple(keys),
                              if_not_exists=True))
     if mode == "overwrite":
-        run(f"DELETE FROM {DIALECTS[dialect_name].quote_ident(table)}")
-
-
-def _commit_staged(run, dialect_name, table, schema, staging_q, keys, create,
-                   mode, on_conflict):
-    """The commit of a staging-table transport, inside its one open
-    transaction: check ``keys`` on the staging table, prepare the target,
-    ingest with ``INSERT … SELECT``, drop the staging table. ``run(sql)``
-    executes one statement and returns its cursor; returns the ingest's
-    ``rowcount``."""
-    q = DIALECTS[dialect_name].quote_ident
-    if keys:
-        validate_unique(lambda sql: run(sql).fetchone(), staging_q, keys, q)
-    _prepare_target(run, dialect_name, table, schema, keys, create, mode)
+        _empty_target(run, dialect_name, table)
     count = run(
         render_insert(dialect_name, table, schema.names, select_from=staging_q,
                       on_conflict=on_conflict)
     ).rowcount
-    run(f"DROP TABLE {staging_q}")
+    for sql in also:
+        run(sql)
     return count
 
 
-def _stream_rows(con, sql: str, df: DataFrame) -> int:
-    """Bind every row of `df` to the prepared `sql` on `con`, in batches.
-    toLocalIterator streams one partition at a time — bounded driver
-    memory, the bounded-mpsc-channel analog (write.rs:409-421)."""
+def _empty_target(run, dialect_name, table) -> None:
+    """The overwrite step. DuckDB 1.0 rejects re-inserting, in one
+    transaction, a key deleted earlier in it (``DELETE`` and ``TRUNCATE``
+    alike), so there the target is dropped and rebuilt from its own DDL —
+    columns, constraints and indexes as they were; elsewhere it is a
+    ``DELETE``."""
+    q = DIALECTS[dialect_name].quote_ident
+    if dialect_name != "duckdb":
+        run(f"DELETE FROM {q(table)}")
+        return
+    name = table.replace("'", "''")
+    where = (f"WHERE table_name = '{name}' AND schema_name = current_schema() "
+             f"AND database_name = current_database() AND sql IS NOT NULL")
+    ddl = [r[0] for view in ("duckdb_tables", "duckdb_indexes")
+           for r in run(f"SELECT sql FROM {view}() {where}").fetchall()]
+    run(f"DROP TABLE {q(table)}")
+    for sql in ddl:
+        run(sql)
+
+
+def _bind_rows(cur, sql: str, rows) -> int:
+    """Bind each tuple of `rows` to the prepared `sql` on `cur`, 10,000 per
+    ``executemany``; returns the row count. Holds one batch at a time — with
+    ``toLocalIterator`` (one partition at a time) the bounded-mpsc-channel
+    analog (write.rs:409-421)."""
+    rows = iter(rows)
     total = 0
-    batch = []
-    for row in df.toLocalIterator():
-        batch.append(tuple(row))  # a Row is a tuple in column order
-        if len(batch) >= 10_000:
-            con.executemany(sql, batch)
-            total += len(batch)
-            batch = []
-    if batch:
-        con.executemany(sql, batch)
+    while batch := list(islice(rows, 10_000)):
+        cur.executemany(sql, batch)
         total += len(batch)
     return total
 
@@ -409,7 +389,6 @@ def distributed_insert(
     on_conflict: Optional[OnConflict] = None,
     create: bool = False,
     primary_keys: Sequence[str] = (),
-    batch_size: int = 10_000,
     mode: str = "append",
 ) -> int:
     """Distributed sink: per-partition ``foreachPartition`` writers with a
@@ -421,15 +400,13 @@ def distributed_insert(
     partition into a shared STAGING table tagged with the partition id.
     Tasks are idempotent under Spark retries: each first deletes its own
     partition's staging rows, so a re-run attempt replaces rather than
-    duplicates. The driver then commits ``INSERT INTO target SELECT …
-    FROM staging [ON CONFLICT …]`` in ONE transaction and drops the staging
-    table — the reference's staging-table discipline (write.rs:558-710,
-    920-987) with the write fan-in moved off the driver. Before that commit
-    the driver checks ``primary_keys`` on the staging table
-    (``validate_unique``, one query on the sink), and only after it passes
-    does the same transaction create the target (``create``, IF NOT
-    EXISTS), empty it (``mode="overwrite"``) and ingest. A rejected batch or
-    a failed task lands no row, and the staging table is dropped either way.
+    duplicates. The driver then commits through ``_commit_staged`` in ONE
+    transaction — key check, ``create`` (IF NOT EXISTS), the overwrite
+    step, ``INSERT INTO target SELECT … FROM staging [ON CONFLICT …]`` —
+    and drops the staging table in it: the reference's staging-table
+    discipline (write.rs:558-710, 920-987) with the write fan-in moved off
+    the driver. A rejected batch, a failed ingest or a failed task lands
+    no row, and the staging table is dropped either way.
 
     Embedded single-writer engines (SQLite) serialize the partition writers
     on the file lock — correct but not parallel; the target is server
@@ -439,14 +416,16 @@ def distributed_insert(
     import json as _json
 
     kwargs = dict(connect_kwargs or {})
-    dialect = DIALECTS[dialect_name]
-    q = dialect.quote_ident
-    cols = [f.name for f in df.schema.fields]
+    mod = importlib.import_module(dbapi_module)
+    q = DIALECTS[dialect_name].quote_ident
     staging = f"{table}__stg_{uuid.uuid4().hex[:12]}"
     staging_q, part_q = q(staging), q("__part")
+    mark = "?" if getattr(mod, "paramstyle", "qmark") == "qmark" else "%s"
+    ins = render_insert(dialect_name, staging_q, df.columns,
+                        extra_columns=("__part",), param_mark=mark,
+                        quote_table=False)
 
     def _connect():
-        mod = importlib.import_module(dbapi_module)
         return mod.connect(*list(connect_args), **kwargs)
 
     from pyspark.sql import types as _T
@@ -471,36 +450,15 @@ def distributed_insert(
         from pyspark import TaskContext
 
         mod_name, args, kw_json = spec
-        mod = _il.import_module(mod_name)
         pid = TaskContext.get().partitionId()
-        wcon = mod.connect(*args, **_j.loads(kw_json))
+        wcon = _il.import_module(mod_name).connect(*args, **_j.loads(kw_json))
         try:
             wcur = wcon.cursor()
-            mark = "?" if getattr(mod, "paramstyle", "qmark") == "qmark" else "%s"
             # retry idempotency: replace this partition's prior attempt
             wcur.execute(
                 f"DELETE FROM {staging_q} WHERE {part_q} = {int(pid)}"
             )
-            from datafusion_table_providers_spark.write.statement import (
-                render_insert as _ri,
-            )
-
-            ins = _ri(
-                dialect_name,
-                staging_q,
-                cols,
-                extra_columns=("__part",),
-                param_mark=mark,
-                quote_table=False,
-            )
-            batch = []
-            for row in rows:
-                batch.append(tuple(row[c] for c in cols) + (pid,))
-                if len(batch) >= batch_size:
-                    wcur.executemany(ins, batch)
-                    batch = []
-            if batch:
-                wcur.executemany(ins, batch)
+            _bind_rows(wcur, ins, (tuple(row) + (pid,) for row in rows))
             wcon.commit()
         finally:
             wcon.close()
@@ -522,6 +480,7 @@ def distributed_insert(
             count = _commit_staged(run, dialect_name, table, df.schema,
                                    staging_q, primary_keys, create, mode,
                                    on_conflict)
+            run(f"DROP TABLE {staging_q}")
             con.commit()
         finally:
             con.close()

@@ -158,29 +158,6 @@ def test_adbc_live(spark):  # pragma: no cover - gated on driver presence
     assert b.reader_df(spark, "t").count() >= 0
 
 
-def test_remote_insert_df_distributed(spark, tmp_path):
-    """Write-side twin of the DB-API scan: remote_insert_df routes through
-    distributed_insert with the backend's transport spec."""
-    import sqlite3
-
-    from datafusion_table_providers_spark.sources.remote_sql import (
-        RemoteSqlBackend,
-        remote_insert_df,
-    )
-
-    path = str(tmp_path / "ri.db")
-    b = RemoteSqlBackend("odbc", "", 0, path, "u")
-    b.dbapi_spec = lambda: ("sqlite3", [path], {"timeout": 60})
-    df = spark.range(0, 100, 1, 4).selectExpr("id", "CAST(id * 1.5 AS DOUBLE) AS v")
-    remote_insert_df(b, df, "sink", create=True, primary_keys=["id"])
-    con = sqlite3.connect(path)
-    assert con.execute("SELECT COUNT(*), SUM(v) FROM sink").fetchone() == (
-        100,
-        sum(i * 1.5 for i in range(100)),
-    )
-    con.close()
-
-
 def test_dbapi_partitioned_scan(spark, db):
     """Range-partitioned parallel read: disjoint slices, complete union,
     per-slice SQL carries the range clause."""

@@ -116,39 +116,6 @@ def test_topk_uses_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan, "TopK must not global-sort"
 
 
-def test_bucketed_join_eliminates_shuffle(spark):
-    """Storage-level co-location: two tables bucketed by the join key join
-    WITHOUT an Exchange on either side — the write-time partitioning lever
-    for recurring fact-fact joins at scale."""
-    from datafusion_table_providers_spark.operators.bucketed import (
-        bucketed_join,
-        write_bucketed,
-    )
-
-    a = spark.range(0, 10_000).selectExpr("id AS k", "id * 2 AS va")
-    b = spark.range(0, 10_000).selectExpr("id AS k", "id * 3 AS vb")
-    # pin the sort-merge path: at real fact-fact scale neither side
-    # broadcasts, but these test tables are tiny and a broadcast join would
-    # bypass (and disable) the bucketed read entirely
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        write_bucketed(a, "bq_a", "k", n_buckets=8)
-        write_bucketed(b, "bq_b", "k", n_buckets=8)
-        joined = bucketed_join(spark, "bq_a", "bq_b", "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 10_000
-        # the same join on unbucketed frames DOES shuffle — the baseline
-        plain = a.join(b.withColumnRenamed("vb", "vb2"), on="k")
-        plain_plan = plain._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plain_plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bq_a")
-        spark.sql("DROP TABLE IF EXISTS bq_b")
-
-
 def test_connector_dim_join_broadcasts_from_stats(spark):
     """The c11 catalog shape: a parquet fact joined to a connector dim.
     Python-DS scans expose no stats to Catalyst, so only the

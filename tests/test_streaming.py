@@ -5,6 +5,10 @@ sessions. Uses availableNow triggers so tests are bounded."""
 import pytest
 from pyspark.sql import functions as F
 
+from datafusion_table_providers_spark.sources.backends import (
+    DuckDBBackend,
+    SQLiteBackend,
+)
 from datafusion_table_providers_spark.streaming.events import (
     event_stream,
     run_available_now,
@@ -61,16 +65,17 @@ def test_stateful_sessionizer_runs(spark):
         assert r["n_events"] >= 1
 
 
-def test_stream_to_backend_sink_idempotent(spark, tmp_path):
-    """Stream → DuckDB connector sink: row parity with batch, and a restart
+@pytest.mark.parametrize("backend", [DuckDBBackend, SQLiteBackend],
+                         ids=lambda cls: cls.__name__)
+def test_stream_to_backend_sink_idempotent(spark, tmp_path, backend):
+    """Stream → connector sink: row parity with batch, and a restart
     from the same checkpoint must not duplicate rows (commit-log dedup)."""
-    from datafusion_table_providers_spark.sources.backends import DuckDBBackend
     from datafusion_table_providers_spark.streaming.events import (
         event_stream,
         stream_to_backend,
     )
 
-    be = DuckDBBackend(str(tmp_path / "sink.duckdb"))
+    be = backend(str(tmp_path / "sink.db"))
     ckpt = str(tmp_path / "ckpt")
 
     q = stream_to_backend(event_stream(spark, SF), be, "events_sink", ckpt)

@@ -218,71 +218,6 @@ def test_clustered_write_enables_file_pruning(spark, tmp_path):
     assert got == want
 
 
-def test_zordered_write_bounds_both_dimensions(spark, tmp_path):
-    """Z-ordered layout must give each file a bounded range in BOTH
-    cluster columns, where single-key clustering leaves the second column
-    spanning (nearly) the full range in every file."""
-    import os as _os
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from datafusion_table_providers_spark.write.output import (
-        write_clustered,
-        write_zordered,
-    )
-
-    # two independent uniform dims on a 256x256 grid
-    df = (
-        spark.range(64 * 1024)
-        .select(
-            (F.col("id") % 256).alias("x"),
-            (F.abs(F.xxhash64("id")) % 256).alias("y"),
-        )
-    )
-    zpath = str(tmp_path / "zorder")
-    write_zordered(df, zpath, ["x", "y"], num_files=16, bits=8)
-    cpath = str(tmp_path / "clustered")
-    write_clustered(df, cpath, ["x"], num_files=16)
-
-    def spans(root, col_idx):
-        out = []
-        for f in _os.listdir(root):
-            if not f.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(_os.path.join(root, f)).metadata
-            los, his = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(col_idx).statistics
-                los.append(st.min)
-                his.append(st.max)
-            out.append(max(his) - min(los))
-        return out
-
-    # zorder: files are compact in BOTH dimensions (a file straddling a
-    # z-curve prefix boundary may span wide — assert the typical case,
-    # not the worst file)
-    zx, zy = spans(zpath, 0), spans(zpath, 1)
-    assert sorted(zx)[len(zx) // 2] <= 128, zx
-    assert sorted(zy)[len(zy) // 2] <= 128, zy
-    assert sum(zx) / len(zx) < 160 and sum(zy) / len(zy) < 160, (zx, zy)
-    # x-clustering: x bounded, y unconstrained (full ~255 span per file)
-    cy = spans(cpath, 1)
-    assert min(cy) > 200, cy
-    # layout never changes results
-    assert (
-        spark.read.parquet(zpath).filter("x < 32 AND y < 32").count()
-        == df.filter("x < 32 AND y < 32").count()
-    )
-
-
-def test_zorder_key_refuses_overflow(spark):
-    from datafusion_table_providers_spark.write.output import zorder_key
-
-    with pytest.raises(ValueError, match="63"):
-        zorder_key(["a", "b", "c", "d"], bits=16)  # 64 bits > 63
-
-
 def test_budget_repeat_materializes_quota(spark):
     from datafusion_table_providers_spark.llm.curation import (
         d32_mixture_weights,

@@ -42,7 +42,9 @@ def test_constraint_window_check_direct(tmp_duckdb):
     tmp_duckdb.execute(
         "CREATE TABLE s AS SELECT * FROM (VALUES (1, 'a'), (2, 'b')) v(id, v)"
     )
-    assert validate_unique(writer._fetchone(tmp_duckdb), '"s"', ["id"]) == 2
+    with tmp_duckdb.transaction() as con:
+        assert validate_unique(lambda sql: con.execute(sql).fetchone(), '"s"',
+                               ["id"]) == 2
 
 
 @pytest.mark.parametrize(
@@ -162,6 +164,49 @@ def test_rejected_batch_leaves_existing_rows(spark, tmp_path, transport):
     with pytest.raises(ConstraintViolation, match="duplicate key {'id': 3}"):
         sink.write(bad, "t", primary_keys=["id"])
     assert sink.count("t") == 2 and sink.relations() == before
+
+
+@pytest.mark.parametrize("transport", TRANSPORTS)
+@pytest.mark.parametrize("mode", ["append", "overwrite"])
+def test_failed_ingest_lands_nothing(spark, tmp_path, transport, mode):
+    """An ingest the sink rejects after the key check rolls back the whole
+    commit: an append into a new table creates no table, and an overwrite
+    of an existing one keeps its rows. Every relation is as it was."""
+    sink = _Sink(transport, tmp_path)
+    if mode == "overwrite":
+        sink.write(spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA), "t",
+                   primary_keys=["id"])
+    before = sink.relations()
+    rows = (sink.backend.query_arrow('SELECT * FROM "t" ORDER BY id').to_pylist()
+            if mode == "overwrite" else None)
+    df = spark.createDataFrame([(2, "B"), (3, "c")], SCHEMA)
+    # ``v`` has no unique index, so the sink rejects the conflict target
+    with pytest.raises(Exception, match="(?i)conflict"):
+        sink.write(df, "t", mode=mode, primary_keys=["id"],
+                   on_conflict=OnConflict.do_nothing(["v"]))
+    assert sink.relations() == before
+    if mode == "overwrite":
+        assert sink.backend.query_arrow(
+            'SELECT * FROM "t" ORDER BY id').to_pylist() == rows
+
+
+@pytest.mark.parametrize("transport", TRANSPORTS)
+def test_overwrite_keeps_constraints(spark, tmp_path, transport):
+    """An overwrite whose rows share keys with the old ones keeps the
+    target's primary key and NOT NULL column."""
+    schema = T.StructType([T.StructField("id", T.LongType(), False),
+                           T.StructField("v", T.StringType(), False)])
+    sink = _Sink(transport, tmp_path)
+    sink.write(spark.createDataFrame([(1, "a"), (2, "b")], schema), "t",
+               primary_keys=["id"])
+    sink.write(spark.createDataFrame([(2, "B"), (3, "c")], schema), "t",
+               mode="overwrite", primary_keys=["id"])
+    got = sink.backend.query_arrow('SELECT id, v FROM "t" ORDER BY id')
+    assert [tuple(r.values()) for r in got.to_pylist()] == [(2, "B"), (3, "c")]
+    for bad in ("(3, 'x')", "(4, NULL)"):
+        with pytest.raises(Exception, match="(?i)constraint"):
+            sink.backend.execute(f'INSERT INTO "t" VALUES {bad}')
+    assert sink.count("t") == 2
 
 
 def test_sqlite_loop_insert_is_atomic(spark, tmp_path):
@@ -380,23 +425,6 @@ def test_distributed_insert_foreachpartition(spark, tmp_path):
     con.close()
 
 
-def test_distributed_insert_failed_ingest_creates_no_table(spark, tmp_path):
-    """The key check, the target's CREATE and the ingest commit together: an
-    ``INSERT … SELECT`` the sink rejects after the check leaves no table."""
-    path = str(tmp_path / "fail.db")
-    df = spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA)
-    # ``v`` has no unique index, so SQLite rejects the conflict target
-    with pytest.raises(sqlite3.OperationalError, match="ON CONFLICT"):
-        writer.distributed_insert(
-            df, "sink", "sqlite3", connect_args=[path], dialect_name="sqlite",
-            create=True, primary_keys=["id"],
-            on_conflict=OnConflict.do_nothing(["v"]),
-        )
-    con = sqlite3.connect(path)
-    assert con.execute("SELECT name FROM sqlite_master").fetchall() == []
-    con.close()
-
-
 def test_distributed_insert_validates_constraints(spark, tmp_path):
     import pytest as _pytest
 
@@ -499,34 +527,3 @@ def test_sqlite_staged_overwrite_and_memory_fallback(spark, tmp_path):
     )
     writer.insert_into(m, "t", wide)
     assert m.query_arrow('SELECT COUNT(*) AS n FROM "t"')[0][0].as_py() == 200
-
-
-def test_write_training_shards_bounds_and_layout(spark, tmp_path):
-    """Output shards respect maxRecordsPerFile and the hive partition
-    layout; no shard exceeds the row bound and all rows round-trip."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    from datafusion_table_providers_spark.write.output import (
-        write_training_shards,
-    )
-
-    df = spark.range(10_000).selectExpr(
-        "id AS doc_id", "CAST(id % 3 AS STRING) AS source", "id * 2 AS v"
-    )
-    out = str(tmp_path / "shards")
-    write_training_shards(
-        df, out, shard_rows=500, partition_by=["source"], target_shards=4
-    )
-    parts = sorted(os.listdir(out))
-    assert [p for p in parts if p.startswith("source=")] == [
-        "source=0", "source=1", "source=2"
-    ]
-    files = glob.glob(f"{out}/source=*/*.parquet")
-    assert files
-    assert max(pq.read_metadata(f).num_rows for f in files) <= 500
-    back = spark.read.parquet(out)
-    assert back.count() == 10_000
-    assert back.groupBy("source").count().count() == 3
