@@ -287,13 +287,8 @@ class Engine:
             materialize_remote,
         )
 
-        handles = self._referenced(query, tables)
-        backends = {h.backend for h in handles.values()}
-        contexts = {
-            h.backend.compute_context() for h in handles.values() if h.backend
-        }
-        if handles and None not in backends and len(contexts) == 1:
-            backend = next(iter(backends))
+        handles, _, backend = self._route(query, tables)
+        if backend is not None:
             pushed = self._with_cte_prelude(query, handles)
             return materialize_remote(
                 self.spark,
@@ -312,14 +307,26 @@ class Engine:
         self, query: str, tables: Optional[Sequence[str]] = None
     ) -> str:
         """Report which execution path ``sql`` would take (for tests/docs)."""
+        _, contexts, backend = self._route(query, tables)
+        if backend is not None:
+            return f"federated[{next(iter(contexts))}]"
+        return f"spark[{', '.join(sorted(contexts)) or 'no-tables'}]"
+
+    def _route(self, query: str, tables: Optional[Sequence[str]] = None):
+        """The one routing decision of ``sql`` and ``explain_federation``:
+        ``(handles, contexts, backend)`` — the referenced tables, their
+        compute contexts ("spark" for a Spark-registered table), and the
+        backend that runs the whole query when every table lives in one
+        remote context, else None (Spark runs it)."""
         handles = self._referenced(query, tables)
         contexts = {
             h.backend.compute_context() if h.backend else "spark"
             for h in handles.values()
         }
+        backend = None
         if handles and "spark" not in contexts and len(contexts) == 1:
-            return f"federated[{next(iter(contexts))}]"
-        return f"spark[{', '.join(sorted(contexts)) or 'no-tables'}]"
+            backend = next(iter(handles.values())).backend
+        return handles, contexts, backend
 
     def _referenced(
         self, query: str, tables: Optional[Sequence[str]] = None

@@ -37,6 +37,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from datafusion_table_providers_spark.core.case import QueryCase
+from datafusion_table_providers_spark.llm.text import _word_windows
 from datafusion_table_providers_spark.operators.relational import _r, _rsql, _t
 
 # --- d13: decontamination vs a held-out eval split ------------------------
@@ -47,13 +48,6 @@ DECON_N = 4  # tokens per n-gram (4-grams: strict enough to be rare, loose
 
 
 def d13_decontaminate(spark, sf_dir):
-    # 4-grams via the shared posexplode+lead builder (dedup._shingles_df):
-    # the old transform(sequence, i -> ...element_at(split(text))) form
-    # evaluated an *interpreted* higher-order lambda per gram, re-deriving
-    # split(text) per element — the same §4 interpreted→codegen rewrite
-    # applied to d02/d10/d19/d25/d31 in round 21 (measured 55.5s → see
-    # OPTIMIZATION_r22.md at the synthetic sf1). Gram set identical: the
-    # null-last-successor filter reproduces sequence(1, n - DECON_N + 1).
     from datafusion_table_providers_spark.llm.dedup import _shingles_df
 
     grams = _shingles_df(
@@ -276,24 +270,10 @@ PARA_W = 8  # words per fragment window
 
 
 def d25_paragraph_dedup(spark, sf_dir):
-    # 8-token windows via posexplode + lead() (see dedup._shingles_df for
-    # why the transform/slice(split(text)) form — interpreted, re-splitting
-    # per element — is avoided); trailing tokens without a full window are
-    # dropped by the null last-successor filter, matching sequence(1, n-7).
-    d = _t(spark, sf_dir, "documents")
-    e = d.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w")
-    )
-    lw = Window.partitionBy("doc_id").orderBy("pos")
-    succ = [F.lead("w", j).over(lw) for j in range(1, PARA_W)]
-    paras = (
-        e.select(
-            "doc_id",
-            F.concat_ws(" ", F.col("w"), *succ).alias("p"),
-            succ[-1].alias("_last"),
-        )
-        .filter(F.col("_last").isNotNull())
-        .select("doc_id", "p")
+    # trailing tokens without a full window are dropped, matching
+    # sequence(1, n-7)
+    paras = _word_windows(_t(spark, sf_dir, "documents"), PARA_W).select(
+        "doc_id", F.col("s").alias("p")
     )
     return (
         paras.groupBy(F.md5("p").alias("para_hash"))
@@ -369,28 +349,19 @@ CHUNK_W = 2
 
 
 def d31_intradoc_dedup(spark, sf_dir):
-    # Disjoint 2-token chunks via posexplode + lead() (see _shingles_df —
-    # the old transform/slice(split(text)) form re-split the text per chunk,
-    # interpreted): chunk i starts at token pos 2i, its second token is
-    # lead(w, 1); a trailing odd token yields a 1-token chunk exactly as
-    # slice() did (concat_ws skips the null successor). lead is computed
-    # over ALL positions, THEN even positions are kept.
-    d = _t(spark, sf_dir, "documents")
-    e = d.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w")
-    )
-    lw = Window.partitionBy("doc_id").orderBy("pos")
+    # chunk i starts at token pos 2i and takes its successor; a trailing odd
+    # token yields a 1-token chunk exactly as slice() did (the short window
+    # is kept). Windows are built over ALL positions, THEN even positions
+    # are kept.
     chunks = (
-        e.select(
-            "doc_id",
-            "pos",
-            F.concat_ws(" ", F.col("w"), F.lead("w", 1).over(lw)).alias(
-                "ctext"
-            ),
+        _word_windows(
+            _t(spark, sf_dir, "documents"), CHUNK_W, pos=True, full=False
         )
         .filter(F.col("pos") % CHUNK_W == 0)
         .select(
-            "doc_id", (F.col("pos") / CHUNK_W).cast("int").alias("cidx"), "ctext"
+            "doc_id",
+            (F.col("pos") / CHUNK_W).cast("int").alias("cidx"),
+            F.col("s").alias("ctext"),
         )
     )
     k = chunks.withColumn(
@@ -613,6 +584,7 @@ def d36_budget_repeat(spark, sf_dir):
 def _d36_sql() -> str:
     from datafusion_table_providers_spark.llm.dedup import _hex8_sql
 
+
     case = _extra_copy_case_sql(
         _hex8_sql("m", 1), "mix.n_docs", "mix.quota_docs % mix.n_docs"
     )
@@ -762,6 +734,7 @@ def d39_training_order(spark, sf_dir):
 
 def _d39_sql() -> str:
     from datafusion_table_providers_spark.llm.dedup import _hex8_sql
+
 
     # reuse the d36 SQL as the repeats source; DuckDB explodes via
     # generate_series lateral join

@@ -21,6 +21,10 @@ Beyond-reference additions. Scale-first shapes (the 100 TB designs):
 Everything is md5-based so Spark and the DuckDB oracle compute identical
 hashes; min() over fixed-width lowercase-hex strings == numeric min.
 
+Shingles are word windows from the package's one builder,
+``text._word_windows`` (posexplode + ``lead()``; its docstring says why),
+which d10, d19, d25 and d31 share.
+
 Cross-cutting discipline (r22): wherever a verdict is a pure function of
 the underlying VALUES — document text (d02b/d04/d12/d26/d35), normalized prefix
 (d22), simhash value (d03b) — the pipeline runs once per distinct value
@@ -37,6 +41,7 @@ from pyspark.sql import functions as F
 
 from datafusion_table_providers_spark.core.case import QueryCase, utc
 from datafusion_table_providers_spark.core.memo import memo_artifact
+from datafusion_table_providers_spark.llm.text import _word_windows
 from datafusion_table_providers_spark.operators.relational import _r, _rsql, _scan
 from datafusion_table_providers_spark.session import bounded_broadcast
 
@@ -68,50 +73,27 @@ FROM documents GROUP BY md5(text)
 def _shingles_df(spark, sf_dir, distinct: bool = True, width: int = SHINGLE_W):
     """Word ``width``-gram shingles per doc of the corpus (default: the
     3-gram dedup shingles; d13/p02 reuse the same builder for their 4-gram
-    decontamination pass). See :func:`_shingles_of` for the shape."""
+    decontamination pass)."""
     return _shingles_of(_documents(spark, sf_dir), distinct, width)
 
 
 def _shingles_of(docs, distinct: bool = True, width: int = SHINGLE_W):
-    """Word ``width``-gram shingles per doc of an arbitrary (doc_id, text)
-    table — the corpus itself, or the text-group representatives
-    (:func:`_rep_docs`) when the consumer's result is a pure text function.
+    """Word ``width``-gram shingles ``(doc_id, s)`` per doc of an arbitrary
+    (doc_id, text) table — the corpus itself, or the text-group
+    representatives (:func:`_rep_docs`) when the consumer's result is a
+    pure text function: the full windows of :func:`text._word_windows`.
 
     ``distinct=False`` skips the dedup shuffle — correct wherever the
     consumer is duplicate-insensitive (MinHash ``min`` aggregates), which at
     100 TB removes a full shuffle of every shingle string. Jaccard
-    set-arithmetic consumers must keep ``distinct=True``.
-
-    Shape: posexplode the token array once, then stitch each token to its
-    successors with ``lead()`` over (doc_id, pos). The obvious
-    ``explode(transform(sequence(...), i -> concat_ws(element_at(toks ...))))``
-    form re-evaluates ``split(text)`` inside an *interpreted* higher-order
-    lambda per element — measured 1.6-2.5× slower per stage with 4× tail
-    variance at sf0.1. The window adds no exchange: it reuses the doc_id
-    hash partitioning established below, so both forms are one-shuffle."""
-    from pyspark.sql import Window
-
+    set-arithmetic consumers must keep ``distinct=True``."""
     spark = docs.sparkSession
     # Small corpora arrive as one file split; the shingle explode + hashing
     # is the expensive part, so spread the docs across the cluster first
     # (at real scale the scan already has many splits and this coalesces
-    # into AQE's hands).
+    # into AQE's hands). The window below reuses this doc_id partitioning.
     d = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    e = d.select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w"))
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    succ = [F.lead("w", j).over(win) for j in range(1, width)]
-    out = (
-        e.select(
-            "doc_id",
-            F.concat_ws(" ", F.col("w"), *succ).alias("s"),
-            succ[-1].alias("_last"),
-        )
-        # a null last successor marks the trailing (width-1) positions that
-        # have no full shingle — exactly the rows sequence(1, n-width+1)
-        # never emitted
-        .filter(F.col("_last").isNotNull())
-        .select("doc_id", "s")
-    )
+    out = _word_windows(d, width)
     return out.distinct() if distinct else out
 
 
@@ -607,6 +589,10 @@ def d03b_simhash_pairs(spark, sf_dir):
     # filter BEFORE fanning back out (only surviving group pairs pay the
     # expansion joins), then two gid-equi-joins restore doc pairs.
     # Intra-group pairs are hamming-0 by identity and always survive.
+    # Computing the simhashes on text-group reps and fanning out through
+    # _lsh_candidates/_fan_out returned the same rows but ran slower at
+    # sf0.01 (median 1.71 → 2.08 s with the rep simhashes checkpointed,
+    # 1.45 → 5.84 s without; local[4]), so d03b keeps this grouping.
     m = sig.withColumn(
         "gid", F.min("doc_id").over(Window.partitionBy("simhash"))
     )

@@ -114,8 +114,6 @@ def p02_full_curation(spark, sf_dir):
 
     # decontamination: exclude the eval split itself, then drop any training
     # doc sharing a DECON_N-gram with it, as in d13.
-    # Grams come from the shared posexplode+lead builder — the interpreted
-    # transform(sequence, ...) HOF form was the §4 bottleneck (see d13).
     from datafusion_table_providers_spark.llm.dedup import _shingles_df
 
     grams_all = _shingles_df(

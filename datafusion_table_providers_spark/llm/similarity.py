@@ -30,7 +30,9 @@ matmul) used by the benchmark — same results, ~10× faster per core.
 from __future__ import annotations
 
 import hashlib
+from functools import reduce
 
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from datafusion_table_providers_spark.core.case import QueryCase
@@ -71,47 +73,56 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
+def _nonzero_vectors(spark, sf_dir):
+    """(vec_id, v, nrm): every embedding as array<double> with its norm,
+    computed ONCE per vector in the scan projection, not per pair — at |Q|
+    queries that removes ≈ 2/3 of the array traversals from the O(n·|Q|)
+    scoring loop, bitwise-identical to the per-pair form (same expression
+    over the same array). Zero vectors are dropped (see module doc)."""
+    return (
+        _t(spark, sf_dir, "embeddings")
+        .select("vec_id", _dvec("embedding").alias("v"))
+        .select("vec_id", "v", _norm(F.col("v")).alias("nrm"))
+        .filter(F.col("nrm") > 0)
+    )
+
+
+def _top_k(scored, k: int, by):
+    """``scored`` (qid, cid, ...) cut to each query's ``k`` best rows by
+    ``by``, ties broken on the lower cid; ``rnk`` is the 1-based rank."""
+    w = Window.partitionBy("qid").orderBy(by, F.asc("cid"))
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(
+        F.col("rnk") <= k
+    )
+
+
+def _cosine_top_k(cand):
+    """(qid, cid, rnk, cosine): the TOP_K candidates per query by exact
+    cosine. ``cand`` pairs a query (qid, qv, qn) with a candidate
+    (vec_id, v, nrm), both from :func:`_nonzero_vectors`."""
+    scored = cand.select(
+        "qid",
+        F.col("vec_id").alias("cid"),
+        _r(
+            _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 9
+        ).alias("cos9"),
+    )
+    return _top_k(scored, TOP_K, F.desc("cos9")).select(
+        "qid", "cid", "rnk", _r(F.col("cos9"), 6).alias("cosine")
+    )
+
+
 # --- d05: brute-force cosine top-k ---------------------------------------
 def d05_knn_bruteforce(spark, sf_dir):
-    # Norms are computed ONCE per vector in the scan projection, not per
-    # pair — at |Q| queries that removes 2|Q|/(|Q|+... ) ≈ 2/3 of the array
-    # traversals from the O(n·|Q|) scoring loop. Bitwise-identical to the
-    # per-pair form (same expression over the same array).
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", _dvec("embedding").alias("v")
-    )
-    e = e.select("vec_id", "v", _norm(F.col("v")).alias("nrm")).filter(
-        F.col("nrm") > 0  # zero vectors: cosine undefined, ANSI 0/0 crash
-    )
+    e = _nonzero_vectors(spark, sf_dir)
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"),
         F.col("v").alias("qv"),
         F.col("nrm").alias("qn"),
     )
-    pairs = e.crossJoin(bounded_broadcast(q, N_QUERIES)).filter(
-        F.col("vec_id") != F.col("qid")
-    )
-    scored = pairs.select(
-        "qid",
-        F.col("vec_id").alias("cid"),
-        _r(
-            _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")),
-            9,
-        ).alias("cos9"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.desc("cos9"), F.asc("cid"))
-    return (
-        scored.select(
-            "qid", "cid", "cos9", F.row_number().over(w).alias("rnk")
-        )
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "qid",
-            "cid",
-            F.col("rnk").cast("int").alias("rnk"),
-            _r(F.col("cos9"), 6).alias("cosine"),
+    return _cosine_top_k(
+        e.crossJoin(bounded_broadcast(q, N_QUERIES)).filter(
+            F.col("vec_id") != F.col("qid")
         )
     )
 
@@ -143,48 +154,33 @@ FROM ranked WHERE rnk <= {TOP_K}
 
 
 # --- d06: LSH-bucketed ANN ------------------------------------------------
-def _bucket_col(n_planes: int = N_PLANES):
-    """Hyperplane-sign bucket id (n_planes bits) as a Column expression."""
-    return _bucket_col_from(plane_weights()[:n_planes])
+def _bucket_col(planes) -> "F.Column":
+    """Hyperplane-sign bucket id of ``v`` (one bit per plane in ``planes``)
+    as a Column expression."""
+    bucket = None
+    for p, w in enumerate(planes):
+        warr = F.array(*[F.lit(x) for x in w])
+        dot9 = _r(_dot(F.col("v"), warr), 9)
+        bit = F.when(dot9 > 0, F.lit(1 << p)).otherwise(F.lit(0))
+        bucket = bit if bucket is None else bucket + bit
+    return bucket.cast("int")
 
 
 def d06_lsh_ann(spark, sf_dir):
-    e = (
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id", _dvec("embedding").alias("v"))
-        .filter(_dot(F.col("v"), F.col("v")) > 0)  # no zero-norm cosines
-        .select("vec_id", "v", _bucket_col().alias("bucket"))
+    e = _nonzero_vectors(spark, sf_dir).withColumn(
+        "bucket", _bucket_col(plane_weights())
     )
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"),
         F.col("v").alias("qv"),
+        F.col("nrm").alias("qn"),
         F.col("bucket").alias("qbucket"),
     )
-    cand = e.join(
-        bounded_broadcast(q, N_QUERIES),
-        (F.col("bucket") == F.col("qbucket"))
-        & (F.col("vec_id") != F.col("qid")),
-    )
-    scored = cand.select(
-        "qid",
-        F.col("vec_id").alias("cid"),
-        _r(
-            _dot(F.col("qv"), F.col("v"))
-            / (_norm(F.col("qv")) * _norm(F.col("v"))),
-            9,
-        ).alias("cos9"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.desc("cos9"), F.asc("cid"))
-    return (
-        scored.select("qid", "cid", "cos9", F.row_number().over(w).alias("rnk"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "qid",
-            "cid",
-            F.col("rnk").cast("int").alias("rnk"),
-            _r(F.col("cos9"), 6).alias("cosine"),
+    return _cosine_top_k(
+        e.join(
+            bounded_broadcast(q, N_QUERIES),
+            (F.col("bucket") == F.col("qbucket"))
+            & (F.col("vec_id") != F.col("qid")),
         )
     )
 
@@ -262,12 +258,7 @@ def pandas_knn_topk(spark, sf_dir, n_queries: int = 50, k: int = 10):
     scored = e.select("vec_id", "embedding").mapInPandas(
         score, "qid long, cid long, cosine double"
     ).filter(F.col("qid") != F.col("cid"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
-    return scored.select(
-        "qid", "cid", "cosine", F.row_number().over(w).alias("rnk")
-    ).filter(F.col("rnk") <= k)
+    return _top_k(scored, k, F.desc("cosine"))
 
 
 # --- d11: embedding-cosine near-duplicate pairs ---------------------------
@@ -286,39 +277,45 @@ NEARDUP_TAU = 0.35
 NEARDUP_BITS = 4
 
 
-def d11_embedding_neardup(spark, sf_dir):
-    e = (
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id", _dvec("embedding").alias("v"))
-        .select(
-            "vec_id",
-            "v",
-            _bucket_col(NEARDUP_BITS).alias("bucket"),
-            _norm(F.col("v")).alias("nrm"),
+def _neardup_pairs(spark, sf_dir, plane_sets):
+    """(a_id, b_id, cosine) for a_id < b_id at cosine ≥ NEARDUP_TAU, among
+    the pairs that share a bucket of at least one hyperplane subset in
+    ``plane_sets``. Each subset is its own equi-join (an OR in one join
+    would degenerate to a nested loop); several are unioned and
+    deduplicated on the pair key."""
+    keys = [f"b{i}" for i in range(len(plane_sets))]
+    e = _nonzero_vectors(spark, sf_dir).select(
+        "vec_id",
+        "v",
+        "nrm",
+        *[_bucket_col(p).alias(k) for p, k in zip(plane_sets, keys)],
+    )
+
+    def side(x):
+        return e.select(
+            F.col("vec_id").alias(f"{x}_id"),
+            F.col("v").alias(f"{x}v"),
+            F.col("nrm").alias(f"{x}n"),
+            *[F.col(k).alias(x + k) for k in keys],
         )
-        .filter(F.col("nrm") > 0)  # no zero-norm cosines
-    )
-    a = e.select(
-        F.col("vec_id").alias("a_id"),
-        F.col("v").alias("av"),
-        F.col("nrm").alias("an"),
-        F.col("bucket").alias("ab"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("v").alias("bv"),
-        F.col("nrm").alias("bn"),
-        F.col("bucket").alias("bb"),
-    )
-    pairs = a.join(
-        b, (F.col("ab") == F.col("bb")) & (F.col("a_id") < F.col("b_id"))
-    )
+
+    a, b = side("a"), side("b")
+    lo_hi = F.col("a_id") < F.col("b_id")
+    cands = [a.join(b, (F.col("a" + k) == F.col("b" + k)) & lo_hi) for k in keys]
+    pairs = cands[0]
+    if len(cands) > 1:
+        pairs = reduce(DataFrame.unionByName, cands)
+        pairs = pairs.dropDuplicates(["a_id", "b_id"])
     cos9 = _r(_dot(F.col("av"), F.col("bv")) / (F.col("an") * F.col("bn")), 9)
     return (
         pairs.select("a_id", "b_id", cos9.alias("cos9"))
         .filter(F.col("cos9") >= NEARDUP_TAU)
         .select("a_id", "b_id", _r(F.col("cos9"), 6).alias("cosine"))
     )
+
+
+def d11_embedding_neardup(spark, sf_dir):
+    return _neardup_pairs(spark, sf_dir, [plane_weights()[:NEARDUP_BITS]])
 
 
 # d11b: multi-probe (band-OR) variant — two independent 4-bit bucket
@@ -326,50 +323,12 @@ def d11_embedding_neardup(spark, sf_dir):
 # collides in EITHER table. The recall knob at scale: more OR-tables →
 # exponentially fewer missed neighbors, each table still a linear equi-join
 # (MinHash band-OR for the embedding domain).
-def _bucket_col_from(planes) -> "F.Column":
-    bucket = None
-    for p, w in enumerate(planes):
-        warr = F.array(*[F.lit(x) for x in w])
-        dot9 = _r(_dot(F.col("v"), warr), 9)
-        bit = F.when(dot9 > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return bucket.cast("int")
-
-
 def d11b_neardup_multiprobe(spark, sf_dir):
     planes = plane_weights()
-    e = (
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id", _dvec("embedding").alias("v"))
-        .select(
-            "vec_id",
-            "v",
-            _bucket_col_from(planes[:NEARDUP_BITS]).alias("b0"),
-            _bucket_col_from(planes[NEARDUP_BITS : 2 * NEARDUP_BITS]).alias("b1"),
-            _norm(F.col("v")).alias("nrm"),
-        )
-        .filter(F.col("nrm") > 0)  # no zero-norm cosines
-    )
-    a = e.select(
-        F.col("vec_id").alias("a_id"), F.col("v").alias("av"),
-        F.col("nrm").alias("an"), F.col("b0").alias("ab0"),
-        F.col("b1").alias("ab1"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("b_id"), F.col("v").alias("bv"),
-        F.col("nrm").alias("bn"), F.col("b0").alias("bb0"),
-        F.col("b1").alias("bb1"),
-    )
-    # two equi-joins unioned (each stays a hash join; OR-in-one-join would
-    # degenerate to a nested loop), then distinct on the pair key
-    cand0 = a.join(b, (F.col("ab0") == F.col("bb0")) & (F.col("a_id") < F.col("b_id")))
-    cand1 = a.join(b, (F.col("ab1") == F.col("bb1")) & (F.col("a_id") < F.col("b_id")))
-    pairs = cand0.unionByName(cand1).dropDuplicates(["a_id", "b_id"])
-    cos9 = _r(_dot(F.col("av"), F.col("bv")) / (F.col("an") * F.col("bn")), 9)
-    return (
-        pairs.select("a_id", "b_id", cos9.alias("cos9"))
-        .filter(F.col("cos9") >= NEARDUP_TAU)
-        .select("a_id", "b_id", _r(F.col("cos9"), 6).alias("cosine"))
+    return _neardup_pairs(
+        spark,
+        sf_dir,
+        [planes[:NEARDUP_BITS], planes[NEARDUP_BITS : 2 * NEARDUP_BITS]],
     )
 
 
@@ -526,8 +485,9 @@ N_CELLS = 8
 NPROBE = 2
 
 
-def _cell_rank_df(spark, sf_dir, points):
-    """(vec_id, cell): nearest-centroid assignment, deterministic ties.
+def _cell_rank_df(points):
+    """``points`` plus (cent_id, crnk): every centroid ranked by nearness,
+    deterministic ties.
 
     Centroids derive from ``points`` itself — NOT from a fresh scan — so a
     caller-side filter (d06b's zero-norm exclusion) shapes the centroid set
@@ -536,60 +496,38 @@ def _cell_rank_df(spark, sf_dir, points):
     cents = points.filter(F.col("vec_id") < N_CELLS).select(
         F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
     )
-    from pyspark.sql import Window
-
     scored = points.crossJoin(bounded_broadcast(cents, N_CELLS)).select(
-        "vec_id",
-        "v",
+        *points.columns,
         "cent_id",
         _r(_dot(F.col("v"), F.col("cv")), 9).alias("sim9"),
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("sim9"), F.asc("cent_id"))
     return scored.select(
-        "vec_id", "v", "cent_id", F.row_number().over(w).alias("crnk")
+        *points.columns, "cent_id", F.row_number().over(w).alias("crnk")
     )
 
 
 def d06b_ivf_ann(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", _dvec("embedding").alias("v")
-    ).filter(_dot(F.col("v"), F.col("v")) > 0)  # no zero-norm cosines
-    ranked = _cell_rank_df(spark, sf_dir, e).localCheckpoint(eager=True)
+    ranked = _cell_rank_df(_nonzero_vectors(spark, sf_dir)).localCheckpoint(
+        eager=True
+    )
     cells = ranked.filter(F.col("crnk") == 1).select(
-        "vec_id", "v", F.col("cent_id").alias("cell")
+        "vec_id", "v", "nrm", F.col("cent_id").alias("cell")
     )
-    qprobe = (
-        ranked.filter((F.col("vec_id") < N_QUERIES) & (F.col("crnk") <= NPROBE))
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("v").alias("qv"),
-            F.col("cent_id").alias("qcell"),
-        )
+    qprobe = ranked.filter(
+        (F.col("vec_id") < N_QUERIES) & (F.col("crnk") <= NPROBE)
+    ).select(
+        F.col("vec_id").alias("qid"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qn"),
+        F.col("cent_id").alias("qcell"),
     )
-    cand = cells.join(
-        bounded_broadcast(qprobe, N_QUERIES * NPROBE),
-        (F.col("cell") == F.col("qcell")) & (F.col("vec_id") != F.col("qid")),
-    )
-    scored = cand.select(
-        "qid",
-        F.col("vec_id").alias("cid"),
-        _r(
-            _dot(F.col("qv"), F.col("v"))
-            / (_norm(F.col("qv")) * _norm(F.col("v"))),
-            9,
-        ).alias("cos9"),
-    ).distinct()
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.desc("cos9"), F.asc("cid"))
-    return (
-        scored.select("qid", "cid", "cos9", F.row_number().over(w).alias("rnk"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "qid",
-            "cid",
-            F.col("rnk").cast("int").alias("rnk"),
-            _r(F.col("cos9"), 6).alias("cosine"),
+    # a candidate sits in one cell and a query's probed cells are distinct,
+    # so each (query, candidate) pair joins at most once
+    return _cosine_top_k(
+        cells.join(
+            bounded_broadcast(qprobe, N_QUERIES * NPROBE),
+            (F.col("cell") == F.col("qcell")) & (F.col("vec_id") != F.col("qid")),
         )
     )
 
@@ -1089,17 +1027,7 @@ def d18_pq_encode(spark, sf_dir):
 def d18b_pq_adc(spark, sf_dir):
     """Asymmetric-distance top-k: query-vs-codebook distances precomputed
     driver-side (see _adc_scored), candidates scored by code lookup."""
-    scored = _adc_scored(spark, sf_dir)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.asc("adist"), F.asc("cid"))
-    return (
-        scored.select(
-            "qid", "cid", "adist", F.row_number().over(w).alias("rnk")
-        )
-        .filter(F.col("rnk") <= PQ_TOPK)
-        .select("qid", "cid", "adist", F.col("rnk").cast("int").alias("rnk"))
-    )
+    return _top_k(_adc_scored(spark, sf_dir), PQ_TOPK, F.asc("adist"))
 
 
 _PQ_BASE_SQL = f"""
@@ -1230,15 +1158,9 @@ def d33_pq_rerank(spark, sf_dir):
     vecs = _km_quantized(spark, sf_dir)
     # stage 1: ADC shortlist from the driver-precomputed lookup table
     # (shared with d18b — see _adc_scored)
-    scored = _adc_scored(spark, sf_dir)
-    from pyspark.sql import Window
-
-    wa = Window.partitionBy("qid").orderBy(F.asc("adist"), F.asc("cid"))
-    short = (
-        scored.withColumn("arnk", F.row_number().over(wa))
-        .filter(F.col("arnk") <= RR_SHORTLIST)
-        .select("qid", "cid")
-    )
+    short = _top_k(
+        _adc_scored(spark, sf_dir), RR_SHORTLIST, F.asc("adist")
+    ).select("qid", "cid")
     qvec = vecs.filter(F.col("vec_id") < PQ_NQ).select(
         F.col("vec_id").alias("qid"), F.col("iv").alias("qiv")
     )
@@ -1248,12 +1170,7 @@ def d33_pq_rerank(spark, sf_dir):
         .join(bounded_broadcast(qvec, PQ_NQ), "qid")
         .select("qid", "cid", _int_dist(F.col("qiv"), F.col("civ")).alias("edist"))
     )
-    we = Window.partitionBy("qid").orderBy(F.asc("edist"), F.asc("cid"))
-    return (
-        ex.withColumn("rnk", F.row_number().over(we).cast("int"))
-        .filter(F.col("rnk") <= RR_TOPK)
-        .select("qid", "cid", "edist", "rnk")
-    )
+    return _top_k(ex, RR_TOPK, F.asc("edist"))
 
 
 _D33_SQL = f"""

@@ -200,33 +200,71 @@ FROM documents
 """
 
 
+# --- word windows -------------------------------------------------------
+def _word_windows(docs, width: int, pos: bool = False, full: bool = True,
+                  orders: bool = False):
+    """Word windows of a (doc_id, text) table: ``(doc_id, s)``, one row per
+    token, with ``s`` the token and its ``width - 1`` successors joined by
+    ' '. The one builder of every word-window operator (shingles, k-grams,
+    paragraph windows, chunks).
+
+    - ``pos=True`` keeps the token's 0-based position as column ``pos``.
+    - ``full=True`` drops the trailing ``width - 1`` positions that have no
+      full window (a null last successor) — exactly the rows
+      ``sequence(1, n - width + 1)`` emits. ``full=False`` keeps them,
+      with the short window (``concat_ws`` skips the null successors).
+    - ``orders=True`` emits every order ``k`` = 1..``width`` as its own
+      row (column ``k``), each only where its window is full: the n-grams
+      of several orders from one pass.
+
+    Shape: posexplode the token array once, then stitch each token to its
+    successors with ``lead()`` over (doc_id, pos). The obvious
+    ``explode(transform(sequence(...), i -> concat_ws(element_at(toks ...))))``
+    form re-evaluates ``split(text)`` inside an *interpreted* higher-order
+    lambda per element — measured 1.6-2.5× slower per stage with 4× tail
+    variance at sf0.1. The window adds no exchange when the input is
+    already hash-partitioned on doc_id, so both forms are one-shuffle."""
+    e = docs.select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w"))
+    win = Window.partitionBy("doc_id").orderBy("pos")
+    succ = [F.lead("w", j).over(win) for j in range(1, width)]
+    keep = ["doc_id", "pos"] if pos else ["doc_id"]
+    if orders:
+        # window expressions may not appear under a Generate — project the
+        # successors first, then explode the per-order candidates
+        toks = ["w"] + [f"w{j}" for j in range(1, width)]
+        base = e.select(*keep, "w", *[c.alias(t) for c, t in zip(succ, toks[1:])])
+        grams = F.array(*[
+            F.struct(
+                F.lit(k).alias("k"),
+                F.concat_ws(" ", *toks[:k]).alias("s"),
+                F.col(toks[k - 1]).isNotNull().alias("ok"),
+            )
+            for k in range(1, width + 1)
+        ])
+        return (
+            base.select(*keep, F.explode(grams).alias("g"))
+            .filter(F.col("g.ok"))
+            .select(*keep, "g.k", "g.s")
+        )
+    out = e.select(
+        *keep, F.concat_ws(" ", F.col("w"), *succ).alias("s"), succ[-1].alias("_last")
+    )
+    if full:
+        out = out.filter(F.col("_last").isNotNull())
+    return out.select(*keep, "s")
+
+
 # --- d10: document fingerprinting (winnowing over k-gram rolling hashes) --
 WINNOW_K = 4  # tokens per k-gram
 WINNOW_W = 5  # window of consecutive k-gram hashes
 
 
 def d10_fingerprint(spark, sf_dir):
-    # k-grams via posexplode + lead() (same rewrite as dedup._shingles_df:
-    # the transform/element_at higher-order form evaluates interpreted and
-    # re-derives split(text) per element). Token position IS the k-gram
-    # position — the trailing w-1 tokens with no full k-gram are filtered,
-    # leaving pos = 0..n-k contiguous, identical to the old explode index —
-    # and the winnowing min-window below reuses the same (doc_id, pos) sort.
+    # Token position IS the k-gram position (pos = 0..n-k, contiguous), and
+    # the winnowing min-window below reuses the builder's (doc_id, pos) sort.
     d = _t(spark, sf_dir, "documents")
-    e = d.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w")
-    )
-    lw = Window.partitionBy("doc_id").orderBy("pos")
-    succ = [F.lead("w", j).over(lw) for j in range(1, WINNOW_K)]
-    kgrams = (
-        e.select(
-            "doc_id",
-            "pos",
-            F.concat_ws(" ", F.col("w"), *succ).alias("kgram"),
-            succ[-1].alias("_last"),
-        )
-        .filter(F.col("_last").isNotNull())
-        .select("doc_id", "pos", F.substring(F.md5("kgram"), 1, 8).alias("h"))
+    kgrams = _word_windows(d, WINNOW_K, pos=True).select(
+        "doc_id", "pos", F.substring(F.md5("s"), 1, 8).alias("h")
     )
     w = (
         Window.partitionBy("doc_id")
@@ -281,50 +319,10 @@ FROM fps GROUP BY doc_id
 
 
 def d19_repetition(spark, sf_dir):
-    # 1/2/3-grams from ONE posexplode + lead() pass (see d10/_shingles_df
-    # for why the transform/element_at form is avoided): every token emits
-    # its unigram plus — when enough successors exist — its bigram and
-    # trigram, reproducing the old sequence(1, n-k+1) bounds exactly.
-    d = _t(spark, sf_dir, "documents")
-    e = d.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w")
-    )
-    lw = Window.partitionBy("doc_id").orderBy("pos")
-    # window expressions may not appear under a Generate — project the
-    # successors first, then explode the per-token gram candidates
-    base = e.select(
-        "doc_id",
-        "w",
-        F.lead("w", 1).over(lw).alias("w1"),
-        F.lead("w", 2).over(lw).alias("w2"),
-    )
-    ex = (
-        base.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit(1).alias("k"),
-                        F.col("w").alias("g"),
-                        F.lit(True).alias("ok"),
-                    ),
-                    F.struct(
-                        F.lit(2).alias("k"),
-                        F.concat_ws(" ", F.col("w"), F.col("w1")).alias("g"),
-                        F.col("w1").isNotNull().alias("ok"),
-                    ),
-                    F.struct(
-                        F.lit(3).alias("k"),
-                        F.concat_ws(
-                            " ", F.col("w"), F.col("w1"), F.col("w2")
-                        ).alias("g"),
-                        F.col("w2").isNotNull().alias("ok"),
-                    ),
-                )
-            ).alias("kg"),
-        )
-        .filter(F.col("kg.ok"))
-        .select("doc_id", F.col("kg.k").alias("k"), F.col("kg.g").alias("g"))
+    # 1/2/3-grams from ONE posexplode + lead() pass: every token emits its
+    # unigram plus, when enough successors exist, its bigram and trigram.
+    ex = _word_windows(_t(spark, sf_dir, "documents"), 3, orders=True).select(
+        "doc_id", "k", F.col("s").alias("g")
     )
     counts = ex.groupBy("doc_id", "k", "g").agg(F.count("*").alias("c"))
     w = Window.partitionBy("doc_id", "k").orderBy(F.desc("c"), F.asc("g"))

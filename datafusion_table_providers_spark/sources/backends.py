@@ -29,8 +29,6 @@ from datafusion_table_providers_spark.core.expr import (
     Dialect,
 )
 
-_LOCAL = threading.local()
-
 
 @contextmanager
 def _transaction(lock, connect):

@@ -32,7 +32,6 @@ read-only connection and streams Arrow batches without driver involvement.
 from __future__ import annotations
 
 import json
-import os
 from contextlib import closing, nullcontext
 from typing import Iterator, List, Optional
 
@@ -70,8 +69,8 @@ _WORKER_CON_CACHE_MAX = 8
 #: measured 0.89s → 0.73s steady (and 2.7s tail → 0.78s) on the 8-slice
 #: partitioned scan at sf0.1/local[32]. Same discipline as any per-task
 #: native library on a shared executor. Backend ``settings={"threads": ...}``
-#: overrides; so does this env knob for site tuning.
-_TASK_THREADS = os.environ.get("SPARK_GRAFT_DUCKDB_TASK_THREADS", "2")
+#: overrides.
+_TASK_THREADS = "2"
 
 
 def _worker_connect(opts):

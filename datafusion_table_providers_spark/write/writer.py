@@ -230,10 +230,12 @@ def _insert_duckdb(backend, table, df, mode, on_conflict, keys=(), create=False,
     else:
         stage = _arrow_stage(backend, df)
     with stage as (relation, n), backend.transaction() as con:
+        checked, _ = _commit_staged(con.execute, "duckdb", table, df.schema,
+                                    relation, keys, create, mode, on_conflict,
+                                    also)
         if n is None:
-            n = con.execute(f"SELECT COUNT(*) FROM {relation}").fetchone()[0]
-        _commit_staged(con.execute, "duckdb", table, df.schema, relation, keys,
-                       create, mode, on_conflict, also)
+            n = checked if keys else con.execute(
+                f"SELECT COUNT(*) FROM {relation}").fetchone()[0]
     backend.execute(f'ANALYZE "{table}"')
     return n
 
@@ -302,10 +304,14 @@ def _commit_staged(run, dialect_name, table, schema, staging_q, keys, create,
     (IF NOT EXISTS) when asked, empty it for an overwrite, ingest with one
     ``INSERT … SELECT [ON CONFLICT]``, then run the statements in ``also``
     (the stream sink's commit-log marker). ``run(sql)`` executes one
-    statement and returns its cursor; returns the ingest's ``rowcount``."""
+    statement and returns its cursor. Returns ``(checked, ingested)``: the
+    staged row count the key check summed (None without ``keys``) and the
+    ingest's ``rowcount``."""
     q = DIALECTS[dialect_name].quote_ident
+    checked = None
     if keys:
-        validate_unique(lambda sql: run(sql).fetchone(), staging_q, keys, q)
+        checked = validate_unique(lambda sql: run(sql).fetchone(), staging_q,
+                                  keys, q)
     if create:
         run(create_table_ddl(table, schema, dialect_name, primary_keys=tuple(keys),
                              if_not_exists=True))
@@ -317,7 +323,7 @@ def _commit_staged(run, dialect_name, table, schema, staging_q, keys, create,
     ).rowcount
     for sql in also:
         run(sql)
-    return count
+    return checked, count
 
 
 def _empty_target(run, dialect_name, table) -> None:
@@ -477,9 +483,9 @@ def distributed_insert(
                 cur.execute(sql)  # DB-API leaves its return value unspecified
                 return cur
 
-            count = _commit_staged(run, dialect_name, table, df.schema,
-                                   staging_q, primary_keys, create, mode,
-                                   on_conflict)
+            _, count = _commit_staged(run, dialect_name, table, df.schema,
+                                      staging_q, primary_keys, create, mode,
+                                      on_conflict)
             run(f"DROP TABLE {staging_q}")
             con.commit()
         finally:

@@ -184,9 +184,11 @@ def test_pandas_knn_matches_sql_knn(spark):
         (r["qid"], r["cid"])
         for r in d05_knn_bruteforce(spark, SF).collect()
     }
-    np_top = {
-        (r["qid"], r["cid"])
-        for r in pandas_knn_topk(spark, SF, n_queries=5, k=5).collect()
-    }
+    knn = pandas_knn_topk(spark, SF, n_queries=5, k=5)
+    # rnk is row_number's int, as in every other top-k of the package
+    assert knn.schema.simpleString() == (
+        "struct<qid:bigint,cid:bigint,cosine:double,rnk:int>"
+    )
+    np_top = {(r["qid"], r["cid"]) for r in knn.collect()}
     overlap = len(sql_top & np_top) / len(sql_top)
     assert overlap >= 0.9  # allow boundary ties to differ

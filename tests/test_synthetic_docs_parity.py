@@ -265,6 +265,7 @@ def _assert_emb_parity(spark, sf_dir, name):
         "d06_lsh_ann",
         "d06b_ivf_ann",
         "d11_embedding_neardup",
+        "d11b_neardup_multiprobe",
         "d16_embedding_quantize",
         "d17_kmeans_clusters",
         "d18_pq_encode",

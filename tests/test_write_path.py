@@ -4,6 +4,7 @@ DELETE/UPDATE counts, sort/limit pushdown fixture (FIXTURES.md)."""
 import os
 import re
 import sqlite3
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -339,6 +340,41 @@ def test_sort_limit_fixture(spark, tmp_duckdb):
         'SELECT id FROM "sort_limit_test" LIMIT 7'
     ).to_pylist()
     assert len(bare) == 7
+
+
+@pytest.mark.parametrize("keys", [["id"], []])
+def test_spool_insert_reads_spool_once_for_count(spark, tmp_duckdb,
+                                                 monkeypatch, keys):
+    """A spool insert takes its row count from the key check when keys are
+    given, and runs COUNT(*) only without them: either way one statement
+    besides the ingest reads the spool glob."""
+    sqls = []
+    transaction = tmp_duckdb.transaction
+
+    class Recording:
+        def __init__(self, con):
+            self._con = con
+
+        def execute(self, sql, *args):
+            sqls.append(sql)
+            return self._con.execute(sql, *args)
+
+    @contextmanager
+    def recorded():
+        with transaction() as con:
+            yield Recording(con)
+
+    monkeypatch.setattr(tmp_duckdb, "transaction", recorded)
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(50)], SCHEMA)
+    n = writer.insert_into(tmp_duckdb, "t", df.repartition(4),
+                           primary_keys=keys, via="spool")
+    assert n == 50
+    glob_reads = [s for s in sqls if "read_parquet(" in s]
+    ingests = [s for s in glob_reads if s.lstrip().upper().startswith("INSERT")]
+    assert len(ingests) == 1, sqls
+    assert len(glob_reads) == 2, sqls
+    counts = [s for s in glob_reads if s.startswith("SELECT COUNT(*) FROM")]
+    assert len(counts) == (0 if keys else 1), sqls
 
 
 def test_spool_insert_matches_arrow_path(spark, tmp_duckdb):
